@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,18 +22,26 @@ import SqlText._
   *    AUTO_INCREMENT, DEFAULT, NOT NULL (reference
   *    src/executor/alter_row/insert.rs:10-98, validate_unique.rs:23-160,
   *    src/database/auto_increment.rs:6-33) — is enforced by this
-  *    class's write path, as distributed DataFrame checks (anti-join /
-  *    aggregate assertions), never driver-side row loops.
+  *    class's write path. A statically bounded batch (a plan whose
+  *    maxRows is at most `graft.insert.smallBatchRows`) is collected
+  *    once and validated in one driver pass, and UNIQUE against stored
+  *    rows is a key probe that reads only the row groups the batch
+  *    keys can hit; any other batch is validated by distributed
+  *    aggregates. Small writes cost what they touch, big ones scale
+  *    out.
   *  - **UPDATE/DELETE** = copy-on-write at parquet-file granularity:
-  *    a narrow discovery scan finds the files holding matches
-  *    (input_file_name, predicate pushed to the reader), only those
-  *    files are read, rewritten via localCheckpoint (cuts lineage so
-  *    we can replace what we read), staged into a hidden directory,
-  *    parity-gated, and swapped in through the manifest-bracketed
-  *    rename protocol COMPACT uses (see [[swapIn]]) — untouched files
-  *    survive, readers observe only the renames, and a crash
-  *    anywhere converges via the same repair. Whole-table statements
-  *    and single-file CSV storage rewrite wholesale.
+  *    one discovery job finds the files holding matches
+  *    (input_file_name, predicate pushed to the reader), and only
+  *    those files are read and rewritten — straight into a hidden
+  *    staging directory, with no checkpoint, since the originals stay
+  *    in place until the swap. Counts and NOT NULL are observed on
+  *    that write; every check and the row-parity gate run before the
+  *    files are swapped in through the manifest-bracketed rename
+  *    protocol COMPACT uses (see [[swapIn]]) — untouched files
+  *    survive, readers observe only the renames, and a failed check
+  *    or a crash leaves or converges to a consistent table.
+  *    Whole-table statements and single-file CSV storage overwrite
+  *    what they read, so they rewrite from a checkpoint.
   *  - **CREATE INDEX** records metadata and physically re-clusters the
   *    table by the indexed column (range partition + sort), so parquet
   *    row-group min/max stats provide the range pruning the
@@ -321,8 +329,10 @@ class Engine(val spark: SparkSession) {
     val provided = columns.map(c => tm.column(c).getOrElse(
       throw new EngineException(s"unknown column $c in $table")))
     val schema = StructType(provided.map(_.sparkField))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map(Row.fromSeq), 1), schema)
+    // A local relation: the rows are already on the driver, and its
+    // maxRows is their count, so a batch under the small-batch bound
+    // takes the bounded INSERT path.
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*), schema)
     val (payload, _, doneWithBatch) = insertDataFrame(db, tbl, tm, columns, df)
     doneWithBatch()
     payload
@@ -780,10 +790,6 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** Shared validated write path (SQL INSERT and [[insertVec]]):
-    * position columns → coerce types → apply DEFAULTs → fill
-    * AUTO_INCREMENT → NOT NULL check → UNIQUE check → append.
-    * All checks are distributed aggregates, not driver loops. */
   /** The database's local directory, for the writer lock; None for
     * non-local locations (cluster URIs lock at the storage layer). */
   private def dbDir(db: String): Option[java.io.File] =
@@ -873,28 +879,27 @@ class Engine(val spark: SparkSession) {
     * so post-fill it cannot be null). uniqueCols: UNIQUE columns and
     * unique-indexed columns.
     *
-    * Staging policy (needStage): AUTO_INCREMENT needs a stable lineage
-    * (the assigned ids must be identical in every job that re-reads
-    * the batch — a shuffle upstream would reorder rows between runs),
-    * and constraint checks make extra passes over the batch. But a
-    * batch whose plan is a deterministic NARROW pipeline (scan /
-    * filter / project / union / VALUES — no exchange, no
-    * nondeterministic expression) already re-reads identically from
-    * lineage: partition splits come from deterministic file listing
-    * and row order is the file order. For that shape — the common bulk
-    * INSERT…SELECT — staging is pure overhead (serialize the batch to
-    * local disk + read it back vs. a second columnar parquet scan), so
-    * it stages nothing. Only a batch with a shuffle or nondeterminism
-    * upstream is materialized, via a lazy localCheckpoint at
-    * [[Engine.StagingLevel]] (2-replica disk): spilled to local disk
-    * by the first job that touches it, never pinned in executor
-    * storage memory, lineage TRUNCATED so a lost block is a job
-    * failure instead of a silent recompute through a reordering
-    * shuffle (which could hand out colliding auto-ids) — with one
-    * replica so a single executor loss doesn't force that failure —
-    * and the cached RDD is GC-tracked rather than left in the
-    * CacheManager. An INSERT into an unconstrained table stages
-    * nothing and runs as a SINGLE write job with observed metrics. */
+    * Staging policy (needStage), for unbounded batches only — a
+    * bounded one ([[boundedBatch]]) is collected once and never
+    * re-read: AUTO_INCREMENT needs a stable lineage (the assigned ids
+    * must be identical in every job that re-reads the batch — a
+    * shuffle upstream would reorder rows between runs), and
+    * constraint checks make extra passes over the batch. But a batch
+    * whose plan is a deterministic NARROW pipeline (scan / filter /
+    * project / union / VALUES — no exchange, no nondeterministic
+    * expression) already re-reads identically from lineage: partition
+    * splits come from deterministic file listing and row order is the
+    * file order. For that shape — the common bulk INSERT…SELECT —
+    * staging is pure overhead, so it stages nothing. Only a batch with
+    * a shuffle or nondeterminism upstream is materialized, via a lazy
+    * localCheckpoint at [[Engine.StagingLevel]] (2-replica disk):
+    * spilled to local disk by the first job that touches it, never
+    * pinned in executor storage memory, lineage TRUNCATED so a lost
+    * block is a job failure instead of a silent recompute through a
+    * reordering shuffle (which could hand out colliding auto-ids), and
+    * GC-tracked rather than left in the CacheManager. An INSERT into
+    * an unconstrained table stages nothing and runs as a SINGLE write
+    * job with observed metrics. */
   private case class InsertPolicy(autoCol: Option[ColumnMeta],
       notNullCols: Seq[ColumnMeta], uniqueCols: Seq[ColumnMeta],
       scanStable: Boolean) {
@@ -907,15 +912,6 @@ class Engine(val spark: SparkSession) {
       import org.apache.spark.sql.catalyst.plans.logical._
       val nodeOk = p match {
         case _: Project | _: Filter | _: Union | _: LocalRelation | _: Range => true
-        // coalesce(1) ONLY — the small-batch file-sizing node the write
-        // path itself inserts: a single-partition merge of a
-        // deterministic child re-reads identically from lineage (all
-        // rows, one partition, child order). A user-supplied
-        // coalesce(n>1) does NOT qualify (round-19 advice): its
-        // partition grouping is locality-based
-        // (DefaultPartitionCoalescer), an implementation detail, not a
-        // narrow guarantee — such a batch stages like any other.
-        case r: Repartition if !r.shuffle && r.numPartitions == 1 => true
         case _ => p.getClass.getSimpleName == "LogicalRelation" ||
           p.getClass.getSimpleName == "DataSourceV2ScanRelation" ||
           p.getClass.getSimpleName == "OneRowRelation"
@@ -932,6 +928,28 @@ class Engine(val spark: SparkSession) {
       stable(out.queryExecution.optimizedPlan))
   }
 
+  /** `graft.insert.smallBatchRows` (default 2 000): the row bound under
+    * which an INSERT batch is small — validated on the driver and
+    * written as one file. */
+  private def insertSmallBatchRows: Long =
+    try spark.conf.get("graft.insert.smallBatchRows", "2000").toLong
+    catch { case _: NumberFormatException => 2000L }
+
+  /** A batch whose plan is statically bounded: `maxRows` within the
+    * small-batch bound (VALUES, local relations, range(), LIMIT
+    * sources). Such a batch is collected once and validated in one
+    * driver pass; any other batch — a large or unknown-size
+    * INSERT…SELECT, a generator — is validated by distributed jobs and
+    * keeps its partitioning. */
+  private def boundedBatch(out: DataFrame): Boolean =
+    out.queryExecution.optimizedPlan.maxRows.exists(_ <= insertSmallBatchRows)
+
+  /** Shared validated write path (SQL INSERT and [[insertVec]]):
+    * position columns → coerce types → apply DEFAULTs → NOT NULL
+    * check → fill AUTO_INCREMENT → UNIQUE check → append. A bounded
+    * batch ([[boundedBatch]]) is checked in one driver pass over its
+    * collected rows plus one key probe per UNIQUE column; an unbounded
+    * one by distributed aggregates. */
   private def insertDataFrame(db: String, tbl: String, tm: TableMeta,
                               cols: Seq[String], src: DataFrame): (Payload, DataFrame, () => Unit) =
     // Single-writer lock around validate -> fill -> write -> counter
@@ -957,60 +975,16 @@ class Engine(val spark: SparkSession) {
       syncExternalMeta(db, tbl)
     }
     val tm = meta.get(db, tbl).getOrElse(tm0)
-    // Sub-step timing for the bulk-INSERT profile (ProfileG7); zero
-    // cost unless GRAFT_INSERT_PROF is set in the environment.
-    val profOn = sys.env.contains("GRAFT_INSERT_PROF")
-    def prof[A](name: String)(f: => A): A =
-      if (!profOn) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[insprof] $name%-16s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        r
-      }
     cols.foreach(c => if (tm.column(c).isEmpty)
       throw new EngineException(s"unknown column $c in $db.$tbl"))
     var out = positionedBatch(tm, cols, src)
-
-    // Small-batch file sizing (round 19, guide §6 "aim for output
-    // files in the 128 MB–1 GB range" / small-files anti-pattern): a
-    // batch whose row count is STATICALLY bounded tiny — plan.maxRows
-    // is defined for VALUES, range() and LIMIT sources — would
-    // otherwise write one file per source partition (a range(500)
-    // source carries defaultParallelism partitions → 32 sub-KB files
-    // on local[32], more on a cluster), and every later statement
-    // pays O(files): per-file footer parity reads, a distributed
-    // listing job once the directory passes the 32-path parallel-
-    // discovery threshold, multi-task scans of byte-sized files, and
-    // the auto-compact hook re-packing what never needed to fragment.
-    // coalesce(1) is a deterministic narrow, order-preserving node
-    // over a deterministic source, so the auto-increment dense fill
-    // and staged re-reads are unaffected (insertPolicy.stable accepts
-    // it). Scale-safe by construction: maxRows is a guaranteed static
-    // bound — a genuinely large INSERT…SELECT has none and keeps its
-    // partitioning. Threshold conf'd for deployments with wider rows;
-    // the 2 000-row default stays an order of magnitude under the
-    // bulk-INSERT parallelism contract EngineSpec pins (a 10 k-row
-    // 8-partition batch must keep writing in parallel).
-    val smallBatchRows =
-      try spark.conf.get("graft.insert.smallBatchRows", "2000").toLong
-      catch { case _: NumberFormatException => 2000L }
-    if (tm.csvPath.isEmpty && tm.xlsxPath.isEmpty &&
-        out.queryExecution.optimizedPlan.maxRows.exists(_ <= smallBatchRows))
-      out = out.coalesce(1)
-
     val pol = insertPolicy(tm, out)
     val autoCol = pol.autoCol
     val notNullCols = pol.notNullCols
     val uniqueCols = pol.uniqueCols
-    out =
-      if (pol.needStage) out.localCheckpoint(eager = false, Engine.StagingLevel)
-      else out
-    // The checkpointed RDD is ContextCleaner-tracked: it is released
-    // when `out` becomes unreachable after this call returns, so the
-    // release hook has nothing eager to do beyond restoring the
-    // write-sizing conf below; callers invoke it on failure paths too.
-    //
-    // Bulk-write task sizing: Spark's split heuristic
-    // (FilePartition.maxSplitBytes = min(maxPartitionBytes,
+    val bounded = boundedBatch(out)
+    // Bulk-write task sizing (unbounded batches): Spark's split
+    // heuristic (FilePartition.maxSplitBytes = min(maxPartitionBytes,
     // max(openCost, totalBytes / minPartitionNum))) maximizes SCAN
     // parallelism, so a small-file INSERT…SELECT source explodes into
     // dozens of sub-MB scan tasks — and the write inherits that as
@@ -1024,7 +998,7 @@ class Engine(val spark: SparkSession) {
     // re-executes the batch after this returns, and the auto-id fill
     // is only deterministic if every job of the batch sees the same
     // splits.
-    val sizeWriteTasks = tm.csvPath.isEmpty && tm.xlsxPath.isEmpty
+    val sizeWriteTasks = !bounded && tm.csvPath.isEmpty && tm.xlsxPath.isEmpty
     val minPartKey = "spark.sql.files.minPartitionNum"
     val prevMinPart = if (sizeWriteTasks) spark.conf.getOption(minPartKey) else None
     if (sizeWriteTasks)
@@ -1036,157 +1010,173 @@ class Engine(val spark: SparkSession) {
         case None => spark.conf.unset(minPartKey)
       }
     try {
-    // Pre-write validation. With AUTO_INCREMENT, ONE per-partition
-    // stats job materializes the cache and yields the row count, the
-    // per-partition null-id counts (the prefix-sum basis for dense
-    // numbering AND the counter advance), and every NOT NULL
-    // violation count — the whole validation in a single pass.
-    // Without it, one global aggregate does count + NOT NULL; a table
-    // with no constraints at all skips the pre-pass entirely and
-    // counts rows inside the write job itself (Observation) or the
-    // CSV render loop. n = -1 marks "count still pending".
+    // n = -1 marks "count still pending" (the write job counts rows).
     var n = -1L
     var autoFilled = 0L
-    def requireNoNulls(nullCounts: Seq[Long]): Unit =
-      notNullCols.zip(nullCounts).foreach { case (cm, bad) =>
-        if (bad > 0)
-          throw new EngineException(s"null value in NOT NULL column ${cm.name}")
+    def nullErr(cm: ColumnMeta) =
+      new EngineException(s"null value in NOT NULL column ${cm.name}")
+    def dupErr(cm: ColumnMeta) =
+      new EngineException(s"duplicate entry in unique column ${cm.name}")
+    if (bounded) {
+      // One pass on the driver over the collected batch: count, NOT
+      // NULL, the dense row-order AUTO_INCREMENT fill (only NULL cells
+      // draw ids, reference auto_increment.rs:12-41), and duplicates
+      // inside the batch. Exactly the validated rows are written, so
+      // the batch needs no staging and no stable lineage.
+      val schema = out.schema
+      var rows = out.collect()
+      n = rows.length
+      notNullCols.foreach { cm =>
+        val i = schema.fieldIndex(cm.name)
+        if (rows.exists(_.isNullAt(i))) throw nullErr(cm)
       }
-    // Single-job fast path for the canonical bulk INSERT…SELECT: the
-    // auto column is STATICALLY all-null (absent from the column list
-    // with no DEFAULT — nothing to scan to know every row draws an
-    // id), there are no other constraints to pre-validate, and the
-    // un-staged narrow batch arrives as ONE partition (the common
-    // single-file source below maxPartitionBytes), so the dense-fill
-    // prefix-sum basis is trivially [0] and the per-partition stats
-    // job has nothing left to compute — the row count folds into the
-    // write job's Observation and the counter advances by it after
-    // the write. A multi-partition batch still pays the one stats
-    // pass (it needs real offsets); measured: removes ~0.15-0.2 s
-    // per 600k-row insert at sf0.1.
-    val autoStaticAllNull = autoCol.exists(cm =>
-      !cols.exists(_.equalsIgnoreCase(cm.name)) && cm.default.isEmpty)
-    // Probe the partition count only for local-relation sources
-    // (VALUES / literal batches): building toRdd for a file-scan
-    // batch costs a full physical-planning pass that the multi-split
-    // scan then wastes (it won't be 1 partition at any realistic
-    // parallelism).
-    def localSrc = out.queryExecution.optimizedPlan.collectLeaves().forall { p =>
-      p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] ||
-        p.getClass.getSimpleName == "OneRowRelation"
-    }
-    val fastSingleAuto = autoStaticAllNull && notNullCols.isEmpty &&
-      uniqueCols.isEmpty && tm.csvPath.isEmpty && tm.xlsxPath.isEmpty &&
-      !pol.needStage && localSrc && out.queryExecution.toRdd.getNumPartitions == 1
-    autoCol match {
-      case Some(cm) if fastSingleAuto =>
-        // Partition 0 ⇒ monotonically_increasing_id has no pid bits:
-        // it IS the intra-partition counter, so the fill is
-        // start + counter with no offset lookup at all.
-        val mid = col("__graft_mid")
-        out = out.withColumn("__graft_mid", monotonically_increasing_id())
-          .withColumn(cm.name, (lit(tm.autoCounter) + mid).cast(cm.dataType))
-          .drop("__graft_mid")
-      case Some(cm) =>
-        // Footer fast path: the all-null-auto, no-other-constraint
-        // batch over a pure parquet projection needs only per-scan-
-        // partition row counts, and those are metadata (FooterCounts).
-        // Skipping the stats job removes a full distributed pass over
-        // the source — the dominant pre-write cost at any scale.
-        val footerCounts: Option[Array[Long]] =
-          if (autoStaticAllNull && notNullCols.isEmpty && uniqueCols.isEmpty &&
-            !pol.needStage) prof("footer_counts")(
-            FooterCounts.perPartitionCounts(spark, out))
-          else None
-        val nullsByPid: Map[Long, Long] = footerCounts match {
-          case Some(counts) =>
-            n = counts.sum
-            autoFilled = n
-            counts.zipWithIndex.map { case (c, p) => p.toLong -> c }.toMap
-          case None =>
-            val statAggs = Seq(
-              count(lit(1)).as("__total"),
-              coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as("__nulls")) ++
-              notNullCols.map(c2 => coalesce(sum(when(col(c2.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${c2.name}"))
-            val perPart = prof("stats_job")(out.groupBy(spark_partition_id().as("__pid"))
-              .agg(statAggs.head, statAggs.tail: _*).collect())
-            n = perPart.map(_.getLong(1)).sum
-            autoFilled = perPart.map(_.getLong(2)).sum
-            requireNoNulls(notNullCols.indices.map(i => perPart.map(_.getLong(i + 3)).sum))
-            perPart.map(r => r.getInt(0).toLong -> r.getLong(2)).toMap
-        }
-        // Dense numbering without a shuffle and without leaving
-        // codegen: monotonically_increasing_id embeds
-        // (partitionId << 33 | intra-partition counter) with the
-        // counter consecutive from 0, so the per-partition null counts
-        // above prefix-sum into each partition's starting offset.
-        // Every job sees identical partitioning and row order: the
-        // batch is either a deterministic narrow scan (re-read from
-        // lineage bit-identically) or a truncated-lineage StagingLevel
-        // localCheckpoint (see staging policy). (Replaces RDD.zipWithIndex,
-        // whose Row↔InternalRow round trip re-ran in every downstream
-        // job and dominated bulk-INSERT cost.)
-        val start = tm.autoCounter
-        val maxPid = if (nullsByPid.isEmpty) -1L else nullsByPid.keys.max
-        val offsets = Array.iterate(0L -> 0L, ((maxPid + 2).toInt).max(1)) {
-          case (p, acc) => (p + 1) -> (acc + nullsByPid.getOrElse(p, 0L))
-        }.map(_._2)
-        val mid = col("__graft_mid")
-        val pid = shiftright(mid, 33)
-        // Offset lookup: an inline array literal keeps the whole fill
-        // inside codegen, but its expression tree grows linearly with
-        // partition count (a many-thousand-partition bulk load would
-        // blow past the 64 KB codegen method limit and fall back to
-        // interpreted eval). Over 64 partitions, switch to a broadcast
-        // Array[Long] behind a tiny UDF — O(1) per row, O(#partitions)
-        // driver memory once, not per-expression-tree.
-        val offsetCol =
-          if (maxPid < 0) lit(0L)
-          else if (maxPid < 64) element_at(
-            array(offsets.take((maxPid + 1).toInt).map(lit).toIndexedSeq: _*),
-            (pid + 1).cast("int"))
+      autoCol.foreach { cm =>
+        // an auto column is BIGINT (SqlText.parseColumnDef): ids are Longs
+        val i = schema.fieldIndex(cm.name)
+        rows = rows.map { r =>
+          if (!r.isNullAt(i)) r
           else {
-            val bc = spark.sparkContext.broadcast(offsets.take((maxPid + 1).toInt))
-            udf((p: Int) => bc.value(p)).apply(pid.cast("int"))
+            val id = tm.autoCounter + autoFilled
+            autoFilled += 1
+            Row.fromSeq(r.toSeq.updated(i, id))
           }
-        val filledRows = out.filter(col(cm.name).isNull)
-          .withColumn("__graft_mid", monotonically_increasing_id())
-          .withColumn(cm.name,
-            (lit(start) + offsetCol + mid.bitwiseAND(lit((1L << 33) - 1)))
-              .cast(cm.dataType))
-          .drop("__graft_mid")
-        // Skip whichever branch the batch makes empty: an all-null
-        // batch (the common bulk INSERT…SELECT shape) writes
-        // filledRows alone, halving the cache reads of every later
-        // job; an all-explicit batch skips the fill entirely.
-        out =
-          if (autoFilled == n) filledRows
-          else if (autoFilled == 0L) out
-          else out.filter(col(cm.name).isNotNull).unionAll(filledRows)
-      case None if notNullCols.nonEmpty || tm.xlsxPath.nonEmpty =>
-        // count + all NOT NULL checks in ONE aggregate job (sums
-        // coalesced so an empty batch reads 0, not NULL); xlsx tables
-        // also land here because the workbook bound check below needs
-        // the row count before the write.
-        val checkAggs = count(lit(1)).as("__n") +:
-          notNullCols.map(cm => coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${cm.name}"))
-        val checkRow = out.agg(checkAggs.head, checkAggs.tail: _*).collect()(0)
-        n = checkRow.getLong(0)
-        requireNoNulls(notNullCols.indices.map(i => checkRow.getLong(i + 1)))
-      case None => // unconstrained: the write job itself counts rows
-    }
-    // UNIQUE (reference validate_unique.rs:23-160): batch-internal
-    // duplicates and overlap with stored rows in one job per column —
-    // stored values are already unique, so any key appearing twice in
-    // stored ∪ batch is a violation.
-    uniqueCols.foreach { cm =>
-      val c = col(cm.name)
-      val dupes = spark.table(s"`$db`.`$tbl`").select(c)
-        .unionAll(out.select(c))
-        .filter(c.isNotNull)
-        .groupBy(c).count().filter(col("count") > 1)
-      if (dupes.limit(1).count() > 0)
-        throw new EngineException(s"duplicate entry in unique column ${cm.name}")
+        }
+      }
+      // UNIQUE against stored rows is a key probe: stored keys are
+      // unique, so the result holds at most one row per batch key, and
+      // the IN filter reaches the parquet reader, whose row-group
+      // min/max stats skip every range the keys miss. Collected
+      // without LIMIT: an incremental take would add jobs.
+      uniqueCols.foreach { cm =>
+        val i = schema.fieldIndex(cm.name)
+        val keys = rows.iterator.filterNot(_.isNullAt(i)).map(_.get(i)).toSeq
+        val c = col(cm.name)
+        // in-batch duplicates under Spark's grouping equality (-0.0 = 0.0)
+        val distinct = keys.map { case d: Double if d == 0.0 => 0.0; case k => k }.distinct
+        if (distinct.size < keys.size || keys.nonEmpty &&
+            spark.table(s"`$db`.`$tbl`").select(c).filter(c.isin(keys: _*)).collect().nonEmpty)
+          throw dupErr(cm)
+      }
+      out = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      // Small-batch file sizing (small-files anti-pattern): a local
+      // relation scans as up to defaultParallelism partitions, and
+      // every later statement pays per file (footer parity reads,
+      // multi-task scans, compaction). A bounded batch writes one file.
+      out = out.coalesce(1)
+    } else {
+      if (pol.needStage) out = out.localCheckpoint(eager = false, Engine.StagingLevel)
+      // With AUTO_INCREMENT, ONE per-partition stats job yields the
+      // row count, the per-partition null-id counts (the prefix-sum
+      // basis for dense numbering AND the counter advance), and every
+      // NOT NULL violation count. Without it, one global aggregate
+      // does count + NOT NULL; a table with no constraints skips the
+      // pre-pass and counts rows inside the write job itself
+      // (Observation) or the CSV render loop.
+      def requireNoNulls(nullCounts: Seq[Long]): Unit =
+        notNullCols.zip(nullCounts).foreach { case (cm, bad) => if (bad > 0) throw nullErr(cm) }
+      val autoStaticAllNull = autoCol.exists(cm =>
+        !cols.exists(_.equalsIgnoreCase(cm.name)) && cm.default.isEmpty)
+      autoCol match {
+        case Some(cm) =>
+          // Footer fast path: the all-null-auto, no-other-constraint
+          // batch over a pure parquet projection needs only per-scan-
+          // partition row counts, and those are metadata (FooterCounts).
+          // Skipping the stats job removes a full distributed pass over
+          // the source — the dominant pre-write cost at any scale.
+          val footerCounts: Option[Array[Long]] =
+            if (autoStaticAllNull && notNullCols.isEmpty && uniqueCols.isEmpty &&
+              !pol.needStage) FooterCounts.perPartitionCounts(spark, out)
+            else None
+          val nullsByPid: Map[Long, Long] = footerCounts match {
+            case Some(counts) =>
+              n = counts.sum
+              autoFilled = n
+              counts.zipWithIndex.map { case (c, p) => p.toLong -> c }.toMap
+            case None =>
+              val statAggs = Seq(
+                count(lit(1)).as("__total"),
+                coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as("__nulls")) ++
+                notNullCols.map(c2 => coalesce(sum(when(col(c2.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${c2.name}"))
+              val perPart = out.groupBy(spark_partition_id().as("__pid"))
+                .agg(statAggs.head, statAggs.tail: _*).collect()
+              n = perPart.map(_.getLong(1)).sum
+              autoFilled = perPart.map(_.getLong(2)).sum
+              requireNoNulls(notNullCols.indices.map(i => perPart.map(_.getLong(i + 3)).sum))
+              perPart.map(r => r.getInt(0).toLong -> r.getLong(2)).toMap
+          }
+          // Dense numbering without a shuffle and without leaving
+          // codegen: monotonically_increasing_id embeds
+          // (partitionId << 33 | intra-partition counter) with the
+          // counter consecutive from 0, so the per-partition null counts
+          // above prefix-sum into each partition's starting offset.
+          // Every job sees identical partitioning and row order: the
+          // batch is either a deterministic narrow scan (re-read from
+          // lineage bit-identically) or a truncated-lineage StagingLevel
+          // localCheckpoint (see staging policy). (Replaces RDD.zipWithIndex,
+          // whose Row↔InternalRow round trip re-ran in every downstream
+          // job and dominated bulk-INSERT cost.)
+          val start = tm.autoCounter
+          val maxPid = if (nullsByPid.isEmpty) -1L else nullsByPid.keys.max
+          val offsets = Array.iterate(0L -> 0L, ((maxPid + 2).toInt).max(1)) {
+            case (p, acc) => (p + 1) -> (acc + nullsByPid.getOrElse(p, 0L))
+          }.map(_._2)
+          val mid = col("__graft_mid")
+          val pid = shiftright(mid, 33)
+          // Offset lookup: an inline array literal keeps the whole fill
+          // inside codegen, but its expression tree grows linearly with
+          // partition count (a many-thousand-partition bulk load would
+          // blow past the 64 KB codegen method limit and fall back to
+          // interpreted eval). Over 64 partitions, switch to a broadcast
+          // Array[Long] behind a tiny UDF — O(1) per row, O(#partitions)
+          // driver memory once, not per-expression-tree.
+          val offsetCol =
+            if (maxPid < 0) lit(0L)
+            else if (maxPid < 64) element_at(
+              array(offsets.take((maxPid + 1).toInt).map(lit).toIndexedSeq: _*),
+              (pid + 1).cast("int"))
+            else {
+              val bc = spark.sparkContext.broadcast(offsets.take((maxPid + 1).toInt))
+              udf((p: Int) => bc.value(p)).apply(pid.cast("int"))
+            }
+          val filledRows = out.filter(col(cm.name).isNull)
+            .withColumn("__graft_mid", monotonically_increasing_id())
+            .withColumn(cm.name,
+              (lit(start) + offsetCol + mid.bitwiseAND(lit((1L << 33) - 1)))
+                .cast(cm.dataType))
+            .drop("__graft_mid")
+          // Skip whichever branch the batch makes empty: an all-null
+          // batch (the common bulk INSERT…SELECT shape) writes
+          // filledRows alone, halving the cache reads of every later
+          // job; an all-explicit batch skips the fill entirely.
+          out =
+            if (autoFilled == n) filledRows
+            else if (autoFilled == 0L) out
+            else out.filter(col(cm.name).isNotNull).unionAll(filledRows)
+        case None if notNullCols.nonEmpty || tm.xlsxPath.nonEmpty =>
+          // count + all NOT NULL checks in ONE aggregate job (sums
+          // coalesced so an empty batch reads 0, not NULL); xlsx tables
+          // also land here because the workbook bound check below needs
+          // the row count before the write.
+          val checkAggs = count(lit(1)).as("__n") +:
+            notNullCols.map(cm => coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${cm.name}"))
+          val checkRow = out.agg(checkAggs.head, checkAggs.tail: _*).collect()(0)
+          n = checkRow.getLong(0)
+          requireNoNulls(notNullCols.indices.map(i => checkRow.getLong(i + 1)))
+        case None => // unconstrained: the write job itself counts rows
+      }
+      // UNIQUE (reference validate_unique.rs:23-160): batch-internal
+      // duplicates and overlap with stored rows in one job per column —
+      // stored values are already unique, so any key appearing twice in
+      // stored ∪ batch is a violation.
+      uniqueCols.foreach { cm =>
+        val c = col(cm.name)
+        val dupes = spark.table(s"`$db`.`$tbl`").select(c)
+          .unionAll(out.select(c))
+          .filter(c.isNotNull)
+          .groupBy(c).count().filter(col("count") > 1)
+        if (dupes.limit(1).count() > 0)
+          throw dupErr(cm)
+      }
     }
 
     // AUTO_INCREMENT crash bracket: stamp the control file DIRTY
@@ -1251,7 +1241,7 @@ class Engine(val spark: SparkSession) {
           out.observe(obs, count(lit(1)).as("__n"))
             .write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`")
           n = obs.get("__n").asInstanceOf[Long]
-        } else prof("write_job")(out.write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`"))
+        } else out.write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`")
         // (Round-10 profile note: widening a low-partition bulk batch
         // with a pre-write repartition was tried and measured SLOWER
         // at sf0.1 — round-robin pays a sortBeforeRepartition full
@@ -1261,7 +1251,6 @@ class Engine(val spark: SparkSession) {
         // cores anyway.)
         tm.xlsxPath.foreach(syncXlsx)
     }
-    if (fastSingleAuto) autoFilled = n // every cell was null by construction
     autoCol.foreach(_ =>
       meta.update(db, tbl)(m =>
         m.copy(autoCounter = m.autoCounter + autoFilled, counterDirty = false)))
@@ -1310,49 +1299,48 @@ class Engine(val spark: SparkSession) {
         if (wherePart != null && tm.csvPath.isEmpty) {
           // Copy-on-write at parquet-FILE granularity: a narrow
           // discovery scan (predicate columns only, filters pushed to
-          // the parquet reader) finds the files holding matches via
-          // input_file_name; only those files are read full-width,
-          // rewritten, appended, and then removed — every other file
-          // survives untouched. With the CREATE INDEX clustered
-          // layout, a selective UPDATE on the indexed column touches
-          // O(matching range) files, not the table.
-          val affected = t.filter(cond)
-            .select(input_file_name().as("f")).distinct()
-            .collect().map(_.getString(0)).filter(_.nonEmpty)
+          // the parquet reader) finds the files holding matches; only
+          // those files are read full-width, rewritten straight into
+          // staging, and swapped in — every other file survives
+          // untouched. With the CREATE INDEX clustered layout, a
+          // selective UPDATE on the indexed column touches O(matching
+          // range) files, not the table.
+          val affected = inputFiles(t.filter(cond))
           if (affected.isEmpty) return Payload.Update(0L)
-          // Affected-row count folded into the rewrite job as an
-          // observed metric — no separate count() pass. n_rows (every
-          // row scanned = every row rewritten, UPDATE is 1:1) feeds
-          // the staged swap's parity gate.
+          // Matched and scanned rows (every row scanned is rewritten,
+          // UPDATE is 1:1 — the parity gate's expectation) and the
+          // nulls of every assigned NOT NULL column are observed on the
+          // staging write job itself — no separate pass.
+          val notNullAssigned = tm.columns.filter(c => !c.nullable && assigns.contains(c.name))
           val obs = org.apache.spark.sql.Observation()
           // schema passed explicitly: avoids a footer-inference job
-          val out = spark.read.schema(t.schema).parquet(affected.toIndexedSeq: _*)
+          val out = spark.read.schema(t.schema).parquet(affected: _*)
+            .select(projection :+ cond.as("__graft_m"): _*)
             .observe(obs,
-              coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"),
-              count(lit(1)).as("n_rows"))
-            .select(projection: _*)
-            .localCheckpoint(eager = true, Engine.StagingLevel)
+              coalesce(sum(when(col("__graft_m"), 1L).otherwise(0L)), lit(0L)).as("n_matched"),
+              count(lit(1)).as("n_rows") +: notNullAssigned.map(cm =>
+                coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${cm.name}")): _*)
+            .drop("__graft_m")
+          stagedDmlSwap(db, tbl, out, affected) { staged =>
+            val m = obs.get
+            notNullAssigned.foreach { cm =>
+              if (m(s"__nn_${cm.name}").asInstanceOf[Long] > 0)
+                throw new EngineException(s"null value in NOT NULL column ${cm.name}")
+            }
+            tm.columns.filter(_.unique).filter(c => assigns.contains(c.name)).foreach { cm =>
+              // duplicates can span rewritten and untouched rows: check
+              // the union (one column scanned from the untouched files)
+              val untouched = t.filter(!input_file_name().isin(affected: _*))
+                .select(col(cm.name))
+              val dups = untouched.unionAll(staged.select(col(cm.name)))
+                .filter(col(cm.name).isNotNull)
+                .groupBy(col(cm.name)).count().filter(col("count") > 1)
+              if (dups.limit(1).count() > 0)
+                throw new EngineException(s"duplicate entry in unique column ${cm.name}")
+            }
+            m("n_rows").asInstanceOf[Long]
+          }
           val n = obs.get("n_matched").asInstanceOf[Long]
-          val nScanned = obs.get("n_rows").asInstanceOf[Long]
-          tm.columns.filter(!_.nullable).filter(c => assigns.contains(c.name)).foreach { cm =>
-            if (out.filter(col(cm.name).isNull).limit(1).count() > 0)
-              throw new EngineException(s"null value in NOT NULL column ${cm.name}")
-          }
-          tm.columns.filter(_.unique).filter(c => assigns.contains(c.name)).foreach { cm =>
-            // duplicates can span rewritten and untouched rows: check
-            // the union (one column scanned from the untouched files)
-            val untouched = t.filter(!input_file_name().isin(affected.toIndexedSeq: _*))
-              .select(col(cm.name))
-            val dups = untouched.unionAll(out.select(col(cm.name)))
-              .filter(col(cm.name).isNotNull)
-              .groupBy(col(cm.name)).count().filter(col("count") > 1)
-            if (dups.limit(1).count() > 0)
-              throw new EngineException(s"duplicate entry in unique column ${cm.name}")
-          }
-          // Manifest-bracketed staged swap (round 18): readers see
-          // only the few renames, and a crash anywhere converges via
-          // the same repair as COMPACT's.
-          stagedDmlSwap(db, tbl, out, affected.toIndexedSeq, expectRows = nScanned)
           spark.catalog.refreshTable(s"`$db`.`$tbl`")
           tm.xlsxPath.foreach(syncXlsx)
           persistMeta(db, tbl) // epoch stamp: other processes refresh
@@ -1431,32 +1419,29 @@ class Engine(val spark: SparkSession) {
           case (Some(cond), None) if tm.csvPath.isEmpty =>
             // File-granular copy-on-write, like UPDATE: narrow
             // discovery scan → read only the files holding matches →
-            // append their surviving rows → drop the originals. The
+            // stage their surviving rows → swap them in. The
             // deleted-row count is observed below the keep-filter
             // (which Catalyst cannot push through CollectMetrics) on
             // the same pruned scan — no separate count() pass.
-            val affected = t.filter(cond)
-              .select(input_file_name().as("f")).distinct()
-              .collect().map(_.getString(0)).filter(_.nonEmpty)
+            val affected = inputFiles(t.filter(cond))
             if (affected.isEmpty) Payload.Delete(0L)
             else {
               val obs = org.apache.spark.sql.Observation()
-              val kept = spark.read.schema(t.schema).parquet(affected.toIndexedSeq: _*)
+              val kept = spark.read.schema(t.schema).parquet(affected: _*)
                 .observe(obs,
                   coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"),
                   count(lit(1)).as("n_rows"))
                 .filter(!cond || cond.isNull)
                 .select(tm.columns.map(cm => col(cm.name)): _*)
-                .localCheckpoint(eager = true, Engine.StagingLevel)
-              val n = obs.get("n_matched").asInstanceOf[Long]
-              val nScanned = obs.get("n_rows").asInstanceOf[Long]
               // Survivors = scanned − deleted (NULL-cond rows are kept
               // and not matched) — the staged swap's parity gate. A
               // DELETE keeping zero rows stages zero files; the
               // manifest's empty_ok marker keeps its repair
               // roll-FORWARD (see swapIn).
-              stagedDmlSwap(db, tbl, kept, affected.toIndexedSeq,
-                expectRows = nScanned - n)
+              stagedDmlSwap(db, tbl, kept, affected) { _ =>
+                obs.get("n_rows").asInstanceOf[Long] - obs.get("n_matched").asInstanceOf[Long]
+              }
+              val n = obs.get("n_matched").asInstanceOf[Long]
               spark.catalog.refreshTable(s"`$db`.`$tbl`")
               tm.xlsxPath.foreach(syncXlsx)
               persistMeta(db, tbl) // epoch stamp: other processes refresh
@@ -2021,9 +2006,7 @@ class Engine(val spark: SparkSession) {
       case Some(dir) =>
         TableFs.listData(conf, dir).map { case (p, len) => p.toUri.toString -> len }
       case None =>
-        val t = spark.table(s"`$db`.`$tbl`")
-        t.select(input_file_name().as("f")).distinct()
-          .collect().map(_.getString(0)).filter(_.nonEmpty).toSeq
+        inputFiles(spark.table(s"`$db`.`$tbl`"))
           .flatMap { uri =>
             val p = pathOfUri(uri) // input_file_name is percent-encoded
             try Some(uri -> TableFs.fs(conf, p).getFileStatus(p).getLen)
@@ -2313,42 +2296,45 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** Staged swap for the CoW UPDATE/DELETE rewrite (round 18): the
-    * rewritten survivors of the affected files land in a hidden
-    * staging directory, are row-parity-gated THERE, and enter the
-    * table through [[swapIn]]'s manifest-bracketed renames — closing
-    * the same two windows the COMPACT swap closed in rounds 15–17:
-    *  - READER ISOLATION: the old flow appended rewritten rows
-    *    directly into the table directory, so a concurrent reader saw
-    *    rewritten + original rows together for the whole write;
-    *  - CRASH: a death between the append and the original deletes
-    *    left those duplicates PERMANENTLY, with no manifest — exactly
-    *    the hole the COMPACT protocol fixed, unfixed on the much
-    *    hotter DML path.
-    * Now both mutations converge through one protocol and one repair.
+  /** Staged swap for the CoW UPDATE/DELETE rewrite: the rewrite scan
+    * of the affected files writes straight into a hidden staging
+    * directory — no checkpoint, because the originals it reads stay in
+    * place until the staging write has finished. `check` then runs
+    * the statement's constraint checks (given the staged rows, read
+    * back from the staged files) and returns the row count the
+    * rewrite must have produced; the rows that LANDED are gated
+    * against it, and only then do the files enter the table through
+    * [[swapIn]]'s manifest-bracketed renames. A failed check or gate
+    * discards staging and leaves the originals untouched. This
+    * closes the two windows COMPACT's swap closes:
+    *  - READER ISOLATION: a concurrent reader never sees rewritten
+    *    and original rows together;
+    *  - CRASH: a death mid-swap converges through the same manifest
+    *    repair, never leaving permanent duplicates.
     * FALLBACK: a store without atomic rename (not on the COMPACT
-    * allowlist) or a table without a listable directory keeps the old
-    * direct append + checked deletes — correct end state, documented
+    * allowlist) or a table without a listable directory materializes
+    * the rewrite in a checkpoint, checks it, then appends it directly
+    * and deletes the originals — correct end state, documented
     * visible-duplicates window — because half a swap protocol on a
     * copy+delete "rename" is worse than none. */
   private def stagedDmlSwap(db: String, tbl: String, newData: DataFrame,
-      origUris: Seq[String], expectRows: Long): Unit = {
+      origUris: Seq[String])(check: (=> DataFrame) => Long): Unit = {
     val conf = hadoopConf
     val tdirOpt = tableDirectory(db, tbl)
       .filter(TableFs.isDirectoryStrict(conf, _))
       .filter(d => atomicRenameOk(conf, d))
     tdirOpt match {
       case None =>
-        newData.write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`")
+        val staged = newData.localCheckpoint(eager = true, Engine.StagingLevel)
+        check(staged)
+        staged.write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`")
         origUris.foreach(deleteDataFile)
       case Some(tdir) =>
         val staging = new org.apache.hadoop.fs.Path(tdir,
           s".dml_staging_${java.util.UUID.randomUUID().toString.take(8)}")
         try {
-          // newData is already positioned to the table's column order
-          // and types and checkpointed by the caller — this write is
-          // a replay of the checkpoint, not a recompute.
           newData.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+          val expectRows = check(spark.read.schema(newData.schema).parquet(staging.toString))
           val counted = TableFs.listData(conf, staging)
             .map { case (p, _) => p -> footerRowCount(conf, Seq(p)) }
           // Parity gate, entirely inside staging: the rows that
@@ -2365,6 +2351,14 @@ class Engine(val spark: SparkSession) {
         } finally TableFs.deleteRecursively(conf, staging)
     }
   }
+
+  /** The distinct input files (input_file_name URIs) of `df`'s rows in
+    * ONE job: a per-partition distinct with no exchange — a file's
+    * rows fill few partitions, so the driver-side merge is O(files). */
+  private def inputFiles(df: DataFrame): Seq[String] =
+    df.select(input_file_name()).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().distinct.filter(_.nonEmpty).toSeq
 
   /** Total row count of parquet files from their FOOTERS — driver-side
     * metadata reads, zero Spark jobs. The staged-swap parity gates
@@ -2643,8 +2637,10 @@ class Engine(val spark: SparkSession) {
       val (db, tbl, tm, cols, src) = parseInsert(arg)
       val out = positionedBatch(tm, cols, src)
       val pol = insertPolicy(tm, out)
+      val bounded = boundedBatch(out)
       val staging =
-        if (pol.needStage)
+        if (bounded) "none — bounded batch, collected once and validated on the driver"
+        else if (pol.needStage)
           "lazy 2-replica disk localCheckpoint — shuffle or nondeterminism " +
             "upstream of an auto-increment/constraint pass needs a stable lineage"
         else if (pol.autoCol.isDefined || pol.notNullCols.nonEmpty || pol.uniqueCols.nonEmpty)
@@ -2654,7 +2650,9 @@ class Engine(val spark: SparkSession) {
         s"target: $db.$tbl",
         s"staging: $staging",
         s"auto_increment: ${pol.autoCol.map(_.name).getOrElse("(none)")}" +
-          (if (pol.autoCol.isDefined) " (parallel per-partition offset fill)" else ""),
+          (if (pol.autoCol.isEmpty) ""
+           else if (bounded) " (driver row-order fill)"
+           else " (parallel per-partition offset fill)"),
         s"not_null checks: ${pol.notNullCols.map(_.name).mkString("[", ", ", "]")}",
         s"unique checks: ${pol.uniqueCols.map(_.name).mkString("[", ", ", "]")}")
       Payload.Select(Seq("plan"), planShape(out, extras))
@@ -2969,22 +2967,26 @@ object Engine {
     * OOMing the driver. */
   val DefaultMaxResultRows: Int = 1 << 20
 
-  /** Storage level for every DML/DDL staging localCheckpoint (INSERT
-    * batch, UPDATE/DELETE copy-on-write, ALTER/CREATE INDEX rewrite,
-    * INSERT-in-CTE). Disk tier: staged blocks can outlive the
+  /** Storage level for every DML/DDL staging localCheckpoint: an
+    * unbounded INSERT batch with a shuffle upstream, the rewrites that
+    * overwrite what they read (ALTER/CREATE INDEX, whole-table and CSV
+    * UPDATE/DELETE, TRUNCATE-style DELETE), the CoW fallback on stores
+    * without atomic rename, and INSERT-in-CTE. File-granular
+    * UPDATE/DELETE on a managed table stage into files instead (see
+    * stagedDmlSwap). Disk tier: staged blocks can outlive the
     * statement (released on driver GC, not statement end) and
     * memory-tier blocks squat the unified pool's protected storage
     * half — the measured sf10 hazard that moved the operator
     * checkpoints to disk. 2-replica: localCheckpoint TRUNCATES
     * lineage, so an un-replicated block lost with its executor is
-    * unrecoverable — and the destructive paths (ALTER's rewrite,
-    * DELETE's copy-on-write) drop table files before re-writing from
-    * the checkpoint, the highest-stakes window for block loss. One
-    * replica survives a single executor loss; in local mode
-    * replication is a no-op. Same rationale as
+    * unrecoverable — and the overwriting paths drop table files
+    * before re-writing from the checkpoint, the highest-stakes window
+    * for block loss. One replica survives a single executor loss; in
+    * local mode replication is a no-op. Same rationale as
     * DistributedPrefix.shared / Dedup's posting checkpoint. */
   val StagingLevel: org.apache.spark.storage.StorageLevel =
     org.apache.spark.storage.StorageLevel.DISK_ONLY_2
+
 
   /** COMPACT TABLE's default output-file target (and EXPLAIN FILES'
     * histogram threshold): 128 MB, matching Spark's default

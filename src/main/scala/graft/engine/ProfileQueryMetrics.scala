@@ -82,9 +82,10 @@ object ProfileQueryMetrics {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         if (traceJobs) {
           // getOrDefault, not get: a CHM[Int,Int] get on an unregistered
-          // stage (job started before group registration) returns null and
-          // null-unboxes to an NPE, which would also skip the Acc
-          // accumulation below (round-19 advice). Job ids start at 0.
+          // stage (job started before group registration) returns null,
+          // which Scala unboxes to 0 — silently attributing the task to
+          // job 0 (it never throws). Job ids start at 0, so -1 marks
+          // "no job".
           val jid = stageJob.getOrDefault(t.stageId, -1)
           if (jid >= 0) {
             jobTasks.computeIfAbsent(jid, _ => new AtomicLong).incrementAndGet()

@@ -93,4 +93,37 @@ class DmlSwapSpec extends AnyFunSuite {
     assert(spark.table("dsw.e2").count() == 60L,
       "a marker-less empty manifest must roll BACK: originals survive")
   }
+
+  /** Data file name → size: a failed statement must leave every
+    * original exactly as it was. */
+  private def dataFiles(tbl: String): Map[String, Long] =
+    dataNames(tbl).map(nm => nm -> java.nio.file.Files.size(loc.resolve(tbl).resolve(nm))).toMap
+
+  private def fourRangeFiles(tbl: String, cols: String): Unit = {
+    g.execute(s"CREATE TABLE dsw.$tbl ($cols)")
+    for (i <- 0 until 4)
+      g.execute(s"INSERT INTO dsw.$tbl SELECT id + ${i * 100}, id + ${i * 100} FROM range(100)")
+    g.execute(s"CREATE INDEX dsw_${tbl}_k ON dsw.$tbl (k)") // range-disjoint files
+  }
+
+  test("UPDATE setting a NOT NULL column to NULL aborts: originals intact, no staging left") {
+    fourRangeFiles("nn", "k INTEGER, v INTEGER NOT NULL")
+    val before = dataFiles("nn")
+    val e = intercept[EngineException](g.execute("UPDATE dsw.nn SET v = NULL WHERE k < 50"))
+    assert(e.getMessage.contains("null value in NOT NULL column v"), e.getMessage)
+    assert(dataFiles("nn") == before, "a failed UPDATE must not touch the original files")
+    assert(!names("nn").exists(_.startsWith(".dml_staging_")), s"staging left: ${names("nn")}")
+    assert(spark.sql("SELECT count(v), sum(v) FROM dsw.nn").head.toSeq == Seq(400L, 79800L))
+  }
+
+  test("UPDATE making a UNIQUE column collide with an untouched file aborts: originals intact, no staging left") {
+    fourRangeFiles("uq", "k INTEGER, u INTEGER UNIQUE")
+    val before = dataFiles("uq")
+    // k = 0 lives in the first file; u = 399 in the last, untouched one
+    val e = intercept[EngineException](g.execute("UPDATE dsw.uq SET u = 399 WHERE k = 0"))
+    assert(e.getMessage.contains("duplicate entry in unique column u"), e.getMessage)
+    assert(dataFiles("uq") == before, "a failed UPDATE must not touch the original files")
+    assert(!names("uq").exists(_.startsWith(".dml_staging_")), s"staging left: ${names("uq")}")
+    assert(spark.sql("SELECT count(*) FROM dsw.uq WHERE u = 399").head.getLong(0) == 1L)
+  }
 }

@@ -186,13 +186,14 @@ class OperatorFacadeSpec extends AnyFunSuite {
         |name TEXT NOT NULL UNIQUE, score FLOAT DEFAULT 2.5)""".stripMargin)
     // g3's exact batch shape: a VALUES INSERT into the
     // AUTO_INCREMENT + NOT NULL + UNIQUE + DEFAULT table. VALUES is
-    // deterministic and narrow, so the plan must stage nothing while
-    // listing every constraint pass it will run.
+    // statically bounded, so the plan must stage nothing — the batch
+    // is collected once and filled on the driver — while listing every
+    // constraint pass it will run.
     val shape = shapeOf("EXPLAIN INSERT INTO xg3.u (name) VALUES ('a'), ('b')")
     assert(shape.exists(_ == "target: xg3.u"), shape.mkString("\n"))
-    assert(shape.exists(l => l.startsWith("staging: none — deterministic narrow batch")),
+    assert(shape.exists(l => l.startsWith("staging: none — bounded batch")),
       shape.mkString("\n"))
-    assert(shape.exists(_.startsWith("auto_increment: id")), shape.mkString("\n"))
+    assert(shape.exists(_ == "auto_increment: id (driver row-order fill)"), shape.mkString("\n"))
     assert(shape.exists(_ == "not_null checks: [name]"), shape.mkString("\n"))
     assert(shape.exists(_ == "unique checks: [name]"), shape.mkString("\n"))
     // dry run: nothing written, auto counter untouched
