@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Emits ONE JSON line the driver parses.
   *
@@ -12,33 +11,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional session-conf injection for interleaved A/Bs
-    // (round-19 verdict item 5): SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2".
-    // Default EMPTY — the recorded bench methodology is unchanged;
-    // this only exists so a conf candidate can be measured through
-    // the same harness it would ship in.
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Adopted round 20 after an interleaved sf1 A/B through
-      // SPARK_GRAFT_EXTRA_CONF (guide §3.1/§9 "allow shuffled hash
-      // join when it fits"): q30's two SMJs become ShuffledHashJoins
-      // (two Sort nodes gone, 0.85× wall), total 0.95×, no query
-      // regressed beyond noise; zstd shuffle codec was A/B'd the same
-      // way and REJECTED (flat total, q6 1.20×/q33 1.11× regressions).
-      // Scale-safe: the planner only picks SHJ when the per-partition
-      // build side fits its size conditions. extraConf below still
-      // overrides (applied later).
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" overrides the shipped conf for
+    // interleaved A/Bs of a conf candidate (see GraftSession).
+    val spark = GraftSession.withExtraConf(GraftSession.cpus(4))
     // Measured WITHOUT table caching, deliberately: a controlled
     // experiment showed blanket .cache() of all tables makes later
     // string-heavy queries up to 40× slower once the storage pool has

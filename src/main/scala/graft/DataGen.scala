@@ -77,19 +77,12 @@ object DataGen {
     val outDir = args(0)
     val scale = if (args.length > 1) args(1).toDouble else 1.0
     val skewed = args.length > 2 && args(2).equalsIgnoreCase("skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ~20 MB row groups: a single-file table still scans in
-      // parallel (Spark assigns row groups to byte-range splits) —
-      // the multi-row-group layout a pyarrow-style generator
-      // produces, and the shape a real large table always has.
-      .config("spark.hadoop.parquet.block.size", (20 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // ~20 MB row groups: a single-file table still scans in
+    // parallel (Spark assigns row groups to byte-range splits) —
+    // the multi-row-group layout a pyarrow-style generator
+    // produces, and the shape a real large table always has.
+    val spark = GraftSession.start(GraftSession.builder(GraftSession.cpus(8))
+      .config("spark.hadoop.parquet.block.size", (20 * 1024 * 1024).toString))
     new java.io.File(outDir).mkdirs()
     write(spark, outDir, scale, skewed)
     spark.stop()

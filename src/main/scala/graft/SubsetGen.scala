@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Partitioned-oracle helper (round-13 verdict task 6): DuckDB's
@@ -24,15 +23,8 @@ object SubsetGen {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, mS, rS) = args.take(4)
     val (m, r) = (mS.toLong, rS.toLong)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.parquet.block.size", (20 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.builder(GraftSession.cpus(16))
+      .config("spark.hadoop.parquet.block.size", (20 * 1024 * 1024).toString))
     val out = new java.io.File(outDir)
     out.mkdirs()
     // documents: the deterministic residue-class subset, single file

@@ -9,17 +9,9 @@ object Verify {
     // (local iteration); the driver always passes exactly two args.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Mirrors Bench's adopted session conf (round 20) so the
-      // correctness gate runs the same plans the bench times.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The session Bench times, SPARK_GRAFT_EXTRA_CONF included, so a
+    // conf candidate is checked against the oracle as well as timed.
+    val spark = GraftSession.withExtraConf(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     // Same loud preflight as Bench: a data/schema drift reads as
     // "table X broken" at the top of the log, not N scattered

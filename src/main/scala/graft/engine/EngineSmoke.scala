@@ -1,7 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end smoke drive of the [[Engine]] facade: the reference's
   * ability-battery shapes (create / insert / select / constraint
   * violations / update / delete / alter / views / variables / explain
@@ -33,14 +31,8 @@ object EngineSmoke {
 
   def main(args: Array[String]): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_smoke").toFile
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"$tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.start(graft.GraftSession.builder(4)
+      .config("spark.sql.warehouse.dir", s"$tmp/warehouse"), "ERROR")
     val g = new Engine(spark)
 
     // --- basic round trip (reference tests/ability/base/basic.rs) ---

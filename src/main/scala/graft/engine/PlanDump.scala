@@ -1,7 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named battery queries to
   * plans/<dir>/<query>_<suffix>.txt — the round-19 optimization
   * evidence files the judge checks plan claims against.
@@ -15,20 +13,9 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Same optional conf-injection seam as Bench's, so a session-conf
-    // candidate's plan diff can be dumped through the same machinery.
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_EXTRA_CONF applies as in Bench, so a conf candidate's
+    // plan diff is dumped through the same session.
+    val spark = graft.GraftSession.withExtraConf(graft.GraftSession.cpus(32))
     new java.io.File(outDir).mkdirs()
     // Operators whose battery entry eagerly checkpoints (the final
     // frame explains as a LogicalRDD stub) expose their INTERNAL

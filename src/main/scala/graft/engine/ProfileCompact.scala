@@ -1,7 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
-
 /** COMPACT TABLE scale witness: does defragmentation actually buy
   * scan throughput, measured rather than asserted?
   *
@@ -22,14 +20,8 @@ object ProfileCompact {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "localdata/sf1"
     val chunks = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-compact-witness")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(
+      graft.GraftSession.builder(32).appName("graft-compact-witness"))
     graft.Tables.registerAll(spark, sfDir)
     val g = new Engine(spark)
     g.execute("DROP DATABASE IF EXISTS cptw")

@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, struct, xxhash64}
 
 /** Concurrent-session read witness (round-14 verdict task 2).
@@ -50,15 +49,9 @@ object ProfileConcurrent {
     val sfDir = if (args.nonEmpty) args(0) else "localdata/sf1"
     val mode = if (args.length > 1) args(1) else "FAIR"
     val nThreads = if (args.length > 2) args(2).toInt else 4
-    val spark = SparkSession.builder()
-      .master("local[32]")
+    val spark = graft.GraftSession.start(graft.GraftSession.builder(32)
       .appName(s"graft-concurrent-$mode")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.scheduler.mode", mode)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.scheduler.mode", mode))
     val queries = graft.SparkEntry.queries
 
     /** Execute one query to completion and fold it to a comparable

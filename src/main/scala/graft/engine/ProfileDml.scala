@@ -1,7 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
-
 /** Top-rung DML witness (round-15 verdict task 1): UPDATE / DELETE /
   * fragmentation / COMPACT measured on the sf10 corpus — 60 M-row
   * lineitem — with the file-granularity claim RECORDED, not asserted.
@@ -55,14 +53,8 @@ object ProfileDml {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "localdata/sf10"
     val chunks = 16
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-dml-witness")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(
+      graft.GraftSession.builder(32).appName("graft-dml-witness"))
     graft.Tables.registerAll(spark, sfDir)
     val g = new Engine(spark)
     g.execute("DROP DATABASE IF EXISTS dmlw")

@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.graft.FaultShims
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** Executor-loss fault witness (round-14 verdict task 1).
@@ -84,20 +83,15 @@ object ProfileFault {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar",
     ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val builder = SparkSession.builder()
-      .master("local-cluster[2,1,1200]")
+    val builder = graft.GraftSession.builder(8, "local-cluster[2,1,1200]")
       .appName("graft-fault-witness")
       .config("spark.executor.memory", "1g")
       .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // Keep retries modest: phase B WANTS the loud failure fast.
       .config("spark.task.maxFailures", "2")
     args.headOption.foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
+    val spark = graft.GraftSession.start(builder)
     val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
 
     check("two real executor JVMs registered (separate block managers)") {
       await("2 executors")(FaultShims.liveExecutors(sc).size >= 2)

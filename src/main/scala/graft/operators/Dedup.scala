@@ -273,29 +273,23 @@ object Dedup {
     * neighborhood this large doesn't exist in real corpora. */
   val MaxBandBucket = 50
 
-  /** Storage level for d13's distinct-span-contents cache (its four
-    * consumers re-read it; see spanMinhashDupsOn). Profiled both ways
-    * at sf0.1, sf1 and sf10 (ProfileD13, round 14, min of 3 passes
-    * each, q33-style join run right after each d13 in the same
-    * session): DISK_ONLY ties-or-wins on d13 itself (sf0.1 2.35 vs
-    * 2.32 s — even; sf1 6.12 vs 6.43 s; sf10 21.9 vs 22.9 s) and the
-    * after-join is identical (sf1 1.85 vs
-    * 1.82 s, sf10 6.67 vs 6.67) — the finally-release means neither
-    * tier squats the pool past the query, so the tier only trades
-    * d13's own execution memory against re-read cost, and the
-    * re-read rides the OS page cache for free. DISK_ONLY is also the
-    * right 100 TB posture: a corpus-scale side-materialization has no
-    * business borrowing the unified pool's storage half mid-query. */
-  val SpanCacheLevelKey = "graft.dedup.spanCacheLevel"
-  val SpanCacheLevelDefault = "DISK_ONLY"
-
-  /** Storage level for d14's gram cache (two consumers: census +
-    * posting probe; see exactSubstringOn) — the same knob as
-    * [[SpanCacheLevelKey]], mirrored for the other corpus-sized
-    * dedup cache (round-19 verdict item 7, config plumbing only:
-    * default behavior unchanged). */
-  val GramCacheLevelKey = "graft.dedup.gramCacheLevel"
-  val GramCacheLevelDefault = "DISK_ONLY"
+  /** Storage level of the two corpus-sized dedup caches: d13's
+    * distinct span contents (four consumers re-read it; see
+    * spanMinhashDupsOn) and d14's grams (census + posting probe; see
+    * exactSubstringOn). Measured against MEMORY_AND_DISK for d13 at
+    * sf0.1, sf1 and sf10 (min of 3 passes each, a q33-style join run
+    * right after each d13 in the same session): DISK_ONLY ties or wins
+    * on d13 itself (sf0.1 2.35 vs 2.32 s — even; sf1 6.12 vs 6.43 s;
+    * sf10 21.9 vs 22.9 s) and the after-join is identical (sf1 1.85 vs
+    * 1.82 s, sf10 6.67 vs 6.67 s). Both caches are released in a
+    * finally, so neither tier squats the pool past the query: the tier
+    * only trades the operator's own execution memory against re-read
+    * cost, and the re-read rides the OS page cache. DISK_ONLY is also
+    * the right posture at 100 TB: a corpus-scale side-materialization
+    * has no business borrowing the unified pool's storage half
+    * mid-query. */
+  val CorpusCacheLevel: org.apache.spark.storage.StorageLevel =
+    org.apache.spark.storage.StorageLevel.DISK_ONLY
 
   /** MinHash + LSH near-dup: band signatures (bands of rows=2), bucket
     * by band value, emit candidate pairs per bucket, estimate
@@ -1139,16 +1133,8 @@ object Dedup {
     // stats for planning; the eager localCheckpoint of the (tiny)
     // result below lets the finally release the cache before this
     // returns, so no CacheManager entry outlives the call.
-    // Storage tier knob (round-14 profiling; see ProfileD13): the one
-    // corpus-sized cache left on the memory tier after round 13 moved
-    // the lazy checkpoints to DISK_ONLY. Unlike those, this persist is
-    // released in the finally below, so it cannot squat the pool past
-    // the query — the tier only trades ITS OWN consumers' re-read cost
-    // against the execution memory its blocks borrow mid-query.
-    val lvl = org.apache.spark.storage.StorageLevel.fromString(
-      docs.sparkSession.conf.get(SpanCacheLevelKey, SpanCacheLevelDefault))
     val contents0 = spanContents(docs, maxBucket)
-    val contents = if (materialize) contents0.persist(lvl) else contents0
+    val contents = if (materialize) contents0.persist(CorpusCacheLevel) else contents0
     try {
 
     // EXACT tier: identical spans pair straight off the holder set
@@ -1386,12 +1372,8 @@ object Dedup {
       // persist (kept for InMemoryRelation stats — a checkpointed
       // LogicalRDD is stats-less and demotes downstream join plans)
       // with a finally-unpersist after the result materializes below,
-      // so no CacheManager entry outlives the call. Tier conf'd like
-      // d13's span cache ([[GramCacheLevelKey]]), DISK_ONLY default.
-    val grams = if (materialize)
-      grams1.persist(org.apache.spark.storage.StorageLevel.fromString(
-        docs.sparkSession.conf.get(GramCacheLevelKey, GramCacheLevelDefault)))
-    else grams1
+      // so no CacheManager entry outlives the call.
+    val grams = if (materialize) grams1.persist(CorpusCacheLevel) else grams1
     try {
     // Census first (d13's lesson): posting lists are only collected
     // for grams that are both shared across ≥2 docs (min≠max doc is a

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * isn't available or a key is pathological (one key holding a double-
   * digit percentage of a 100 TB fact table).
   *
-  * Measured guidance (round 17, [[ProfileSkewJoin]] on the planted
-  * 30%-hot-key corpora): for a plain single-hot-key EQUI-join, AQE's
+  * Measured guidance (lineitem ⋈ orders on the planted 30%-hot-key
+  * corpora): for a plain single-hot-key EQUI-join, AQE's
   * runtime split beats manual salting at every rung tested
   * (sf1-skewed 1.22 s vs 2.20/5.62 s at salt 4/16; sf10-skewed
   * 10.1 s vs 10.4/13.7 s) — the dim-side replication is pure

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Streaming RESTART witness: the recovery tier ProfileStream does
@@ -39,14 +39,8 @@ object ProfileRestart {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "localdata/sf1"
     val nFiles = if (args.length > 1) args(1).toInt else 20
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-restart-witness")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(
+      graft.GraftSession.builder(32).appName("graft-restart-witness"))
 
     val root = java.nio.file.Files.createTempDirectory("graft_restart")
     // Source fragments staged OUTSIDE the watched dir, delivered by

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Streaming rung at scale (round-14 verdict task 4).
@@ -52,23 +52,16 @@ object ProfileStream {
     val perTrigger = if (args.length > 2) args(2).toInt else 2
     val backend = if (args.length > 3) args(3).toLowerCase else "hdfs"
     require(backend == "hdfs" || backend == "rocksdb", s"unknown state backend '$backend'")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-stream-rung")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.GraftSession.builder(32).appName("graft-stream-rung")
     if (backend == "rocksdb") builder.config(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder
-      // rung() aggregates q.recentProgress — Spark retains only the
-      // last numRecentProgressUpdates entries (default 100), which
-      // would silently truncate rows/s and percentiles on replays
-      // with more triggers than that (e.g. nFiles=400, perTrigger=1).
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // rung() aggregates q.recentProgress — Spark retains only the
+    // last numRecentProgressUpdates entries (default 100), which
+    // would silently truncate rows/s and percentiles on replays
+    // with more triggers than that (e.g. nFiles=400, perTrigger=1).
+    val spark = graft.GraftSession.start(
+      builder.config("spark.sql.streaming.numRecentProgressUpdates", "10000"))
     var failures = 0
 
     // Fragment the corpus once: the replay source directories.

@@ -18,12 +18,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val prev = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(2).withExtensions(new GraftExtensions()).getOrCreate()
     try {
       assert(spark.sql("SELECT CONVERT('INTEGER', '7')").collect()(0).get(0) == 7L)
       assert(spark.sql("SELECT graft_dateadd('MONTH', 1, 1643587200)")

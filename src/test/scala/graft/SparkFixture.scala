@@ -21,14 +21,10 @@ object SparkFixture {
     // failure` line in the test log. (No global emptiness assertion —
     // some suites fail tasks intentionally, e.g. TablesFaultSpec's
     // corrupt-parquet reads.)
-    val s = SparkSession.builder()
-      .master("local[4, 2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"$tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    // The shipped conf (GraftSession), so the plans tests pin are the
+    // plans Bench times and Verify checks.
+    val s = GraftSession.start(GraftSession.builder(4, "local[4, 2]")
+      .config("spark.sql.warehouse.dir", s"$tmp/warehouse"), "ERROR")
     s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         t.reason match {

@@ -4,17 +4,11 @@ import graft.SparkFixture
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-20 scan fan-out (guide §2.5) and the d14 gram-cache tier
-  * knob — the two operator-internal changes of the round that need
-  * their contracts pinned:
-  *
-  *  - fanOutScan fires ONLY when the input's scan parallelism is
-  *    under half the cluster's (the condition, not a constant, is
-  *    the scale behavior: a many-file corpus is a no-op), and it
-  *    never changes results — every downstream aggregate is
-  *    order-insensitive;
-  *  - graft.dedup.gramCacheLevel is actually READ by d14 (an invalid
-  *    tier throws; a non-default tier returns identical rows). */
+/** Round-20 scan fan-out (guide §2.5): fanOutScan fires ONLY when the
+  * input's scan parallelism is under half the cluster's (the
+  * condition, not a constant, is the scale behavior: a many-file
+  * corpus is a no-op), and it never changes results — every
+  * downstream aggregate is order-insensitive. */
 class FanOutScanSpec extends AnyFunSuite {
 
   private lazy val spark = SparkFixture.session
@@ -53,21 +47,5 @@ class FanOutScanSpec extends AnyFunSuite {
       docs.repartition(spark.sparkContext.defaultParallelism), w, 200)
       .orderBy("id_a", "id_b").collect().toSeq
     assert(one == par && one.nonEmpty)
-  }
-
-  test("graft.dedup.gramCacheLevel is read: bad tier throws, real tier matches") {
-    val w = 5
-    val base = Dedup.exactSubstringOn(docs, w, 200)
-      .orderBy("id_a", "id_b").collect().toSeq
-    try {
-      spark.conf.set(Dedup.GramCacheLevelKey, "NOT_A_TIER")
-      intercept[IllegalArgumentException] {
-        Dedup.exactSubstringOn(docs, w, 200).collect()
-      }
-      spark.conf.set(Dedup.GramCacheLevelKey, "MEMORY_ONLY")
-      val mem = Dedup.exactSubstringOn(docs, w, 200)
-        .orderBy("id_a", "id_b").collect().toSeq
-      assert(mem == base)
-    } finally spark.conf.unset(Dedup.GramCacheLevelKey)
   }
 }
