@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * plans Bench times all come from the same conf.
   *
   * [[builder]] returns the shipped conf for a caller that adds a
-  * deployment key of its own (warehouse dir, scheduler mode, state
-  * store, executor options); [[start]] builds it and sets the log level.
+  * deployment key of its own (warehouse dir, parquet block size,
+  * executor options); [[start]] builds it and sets the log level.
   */
 object GraftSession {
 

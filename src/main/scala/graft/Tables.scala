@@ -15,9 +15,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Small dimension tables that should always be broadcast in joins. */
-  val smallDims: Set[String] = Set("region", "nation", "supplier")
-
   /** Schema cache keyed by (path, mtime). Without an explicit schema,
     * EVERY spark.read.parquet launches a footer-inference job at
     * DataFrame-build time (verified with the status tracker — one job

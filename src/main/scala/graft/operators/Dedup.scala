@@ -184,9 +184,6 @@ object Dedup {
   val WinnowK = 3
   val WinnowW = 4
 
-  private def winnowFps(spark: SparkSession, dir: String): DataFrame =
-    winnowFpsOn(t(spark, dir, "documents"))
-
   private def winnowFpsOn(docs: DataFrame): DataFrame =
     // Selection runs in the native graft.functions.WinnowSelect kernel:
     // the previous nested higher-order form evaluated md5 inside an

@@ -295,13 +295,7 @@ object EventOps {
     * watermark, 1-hour tumbling window. Verified against the batch
     * result in the streaming spec via the memory sink. */
   def streamingTumbling(spark: SparkSession, dir: String): DataFrame =
-    streamingTumblingOn(eventStream(spark, dir))
-
-  /** Same twin over a caller-supplied event stream — lets the scale
-    * witness (ProfileStream) rate-limit the replay with
-    * maxFilesPerTrigger while the pipeline stays single-sourced. */
-  def streamingTumblingOn(events: DataFrame): DataFrame =
-    events
+    eventStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))

@@ -16,6 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - a foreign lock holder (another process, simulated by taking the
   *    flock in-JVM outside DbLock) makes the mutation FAIL LOUDLY
   *    after the deadline, never race.
+  * Readers are not serialized at all: the last cases pin that they
+  * never wait on the writer lock and that concurrent readers on one
+  * session get exactly the serial results.
   */
 class ConcurrentDmlSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.session
@@ -110,7 +113,9 @@ class ConcurrentDmlSpec extends AnyFunSuite {
     // running SELECTs while another holds the DML lock must proceed
     // immediately — the reference serializes readers behind its
     // engine Mutex, and NOT inheriting that is half the multi-tenant
-    // pitch (the other half is ProfileConcurrent's inflation table).
+    // pitch (the other half is the 4-thread read parity case below;
+    // its sf1 inflation and throughput are in SURVEY.md's round-15
+    // addendum).
     val g = new Engine(spark)
     val loc = freshDb(g, "cdml3")
     g.execute("CREATE TABLE cdml3.t (id INTEGER AUTO_INCREMENT, v INTEGER)")
@@ -129,5 +134,41 @@ class ConcurrentDmlSpec extends AnyFunSuite {
       assert(readMs < 5000, f"read took $readMs%.0f ms under a held writer lock")
     } finally { foreign.release(); ch.close() }
     g.execute("DROP DATABASE cdml3")
+  }
+
+  test("heavy read queries from 4 threads on one session return the serial fingerprints") {
+    // N analytic tenants share one SparkContext instead of queueing
+    // behind a single engine lock. Sharing must not corrupt results:
+    // the facade entries re-register the corpus views and build fresh
+    // Engines on every run, so the session catalog and the schema
+    // cache are raced here.
+    import org.apache.spark.sql.functions.{col, struct, xxhash64}
+    val dir = SparkFixture.Sf0001
+    val names = Seq("d13_span_minhash", "d9_canonical_select",
+      "t19_learned_tokens", "c1_corpus_prep")
+    // (row count, order-insensitive xor of row hashes), from one action
+    // that computes the whole result
+    def fingerprint(name: String): (Long, Long) = {
+      val df = graft.SparkEntry.queries(name)(spark, dir)
+      val r = df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
+        .selectExpr("count(*)", "coalesce(bit_xor(h), 0)").head
+      (r.getLong(0), r.getLong(1))
+    }
+    val serial = names.map(n => n -> fingerprint(n)).toMap
+    assert(serial.values.forall(_._1 > 0), s"an entry returned no rows: $serial")
+    val errors = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    // each thread starts at a different entry, so the mix is heterogeneous
+    val threads = names.indices.map { i =>
+      new Thread(() => (names.drop(i) ++ names.take(i)).foreach { n =>
+        try {
+          val got = fingerprint(n)
+          if (got != serial(n)) errors.add(s"$n thread $i: $got != serial ${serial(n)}")
+        } catch { case e: Throwable => errors.add(s"$n thread $i failed: $e") }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors.toArray.mkString("\n"))
   }
 }

@@ -1,15 +1,23 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path}
+
 import graft.SparkFixture
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Executes the Structured Streaming form of the tumbling aggregation
   * against the memory sink and checks it produces exactly the batch
   * result — the state the round-1 verdict flagged as claimed-but-
-  * untested. */
+  * untested. The last cases stop a parquet-sink query cold and restart
+  * it from its checkpoint, and run the d7 classify twin on the RocksDB
+  * state store. */
 class StreamingSpec extends AnyFunSuite {
 
   private lazy val spark = SparkFixture.session
+
+  private val DocSchema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
 
   test("streaming tumbling counts equal the batch aggregation") {
     val dir = SparkFixture.Sf0001
@@ -81,20 +89,14 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming incremental dedup classifies exactly like uncapped batch d7") {
     val dir = SparkFixture.Sf0001
     val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+      .schema(DocSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-      .filter(org.apache.spark.sql.functions.col("source") === "src19")
     runToMemory(
-      DedupStream.streamingIncrementalDedup(spark, dir, stream),
+      DedupStream.streamingIncrementalDedup(spark, dir, src19(stream)),
       "stream_d7", "append")
     val streamed = spark.table("stream_d7").collect().map(_.toSeq).toSet
-    // The band-bucket cap is a full-corpus guard the per-batch stream
-    // doesn't apply — compare against the uncapped batch classification.
-    val batch = graft.operators.Dedup.incrementalDedup(spark, dir,
-        pairsOverride = Some(graft.operators.Dedup.minhashLsh(spark, dir,
-          minEstSim = 0.25, maxBucket = Int.MaxValue)))
-      .collect().map(_.toSeq).toSet
+    val batch = batchD7(dir).collect().map(_.toSeq).toSet
     assert(streamed.nonEmpty && streamed == batch,
       s"stream:\n${streamed.toSeq.sortBy(_.head.toString).mkString("\n")}\n" +
         s"batch:\n${batch.toSeq.sortBy(_.head.toString).mkString("\n")}")
@@ -103,7 +105,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming span-level dedup scores equal batch d11 on the replayed corpus") {
     val dir = SparkFixture.Sf0001
     val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+      .schema(DocSchema)
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
@@ -122,7 +124,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming span NEAR-dup classification equals batch d13 per-doc on replay") {
     val dir = SparkFixture.Sf0001
     val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+      .schema(DocSchema)
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
@@ -159,12 +161,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(df.queryExecution.logical.toString.contains("EventTimeWatermark"))
   }
 
-  private def runToMemory(df: org.apache.spark.sql.DataFrame, name: String,
-                          mode: String): Unit = {
-    val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-    try q.processAllAvailable()
-    finally q.stop()
-  }
+  private def runToMemory(df: DataFrame, name: String, mode: String): StreamingQuery =
+    drain(df.writeStream.format("memory").queryName(name).outputMode(mode).start())
 
   test("sliding windows: each event contributes to 4 windows") {
     val dir = SparkFixture.Sf0001
@@ -182,7 +180,7 @@ class StreamingSpec extends AnyFunSuite {
     // append mode, output set-equal to batch
     val dir = SparkFixture.Sf0001
     val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+      .schema(DocSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
     runToMemory(graft.operators.TextOps.repetitionColumns(stream), "stream_t6", "append")
@@ -198,7 +196,7 @@ class StreamingSpec extends AnyFunSuite {
     // stream in append mode and must emit exactly the batch rows
     val dir = SparkFixture.Sf0001
     val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+      .schema(DocSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
     runToMemory(graft.operators.Pii.piiColumns(stream), "stream_p1", "append")
@@ -282,5 +280,123 @@ class StreamingSpec extends AnyFunSuite {
     val batch = EventOps.asofJoin(spark, dir).collect().map(_.toSeq).toSet
     assert(streamed.nonEmpty)
     assert(streamed == batch)
+  }
+
+  /** The documents table rewritten as `n` parquet fragments under
+    * `root/staged`, outside any watched directory. */
+  private def docFragments(root: Path, n: Int): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val staged = root.resolve("staged")
+    graft.Tables.t(spark, SparkFixture.Sf0001, "documents")
+      .repartition(n).write.parquet(staged.toString)
+    Files.list(staged).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
+  }
+
+  /** Copies fragments into the watched directory under new names (the
+    * file-drop ingest pattern). */
+  private def deliver(watch: Path, frags: Seq[Path], suffix: String): Unit =
+    frags.foreach { f =>
+      Files.copy(f, watch.resolve(
+        f.getFileName.toString.stripSuffix(".parquet") + s"_$suffix.parquet"))
+    }
+
+  /** A parquet-sink query over the watched directory, checkpointed at
+    * `root/ck`: the restart cases start it twice. */
+  private def parquetSink(root: Path, pipeline: DataFrame => DataFrame) = {
+    val src = spark.readStream.schema(DocSchema)
+      .option("maxFilesPerTrigger", "2").parquet(root.resolve("watch").toString)
+    pipeline(src).writeStream.format("parquet")
+      .option("path", root.resolve("out").toString)
+      .option("checkpointLocation", root.resolve("ck").toString)
+      .outputMode("append").start()
+  }
+
+  /** Runs a query to the end of its input and stops it cold. */
+  private def drain(q: StreamingQuery): StreamingQuery = {
+    try q.processAllAvailable() finally q.stop()
+    q
+  }
+
+  /** Rows as a multiset: a duplicated row counts twice. */
+  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** Batch d7 with the band-bucket cap lifted: the cap is a full-corpus
+    * guard the per-batch stream does not apply. */
+  private def batchD7(dir: String) = graft.operators.Dedup.incrementalDedup(spark, dir,
+    pairsOverride = Some(graft.operators.Dedup.minhashLsh(spark, dir,
+      minEstSim = 0.25, maxBucket = Int.MaxValue)))
+
+  private def src19(df: DataFrame) =
+    df.filter(org.apache.spark.sql.functions.col("source") === "src19")
+
+  test("p1 ingest stopped cold and restarted from its checkpoint loses and duplicates no row") {
+    // The file-source log and the parquet sink's commit log must let a
+    // restarted query resume mid-corpus, at the batch after the last
+    // committed one. A query replaying from batch 0 would have the sink
+    // skip the batch ids it already committed; with three of six
+    // fragments at two a trigger, a skipped batch drops a fragment.
+    val root = Files.createTempDirectory("graft_restart_p1")
+    val frags = docFragments(root, 6)
+    val watch = Files.createDirectory(root.resolve("watch"))
+    val out = root.resolve("out").toString
+    val batch = multiset(graft.operators.Pii.piiScan(spark, SparkFixture.Sf0001))
+    deliver(watch, frags.take(3), "a")
+    val first = drain(parquetSink(root, graft.operators.Pii.piiColumns))
+    val firstRows = spark.read.parquet(out).count()
+    assert(firstRows > 0 && firstRows < batch.values.sum, s"$firstRows rows after the first half")
+    deliver(watch, frags.drop(3), "a")
+    val second = drain(parquetSink(root, graft.operators.Pii.piiColumns))
+    val lastBatch = first.recentProgress.filter(_.numInputRows > 0).map(_.batchId).max
+    assert(second.recentProgress.map(_.batchId).min == lastBatch + 1,
+      "the restarted query did not resume after the last committed batch")
+    assert(multiset(spark.read.parquet(out)) == batch)
+  }
+
+  test("d7 classify state survives a restart: every document delivered again adds no row") {
+    // The first-seen guard of flatMapGroupsWithState lives in the state
+    // store; if the restart lost it, every re-delivered document would
+    // be classified and emitted a second time.
+    val dir = SparkFixture.Sf0001
+    val root = Files.createTempDirectory("graft_restart_d7")
+    val frags = docFragments(root, 6)
+    val watch = Files.createDirectory(root.resolve("watch"))
+    val out = root.resolve("out").toString
+    def classify(docs: DataFrame) =
+      DedupStream.streamingIncrementalDedup(spark, dir, src19(docs))
+    deliver(watch, frags, "b1")
+    drain(parquetSink(root, classify))
+    val firstRun = multiset(spark.read.parquet(out))
+    assert(firstRun.nonEmpty && firstRun == multiset(batchD7(dir)))
+    deliver(watch, frags, "b2")
+    drain(parquetSink(root, classify))
+    assert(multiset(spark.read.parquet(out)) == firstRun,
+      "re-delivered documents were classified again after the restart")
+  }
+
+  test("d7 classify on the RocksDB state store emits the rows of the default store") {
+    // The provider is a session conf: a child session keeps the shared
+    // fixture's conf untouched.
+    val dir = SparkFixture.Sf0001
+    val rocks = spark.newSession()
+    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    def classify(s: SparkSession, name: String) = {
+      val docs = s.readStream.schema(DocSchema)
+        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val q = runToMemory(DedupStream.streamingIncrementalDedup(s, dir, src19(docs)),
+        name, "append")
+      import scala.jdk.CollectionConverters._
+      val metrics = q.recentProgress.flatMap(_.stateOperators)
+        .flatMap(_.customMetrics.keySet.asScala).toSet
+      (multiset(s.table(name)), metrics)
+    }
+    val (default, defaultMetrics) = classify(spark, "stream_d7_hdfs")
+    val (onRocks, rocksMetrics) = classify(rocks, "stream_d7_rocksdb")
+    assert(rocksMetrics.exists(_.startsWith("rocksdb")) &&
+      !defaultMetrics.exists(_.startsWith("rocksdb")),
+      s"state store metrics: default $defaultMetrics, rocksdb $rocksMetrics")
+    assert(onRocks.nonEmpty && onRocks == default)
   }
 }
