@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -70,30 +70,46 @@ class Engine(val spark: SparkSession) {
     * whose result exceeds this many rows fails fast with a clear error
     * instead of collecting into driver memory — a facade SELECT over a
     * 100 TB table should die loudly, not OOM the driver. ON by default
-    * at a generous [[Engine.DefaultMaxResultRows]] (2²⁰ rows — far
-    * beyond any result a whole-result Payload consumer can use, yet
-    * bounded however big the table; the reference's unconditional
-    * materialize (glue/select.rs) never met a table over ~100k rows).
-    * The guard is pushed down as LIMIT n+1, so an over-limit query
-    * stops after n+1 rows instead of scanning to completion. Opt OUT
-    * with `maxResultRows = None` to restore the unbounded contract —
-    * that path streams partition-at-a-time (toLocalIterator, like the
-    * CSV sync export) rather than one executor→driver collect array. */
+    * at a generous [[Engine.DefaultMaxResultRows]] (2²⁰ = 1,048,576
+    * rows, far beyond any result a whole-result Payload consumer can
+    * use; the reference's unconditional materialize (glue/select.rs)
+    * never met a table over ~100k rows); applied by [[boundedCollect]].
+    * `None` opts OUT to the unbounded contract, streamed
+    * partition-at-a-time (toLocalIterator, one job per partition, like
+    * the CSV sync export) rather than one executor→driver collect. */
   @volatile var maxResultRows: Option[Int] = Some(Engine.DefaultMaxResultRows)
 
-  private def boundedRows(df: DataFrame): Seq[Row] = maxResultRows match {
-    case None =>
-      val b = Seq.newBuilder[Row]
-      val it = df.toLocalIterator()
-      while (it.hasNext) b += it.next()
-      b.result()
-    case Some(n) =>
-      val rows = df.limit(n + 1).collect()
-      if (rows.length > n)
-        throw new EngineException(
+  /** `df`'s rows, rendered by `as`, under [[maxResultRows]] = n, with
+    * every partition collected at once. A plan already bounded by n rows
+    * (an explicit LIMIT, a global aggregate, a local relation) is
+    * collected as is; a global sort takes its first n + 1 rows on
+    * TakeOrderedAndProject (one job); any other plan runs under a
+    * per-partition `LocalLimit(n + 1)` and the driver checks the total.
+    * No partition is cut unless the total exceeds n, so a result that
+    * passes is exact; an over-limit one fails having fetched at most
+    * n + 1 rows per partition (P × (n + 1) for P partitions, still
+    * capped by `spark.driver.maxResultSize`). */
+  private def boundedCollect[T](df: DataFrame, as: DataFrame => Dataset[T]): Seq[T] =
+    maxResultRows match {
+      case None =>
+        import scala.jdk.CollectionConverters._
+        as(df).toLocalIterator().asScala.toSeq
+      case Some(n) =>
+        import org.apache.spark.sql.catalyst.plans.logical._
+        val plan = df.queryExecution.analyzed
+        val capped = plan match {
+          case _ if plan.maxRows.exists(_ <= n) => df
+          case Sort(_, true, _, _) | Project(_, Sort(_, true, _, _)) => df.limit(n + 1)
+          case _ => org.apache.spark.sql.graft.Shims.ofRows(spark,
+            LocalLimit(org.apache.spark.sql.catalyst.expressions.Literal(n + 1), plan))
+        }
+        val rows = as(capped).collect()
+        if (rows.length > n) throw new EngineException(
           s"result exceeds maxResultRows=$n; raise the cap or add LIMIT")
-      rows.toSeq
-  }
+        rows.toSeq
+    }
+
+  private def boundedRows(df: DataFrame): Seq[Row] = boundedCollect[Row](df, identity)
 
   graft.functions.Dialect.register(spark)
 
@@ -143,8 +159,10 @@ class Engine(val spark: SparkSession) {
     * each VALUES keyword's tuple list (nested parens respected), and
     * leaves every other token — including the set operators between
     * lists — in place; parens around each replacement preserve
-    * EXCEPT/INTERSECT precedence. */
-  private def rewriteValues(sql: String): String = {
+    * EXCEPT/INTERSECT precedence. A VALUES statement or INSERT source
+    * whose list is foldable then becomes a local relation
+    * ([[valuesDf]]). */
+  private[engine] def rewriteValues(sql: String): String = {
     val out = new StringBuilder
     var quote: Char = 0
     var i = 0
@@ -186,6 +204,29 @@ class Engine(val spark: SparkSession) {
       } else { out += c; i += 1 }
     }
     out.toString
+  }
+
+  /** A VALUES source: [[rewriteValues]]'s UNION types the rows (Spark's
+    * inline table rejects `(DATE …), ('2020-01-02')`); when every
+    * optimized row is a one-row projection of foldable expressions, the
+    * rows are evaluated once into a local relation, collected and
+    * written with no job. Anything else (a UDF call) stays a UNION. */
+  private[engine] def valuesDf(sql: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.catalyst.{expressions => ex, InternalRow}
+    val df = sqlDf(rewriteValues(sql))
+    val plan = df.queryExecution.optimizedPlan
+    // Alias itself is never foldable: test and evaluate its child
+    def row(p: LogicalPlan) = p match {
+      case Project(list, _: OneRowRelation) => Some(list.collect {
+        case a: ex.Alias if a.child.foldable => a.child.eval()
+      }).filter(_.length == list.length).map(InternalRow.fromSeq)
+      case _ => None
+    }
+    val rows = (plan match { case Union(cs, false, false) => cs; case p => Seq(p) }).map(row)
+    if (rows.exists(_.isEmpty)) df
+    else org.apache.spark.sql.graft.Shims.ofRows(spark,  // the analyzed output keeps the UNION's nullability
+      LocalRelation(df.queryExecution.analyzed.output, rows.flatten))
   }
 
   private def rewriteOutsideQuotes(sql: String, from: String, to: String): String = {
@@ -305,21 +346,8 @@ class Engine(val spark: SparkSession) {
     selectAsString(sql).map(_.map(csvQuote).mkString(",")).mkString("\n")
 
   /** Reference `select_json` (glue/select.rs:13-38): array of objects. */
-  def selectJson(sql: String): String = {
-    val df = query(sql)
-    val docs: Iterator[String] = maxResultRows match {
-      case None =>
-        import scala.jdk.CollectionConverters._
-        df.toJSON.toLocalIterator().asScala
-      case Some(n) =>
-        val ds = df.limit(n + 1).toJSON.collect()
-        if (ds.length > n)
-          throw new EngineException(
-            s"result exceeds maxResultRows=$n; raise the cap or add LIMIT")
-        ds.iterator
-    }
-    "[" + docs.mkString(",") + "]"
-  }
+  def selectJson(sql: String): String =
+    boundedCollect(query(sql), _.toJSON).mkString("[", ",", "]")
 
   /** Reference `insert_vec` (glue/mod.rs:190-248): typed programmatic
     * insert through the same validation pipeline as SQL INSERT. */
@@ -409,7 +437,7 @@ class Engine(val spark: SparkSession) {
     * become the CTE's table. */
   private def selectDf(sql: String): DataFrame = sql match {
     case _ if sql.trim.toUpperCase.startsWith("VALUES") =>
-      sqlDf(rewriteValues(sql))
+      valuesDf(sql)
     case insertCteRe(rawName) =>
       val (body, end) = parenBlock(sql, sql.toUpperCase.indexOf("AS") + 2)
       if (!body.trim.toUpperCase.startsWith("INSERT")) sqlDf(sql)
@@ -778,10 +806,9 @@ class Engine(val spark: SparkSession) {
         // meta — this is the fail-fast copy both routes share.)
         cols.foreach(c => if (tm.column(c).isEmpty)
           throw new EngineException(s"unknown column $c in $db.$tbl"))
-        val srcSql =
-          if (rest.toUpperCase.startsWith("VALUES")) rewriteValues(rest)
-          else rest
-        val src = sqlDf(srcSql)
+        val src =
+          if (rest.toUpperCase.startsWith("VALUES")) valuesDf(rest)
+          else sqlDf(rest)
         if (src.columns.length != cols.length)
           throw new EngineException(
             s"wrong number of values: ${src.columns.length} given, ${cols.length} expected")
@@ -931,9 +958,12 @@ class Engine(val spark: SparkSession) {
   /** `graft.insert.smallBatchRows` (default 2 000): the row bound under
     * which an INSERT batch is small — validated on the driver and
     * written as one file. */
-  private def insertSmallBatchRows: Long =
-    try spark.conf.get("graft.insert.smallBatchRows", "2000").toLong
-    catch { case _: NumberFormatException => 2000L }
+  private def insertSmallBatchRows: Long = {
+    val key = "graft.insert.smallBatchRows"
+    val v = spark.conf.get(key, "2000")
+    v.toLongOption.getOrElse(
+      throw new EngineException(s"$key must be an integer row count, got '$v'"))
+  }
 
   /** A batch whose plan is statically bounded: `maxRows` within the
     * small-batch bound (VALUES, local relations, range(), LIMIT

@@ -1,6 +1,7 @@
 package graft.engine
 
 import graft.SparkFixture
+import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -301,6 +302,102 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterEach {
     // under the default bound, ordinary results are unchanged
     val Payload.Select(_, all) = g.execute("SELECT x FROM caprows"): @unchecked
     assert(all.length == 5)
+  }
+
+  /** One file per size (a bounded INSERT writes one file), so one scan
+    * partition each; file f holds f, f + files, f + 2·files, … */
+  private def filesTable(name: String, sizes: Int*): Unit = {
+    g.execute(s"CREATE TABLE $name (x INTEGER)")
+    for ((k, f) <- sizes.zipWithIndex)
+      g.execute(s"INSERT INTO $name SELECT id * ${sizes.length} + $f FROM range($k)")
+    assert(spark.table(s"tdb.$name").inputFiles.length == sizes.length)
+  }
+
+  private def withMaxResultRows[A](n: Int)(body: => A): A = {
+    g.maxResultRows = Some(n)
+    try body finally g.maxResultRows = Some(Engine.DefaultMaxResultRows)
+  }
+
+  test("maxResultRows fails an over-limit read when only the total across files exceeds it") {
+    filesTable("spread", 3, 3, 3, 3)
+    withMaxResultRows(5) {
+      for (read <- Seq[String => Any](g.execute, g.selectJson)) {
+        val e = intercept[EngineException](read("SELECT x FROM spread"))
+        assert(e.getMessage.contains("maxResultRows"), e.getMessage)
+      }
+    }
+  }
+
+  test("maxResultRows fails an over-limit read when one file alone exceeds it") {
+    filesTable("heavy", 10, 1, 1, 1)
+    withMaxResultRows(5) {
+      assert(intercept[EngineException](g.execute("SELECT x FROM heavy"))
+        .getMessage.contains("maxResultRows"))
+    }
+  }
+
+  test("a result of exactly maxResultRows rows across files is returned whole") {
+    filesTable("exact", 3, 3, 3, 3)
+    withMaxResultRows(12) {
+      assert(selectRows("SELECT x FROM exact").map(_.head).sortBy(_.asInstanceOf[Long])
+        == (0L until 12L))
+      assert(g.selectJson("SELECT x FROM exact").count(_ == '{') == 12)
+    }
+  }
+
+  test("ORDER BY across files is globally ordered, with and without LIMIT") {
+    filesTable("ord", 5, 4, 3, 2)
+    // file f holds f, f + 4, f + 8, …: 0–10 and 12, 13, 16
+    val all = Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 10L, 12L, 13L, 16L)
+    assert(selectRows("SELECT x FROM ord ORDER BY x DESC") == all.reverse.map(Seq(_)))
+    assert(selectRows("SELECT x FROM ord ORDER BY x DESC LIMIT 4")
+      == Seq(16L, 13L, 12L, 10L).map(Seq(_)))
+    withMaxResultRows(14) {
+      assert(selectRows("SELECT x FROM ord ORDER BY x") == all.map(Seq(_)))
+    }
+  }
+
+  test("VALUES lists keep the UNION's types and rows; foldable ones become a local relation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def check(sql: String, folded: Boolean, schema: StructType, rows: Seq[Seq[Any]]) = {
+      def sorted(rs: Seq[Seq[Any]]) = rs.map(_.map(String.valueOf)).sortBy(_.mkString(","))
+      val df = g.valuesDf(sql)
+      assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation] == folded, sql)
+      // the plain UNION rewrite is the answer a VALUES list had before the fold
+      val union = g.query(g.rewriteValues(sql))
+      assert(df.schema == union.schema && df.schema == schema, s"$sql: ${df.schema}")
+      val Payload.Select(cols, got) = g.execute(sql): @unchecked
+      assert(cols == schema.fieldNames.toSeq)
+      assert(sorted(got) == sorted(union.collect().toSeq.map(_.toSeq)), sql)
+      assert(sorted(got) == rows, sql)
+    }
+    def col(t: DataType, nullable: Boolean) = StructType(Seq(StructField("col1", t, nullable)))
+    check("VALUES (1), (2.5)", folded = true, col(DecimalType(11, 1), nullable = false),
+      Seq(Seq("1.0"), Seq("2.5")))
+    check("VALUES (NULL), (1)", folded = true, col(IntegerType, nullable = true),
+      Seq(Seq("1"), Seq("null")))
+    check("VALUES (DATE '2020-01-01'), ('2020-01-02')", folded = true,
+      col(DateType, nullable = true), Seq(Seq("2020-01-01"), Seq("2020-01-02")))
+    check("VALUES (1), (2) UNION VALUES (2), (3)", folded = false,
+      col(IntegerType, nullable = false), Seq(Seq("1"), Seq("2"), Seq("3")))
+    // a dialect function over literals folds like any expression
+    check("VALUES (CONVERT('INTEGER', '7')), (8)", folded = true,
+      col(LongType, nullable = true), Seq(Seq("7"), Seq("8")))
+    // a registered UDF is not foldable: the list stays on the UNION
+    spark.udf.register("values_twice", (x: Int) => x * 2)
+    check("VALUES (values_twice(3)), (8)", folded = false,
+      col(IntegerType, nullable = false), Seq(Seq("6"), Seq("8")))
+  }
+
+  test("a malformed graft.insert.smallBatchRows fails loudly, naming the key and value") {
+    g.execute("CREATE TABLE sbr (x INTEGER)")
+    val key = "graft.insert.smallBatchRows"
+    spark.conf.set(key, "2k")
+    try {
+      val e = intercept[EngineException](g.execute("INSERT INTO sbr VALUES (1)"))
+      assert(e.getMessage.contains(key) && e.getMessage.contains("'2k'"), e.getMessage)
+    } finally spark.conf.unset(key)
+    assert(g.execute("INSERT INTO sbr VALUES (1)") == Payload.Insert(1))
   }
 
   test("insert through vec runs the same constraint pipeline") {

@@ -15,10 +15,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * (incl. rows the WHERE doesn't match and an empty-match UPDATE).
   *
   * A bounded INSERT is validated in one driver pass over its
-  * collected rows: a 10-row VALUES into an AUTO_INCREMENT PRIMARY KEY
-  * table runs at most 3 jobs (collect, one key probe of the stored
-  * keys, the write), and a duplicate-key INSERT fails after at most 2
-  * (collect, probe) without writing. */
+  * collected rows. A foldable VALUES list is a local relation, so
+  * collecting it runs no job: a 10-row VALUES into an AUTO_INCREMENT
+  * PRIMARY KEY table runs at most 2 jobs (one key probe of the stored
+  * keys, the write), and a duplicate-key INSERT fails after at most 1
+  * (the probe) without writing.
+  *
+  * A scan-only SELECT, selectJson over it and an ORDER BY over it
+  * each run exactly 1 job over every partition, with the
+  * maxResultRows bound checked on the driver. */
 class SinglePassDmlSpec extends AnyFunSuite {
 
   private lazy val spark = SparkFixture.session
@@ -89,30 +94,64 @@ class SinglePassDmlSpec extends AnyFunSuite {
     }
   }
 
-  test("bounded VALUES INSERT into an AUTO_INCREMENT PRIMARY KEY table runs at most 3 jobs") {
+  test("10-row VALUES INSERT, AUTO_INCREMENT PK: at most 2 jobs") {
     g.execute("CREATE TABLE spdml.k (pk INTEGER AUTO_INCREMENT PRIMARY KEY, v INTEGER)")
     g.execute("INSERT INTO spdml.k (v) SELECT id FROM range(5000)")
     val values = (1 to 10).map(i => s"($i)").mkString(", ")
     val (p, jobs) = jobsDuring(g.execute(s"INSERT INTO spdml.k (v) VALUES $values"))
     assert(p == Payload.Insert(10))
-    assert(jobs <= 3, s"expected collect + key probe + write <= 3 jobs, saw $jobs")
+    assert(jobs <= 2, s"expected key probe + write <= 2 jobs, saw $jobs")
     g.execute("SELECT MIN(pk), MAX(pk), COUNT(DISTINCT pk) FROM spdml.k WHERE pk > 5000") match {
       case Payload.Select(_, rows) => assert(rows.head == Seq(5001L, 5010L, 10L))
       case other => fail(s"$other")
     }
   }
 
-  test("duplicate-key INSERT fails after at most 2 jobs") {
+  test("duplicate-key INSERT fails after at most 1 job") {
     val (_, jobs) = jobsDuring {
       val e = intercept[EngineException](
         g.execute("INSERT INTO spdml.k (pk, v) VALUES (6000, 0), (17, 0), (6001, 0)"))
       assert(e.getMessage.contains("duplicate entry in unique column pk"), e.getMessage)
       Payload.Success
     }
-    assert(jobs <= 2, s"expected collect + key probe <= 2 jobs, saw $jobs")
+    assert(jobs <= 1, s"expected key probe <= 1 job, saw $jobs")
     g.execute("SELECT COUNT(*) AS n FROM spdml.k") match {
       case Payload.Select(_, rows) => assert(rows.head.head == 5010L)
       case other => fail(s"$other")
     }
+  }
+
+  /** Four files, so four scan partitions: one bounded INSERT writes one file. */
+  private lazy val fourFiles = {
+    g.execute("CREATE TABLE spdml.r (k INTEGER, v INTEGER)")
+    for (f <- 0 until 4)
+      g.execute(s"INSERT INTO spdml.r SELECT id * 4 + $f, id FROM range(50)")
+    assert(spark.table("spdml.r").inputFiles.length == 4)
+    "spdml.r"
+  }
+
+  test("a scan-only SELECT over four files runs exactly 1 job") {
+    val t = fourFiles
+    val (p, jobs) = jobsDuring(g.execute(s"SELECT k FROM $t WHERE v < 10"))
+    p match {
+      case Payload.Select(_, rows) => assert(rows.map(_.head).toSet == (0L until 40L).toSet)
+      case other => fail(s"$other")
+    }
+    assert(jobs == 1, s"expected one job over every partition, saw $jobs")
+  }
+
+  test("selectJson over four files runs exactly 1 job") {
+    val t = fourFiles
+    var json = ""
+    val (_, jobs) = jobsDuring { json = g.selectJson(s"SELECT k FROM $t WHERE k < 3"); Payload.Success }
+    assert(json.count(_ == '{') == 3, json)
+    assert(jobs == 1, s"expected one job over every partition, saw $jobs")
+  }
+
+  test("an ORDER BY over four files runs exactly 1 job") {
+    val t = fourFiles
+    val (p, jobs) = jobsDuring(g.execute(s"SELECT k FROM $t WHERE v < 3 ORDER BY k DESC"))
+    assert(p == Payload.Select(Seq("k"), (0L until 12L).reverse.map(Seq(_))))
+    assert(jobs == 1, s"expected one job, saw $jobs")
   }
 }
