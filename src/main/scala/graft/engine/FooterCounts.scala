@@ -80,9 +80,9 @@ object FooterCounts {
   }
 
   /** Per-partition row counts of `df`'s scan, or None when the shape
-    * is not provably metadata-derivable. Must be called under the
-    * same session confs (minPartitionNum etc.) the batch's jobs will
-    * execute with. */
+    * is not provably metadata-derivable. The partitions follow the
+    * session's file-split confs, so the batch's jobs must run under
+    * the same confs; the engine sets none per statement. */
   def perPartitionCounts(spark: SparkSession, df: DataFrame): Option[Array[Long]] =
     try {
       pureParquetScan(df.queryExecution.optimizedPlan).flatMap { fs =>

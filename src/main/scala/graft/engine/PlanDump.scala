@@ -42,8 +42,8 @@ object PlanDump {
           graft.operators.Dedup.NumHashes / 2,
           graft.operators.Dedup.MaxBandBucket,
           materialize = false)),
-      // d14 declaratively (cache + eager checkpoint off) — the
-      // round-20 scan fan-out evidence frame.
+      // d14's gram pipeline, declaratively (cache + eager checkpoint
+      // off).
       "d14_internal" -> ((s: SS, d: String) =>
         graft.operators.Dedup.exactSubstringOn(
           graft.Tables.t(s, d, "documents")

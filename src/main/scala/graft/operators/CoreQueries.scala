@@ -474,23 +474,12 @@ object CoreQueries {
     // columns — the same statistics a warehouse catalog serves — so
     // the probe costs one footer parse (~ms), and the whole query is
     // ONE job: a point-equality scan on a literal key, pushed to the
-    // scan (row-group/partition pruning at scale, no join). This
-    // replaces the round-6 scoped-conf aggregate-pushdown probe: that
-    // was a full Spark job (~0.1 s floor) to learn one number the
-    // footer already states. Falls back to the footer-stats Spark
-    // aggregate (still scan-free) if a footer lacks statistics. */
+    // scan (row-group/partition pruning at scale, no join). Falls back
+    // to a plain min aggregate, one more job (~0.1 s floor), if a
+    // footer lacks statistics. */
     val l = t(spark, dir, "lineitem")
     val minKey = parquetFooterMin(spark, s"$dir/lineitem.parquet", "l_orderkey")
-      .getOrElse {
-        val conf = "spark.sql.parquet.aggregatePushdown"
-        val prev = spark.conf.getOption(conf)
-        spark.conf.set(conf, "true")
-        try l.agg(min(col("l_orderkey")).as("mk")).collect()(0).get(0)
-        finally prev match {
-          case Some(v) => spark.conf.set(conf, v)
-          case None    => spark.conf.unset(conf)
-        }
-      }
+      .getOrElse(l.agg(min(col("l_orderkey"))).head().get(0))
     l.filter(col("l_orderkey") === lit(minKey))
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
         col("l_quantity"), col("l_extendedprice"))

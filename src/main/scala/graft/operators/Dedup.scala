@@ -34,39 +34,12 @@ object Dedup {
   def portableHash(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Conditional scan fan-out (round 20, guide §2.5 "input skew: one
-    * huge unsplittable file … repartition immediately after the
-    * read"): a single-row-group parquet (this testdata's layout; any
-    * unsplittable or few-file input generally) gives the scan 1 task,
-    * so the heavy per-document kernel work downstream (span/gram
-    * explode, digests, signatures, map-side partial aggregation) runs
-    * on ONE core regardless of cluster size — measured as a 4.3 s
-    * single-task job dominating d13's profile at sf0.1×32. When the
-    * frame's scan parallelism is under half the cluster's, ONE hash
-    * exchange on doc_id fans the corpus out before the kernels.
-    * doc_id hashing is deterministic, so task retries re-produce the
-    * same placement (round-robin repartition would also pay its
-    * sortBeforeRepartition pass — guide §2.5/SPARK-38388); every
-    * downstream aggregate here is order-insensitive (collect_set /
-    * sorted collect_list / min / count), so results are unchanged.
-    * Scale behavior lives in the CONDITION, not a tuned constant: a
-    * real many-file corpus scans with parts*2 > target and this is a
-    * no-op. Streaming frames pass through untouched (toRdd is illegal
-    * on them; micro-batches arrive pre-partitioned). */
-  private[graft] def fanOutScan(docs: DataFrame): DataFrame =
-    if (docs.isStreaming) docs
-    else {
-      val target = docs.sparkSession.sparkContext.defaultParallelism
-      val parts = docs.queryExecution.toRdd.getNumPartitions
-      if (parts * 2 <= target) docs.repartition(target, col("doc_id")) else docs
-    }
-
   /** Word 3-gram shingles, distinct, as (doc_id, shingle) pairs. */
   private def shingles(spark: SparkSession, dir: String): DataFrame =
     shinglesOn(t(spark, dir, "documents"))
 
   private def shinglesOn(docs: DataFrame): DataFrame =
-    fanOutScan(docs)
+    docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
       .filter(size(col("w")) >= 3)
       // Native WordGrams kernel: the `array_distinct(transform(
@@ -193,7 +166,7 @@ object Dedup {
     // and keeps a rolling window minimum. Values are bit-identical
     // (same 60-bit md5 prefix, same window layout, same
     // first-occurrence distinct) — pinned by TextHashSpec.
-    fanOutScan(docs)
+    docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
       .filter(size(col("w")) >= WinnowK)
       .select(col("doc_id"),
@@ -412,9 +385,8 @@ object Dedup {
     *
     * Scale shape: each round is ONE shuffle join (edges × labels) +
     * ONE groupBy-min, both map-side combined; labels only ever
-    * decrease, so `sum(label)` is strictly monotone and detects the
-    * fixpoint exactly — computed as an observe() metric riding the
-    * checkpoint job itself, ONE driver action per round. Rounds = component
+    * decrease, so `sum(label)` is strictly monotone and one tiny agg
+    * per round detects the fixpoint exactly. Rounds = component
     * diameter (see [[MaxCcIters]]). Every round's result is
     * localCheckpoint'ed so the plan stays flat instead of growing a
     * join-per-iteration lineage. At 1000-executor scale this is the
@@ -443,25 +415,17 @@ object Dedup {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint(true)
-    // Convergence probe FUSED into the checkpoint action (round 20,
-    // guide §5 driver / round-19 verdict item 4): the loop used to pay
-    // TWO driver actions per round — the eager localCheckpoint, then a
-    // separate sum(lbl) job over the checkpointed blocks — and at any
-    // scale the per-round barrier latency is driver-bound. observe()
-    // plants a CollectMetrics node whose sum is aggregated by the SAME
-    // job that materializes the checkpoint (Dataset.checkpoint runs
-    // through withAction, so the observation's listener fires), going
-    // 2 actions/round → 1. Observed metrics are exactly-once under
-    // task retry (SPARK-29345 — only successful tasks contribute),
-    // unlike a raw accumulator read. The EAGER flat-lineage checkpoint
-    // itself is load-bearing and stays: the lazy-persist variant was
-    // measured fatal in round 19 (51 → 672 tasks — nested-lineage
-    // rounds stopped hitting the cache). labels is non-empty here
-    // (pairs.isEmpty returned above), so the sum is never NULL.
+    // Each round's labels are checkpointed EAGERLY so the next round
+    // joins against a flat LogicalRDD: a lazy persist lets every round
+    // nest the previous round's join inside its lineage, and once the
+    // nested plans stop matching the cached ones each round recomputes
+    // the whole chain (measured 51 → 672 tasks). The convergence sum is
+    // then a tiny aggregate over the checkpointed blocks. labels is
+    // non-empty here (pairs.isEmpty returned above), so the sum is
+    // never NULL.
     def checkpointWithSum(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, sum(col("lbl")).as("s")).localCheckpoint(true)
-      (ck, obs.get("s").asInstanceOf[Long])
+      val ck = df.localCheckpoint(true)
+      (ck, ck.agg(sum(col("lbl"))).head().getLong(0))
     }
     var (labels, prevSum) = checkpointWithSum(
       edges.select(col("src").as("id")).distinct()
@@ -990,7 +954,7 @@ object Dedup {
     * one definition, two execution modes). */
   def spanFps(docs: DataFrame): DataFrame = {
     val w = SpanWords
-    fanOutScan(docs) // streaming-safe: the twin's frame passes through
+    docs
       .select(col("doc_id"), explode(split(col("text"), "\\n\\s*\\n")).as("para"))
       .select(col("doc_id"),
         filter(split(trim(col("para")), "\\s+"), x => length(x) > lit(0)).as("ws"))
@@ -1075,7 +1039,7 @@ object Dedup {
     // executor CPU on this corpus — for a 9% shuffle saving; the
     // per-distinct-content form below keeps the kernel off the
     // over-cap contents entirely, exactly as before.)
-    val grouped = fanOutScan(docs)
+    val grouped = docs
       .select(col("doc_id"), explode(split(col("text"), "\\n\\s*\\n")).as("para"))
       .select(col("doc_id"),
         filter(split(trim(col("para")), "\\s+"), x => length(x) > lit(0)).as("pws"))
@@ -1348,7 +1312,7 @@ object Dedup {
   private[graft] def exactSubstringOn(docs: DataFrame, w: Int,
                                       postingCap: Int,
                                       materialize: Boolean = true): DataFrame = {
-    val grams1 = fanOutScan(docs)
+    val grams1 = docs
       .select(col("doc_id"),
         filter(split(trim(col("text")), "\\s+"), x => length(x) > lit(0)).as("ws"))
       .filter(size(col("ws")) >= w)

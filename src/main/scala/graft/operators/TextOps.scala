@@ -885,11 +885,7 @@ object TextOps {
   def bigramPredictabilityOn(docs: DataFrame,
       broadcastCap: Long = BigramModelBroadcastCap,
       materialize: Boolean = true): DataFrame = {
-    // Conditional scan fan-out (guide §2.5 — see Dedup.fanOutScan):
-    // bgs feeds BOTH the model aggregate and the probe join, and each
-    // consumer re-derives the explode from the scan, so a single-task
-    // scan serializes the bigram kernel twice per run.
-    val bgs = Dedup.fanOutScan(docs)
+    val bgs = docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("ws"))
       // Native WordBigrams kernel (short docs yield an empty array —
       // the retired lambda needed an explicit guard because

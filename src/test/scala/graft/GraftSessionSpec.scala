@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SPARK_GRAFT_EXTRA_CONF parsing, and the structural rule that the
-  * session conf is written only in [[GraftSession]]. */
+/** SPARK_GRAFT_EXTRA_CONF parsing, and the structural rules that
+  * sessions are built only in [[GraftSession]] and that the engine and
+  * the operators never write the session conf. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("a well-formed conf list parses, later keys overriding earlier ones") {
@@ -26,20 +27,34 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
+  private def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+
+  private def matching(files: Seq[java.io.File], re: scala.util.matching.Regex): Seq[java.io.File] =
+    files.filter(f => re.findFirstIn(
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).nonEmpty)
+
   test("sessions are built only in GraftSession") {
-    val builderCall = """SparkSession\s*\.\s*builder\s*\(""".r
-    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
-      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-      }
     val files = Seq("src/main", "src/test").flatMap(d => scalaFiles(new java.io.File(d)))
     assert(files.exists(_.getName == "GraftSession.scala"), "source tree not found")
-    val offenders = files.filterNot(_.getName == "GraftSession.scala").filter { f =>
-      builderCall.findFirstIn(
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).nonEmpty
-    }
+    val offenders = matching(files.filterNot(_.getName == "GraftSession.scala"),
+      """SparkSession\s*\.\s*builder\s*\(""".r)
     assert(offenders.isEmpty,
       s"build sessions through graft.GraftSession, not in: ${offenders.mkString(", ")}")
+  }
+
+  test("no statement or operator writes the session conf") {
+    // A per-statement conf write is shared by every concurrent
+    // statement on the session, so two racing restores can leave a
+    // value set for good.
+    val engine = new java.io.File("src/main/scala/graft/engine/Engine.scala")
+    val files = engine +: scalaFiles(new java.io.File("src/main/scala/graft/operators"))
+    assert(engine.isFile && files.size > 1, "source tree not found")
+    val offenders = matching(files, """\bconf\s*\.\s*(?:set|unset|setConfString|unsetConf)\s*\(""".r)
+    assert(offenders.isEmpty,
+      s"session conf written in: ${offenders.mkString(", ")}")
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkFixture
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** d14 exact-substring dedup, arbitrated against an O(n·m) dynamic-
@@ -106,5 +107,29 @@ class ExactSubstrSpec extends AnyFunSuite {
       4L -> (runs(1).take(22) ++ pool("de", 13) ++ runs(2)).mkString(" "),
       5L -> pool("df", 40).mkString(" "))
     arbitrate(docs)
+  }
+
+  test("d14 (and d2, d13) results do not depend on input partitioning") {
+    import spark.implicits._
+    // Paragraph spans for d13, long shared token runs for d14 and
+    // overlapping 3-gram sets for d2: every operator finds pairs here.
+    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val tpl = "terms of service apply to all users of this site"
+    val edited = "terms of service apply to all members of this site"
+    val docs = Seq(
+      1L -> s"$a\n\n$tpl", 2L -> s"$a\n\n$edited",
+      3L -> s"one two three four five six seven eight nine ten\n\n$a",
+      4L -> "unrelated words entirely different content here nothing shared")
+      .toDF("doc_id", "text")
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "d14" -> (d => Dedup.exactSubstringOn(d, 5, Dedup.ExactSubstrPostingCap)),
+      "d2" -> (d => Dedup.ngramJaccardOn(d)),
+      "d13" -> (d => Dedup.spanMinhashDupsOn(d, Dedup.NumHashes / 2, Dedup.MaxBandBucket)))
+    for ((name, op) <- ops) {
+      def rows(parts: Int) = op(docs.repartition(parts)).collect().toSet
+      val one = rows(1)
+      assert(one.nonEmpty, s"$name found no pairs")
+      assert(rows(spark.sparkContext.defaultParallelism) == one, name)
+    }
   }
 }
