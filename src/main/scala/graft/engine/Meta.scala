@@ -74,6 +74,11 @@ final case class TableMeta(
   def schema: StructType = StructType(columns.map(_.sparkField))
   def column(name: String): Option[ColumnMeta] =
     columns.find(_.name.equalsIgnoreCase(name))
+  /** The columns every write path keeps unique: UNIQUE columns
+    * (PRIMARY KEY included) and the columns of unique indexes. */
+  def uniqueColumns: Seq[ColumnMeta] =
+    columns.filter(c => c.unique ||
+      indexes.exists(i => i.unique && i.column.equalsIgnoreCase(c.name)))
 }
 
 /** Engine-side registry of constraint metadata, keyed by lowercase

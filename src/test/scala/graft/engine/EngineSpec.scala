@@ -257,6 +257,26 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterEach {
       g.execute("INSERT INTO ix VALUES (1, 'again')")).getMessage.contains("duplicate"))
   }
 
+  test("UPDATE honors a unique index on the WHERE and whole-table paths") {
+    g.execute("CREATE TABLE ux (k INTEGER, v INTEGER)")
+    g.execute("INSERT INTO ux VALUES (1, 10), (2, 20), (3, 30)")
+    g.execute("CREATE UNIQUE INDEX ux_k ON ux (k)")
+    assert(intercept[EngineException](
+      g.execute("INSERT INTO ux VALUES (1, 99)")).getMessage.contains("duplicate"))
+    val before = selectRows("SELECT k, v FROM ux ORDER BY k")
+    assert(intercept[EngineException](
+      g.execute("UPDATE ux SET k = 1 WHERE k = 2")).getMessage
+      .contains("duplicate entry in unique column k"))
+    assert(selectRows("SELECT k, v FROM ux ORDER BY k") == before)
+    assert(intercept[EngineException](
+      g.execute("UPDATE ux SET k = 7")).getMessage
+      .contains("duplicate entry in unique column k"))
+    assert(selectRows("SELECT k, v FROM ux ORDER BY k") == before)
+    // a key-preserving UPDATE still passes
+    assert(g.execute("UPDATE ux SET k = 4 WHERE k = 3") == Payload.Update(1))
+    assert(selectRows("SELECT k FROM ux ORDER BY k") == Seq(Seq(1L), Seq(2L), Seq(4L)))
+  }
+
   test("multi-column index is rejected like the reference") {
     g.execute("CREATE TABLE mi (a INTEGER, b INTEGER)")
     val e = intercept[EngineException](g.execute("CREATE INDEX i2 ON mi (a, b)"))

@@ -196,6 +196,7 @@ class OperatorFacadeSpec extends AnyFunSuite {
     assert(shape.exists(_ == "auto_increment: id (driver row-order fill)"), shape.mkString("\n"))
     assert(shape.exists(_ == "not_null checks: [name]"), shape.mkString("\n"))
     assert(shape.exists(_ == "unique checks: [name]"), shape.mkString("\n"))
+    assert(shape.exists(_ == "unique check name: driver key probe"), shape.mkString("\n"))
     // dry run: nothing written, auto counter untouched
     assert(g.query("SELECT count(*) AS n FROM xg3.u").head.getLong(0) == 0L)
     g.execute("INSERT INTO xg3.u (name) VALUES ('a')")
@@ -225,6 +226,13 @@ class OperatorFacadeSpec extends AnyFunSuite {
         "SELECT l_orderkey, l_quantity FROM lineitem ORDER BY l_quantity")
     assert(shuffled.exists(l => l.startsWith("staging: lazy 2-replica disk localCheckpoint")),
       shuffled.mkString("\n"))
+    // each UNIQUE column names its check: fresh auto ids take the
+    // stored-range probe, any other key the distributed group-by
+    g.execute("CREATE TABLE xpdb.pk (id INTEGER AUTO_INCREMENT PRIMARY KEY, okey INTEGER UNIQUE)")
+    val keyed = shapeOf("EXPLAIN INSERT INTO xpdb.pk (okey) SELECT l_orderkey FROM lineitem")
+    assert(keyed.exists(_ == "unique check id: fresh auto ids: stored-range probe"),
+      keyed.mkString("\n"))
+    assert(keyed.exists(_ == "unique check okey: distributed group-by"), keyed.mkString("\n"))
     // dry run: nothing was written
     assert(g.query("SELECT count(*) AS n FROM xpdb.li").head.getLong(0) == 0L)
     g.execute("DROP DATABASE xpdb")

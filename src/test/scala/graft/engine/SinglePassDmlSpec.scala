@@ -23,7 +23,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * A scan-only SELECT, selectJson over it and an ORDER BY over it
   * each run exactly 1 job over every partition, with the
-  * maxResultRows bound checked on the driver. */
+  * maxResultRows bound checked on the driver.
+  *
+  * Bulk loads and CREATE INDEX have their job counts pinned in
+  * [[BulkLoadSpec]], which shares [[SinglePassDmlSpec.jobsDuring]]. */
 class SinglePassDmlSpec extends AnyFunSuite {
 
   private lazy val spark = SparkFixture.session
@@ -35,26 +38,8 @@ class SinglePassDmlSpec extends AnyFunSuite {
     e
   }
 
-  /** Count jobs started while `body` runs (listener events are async:
-    * poll until the counter is quiet before reading it). */
-  private def jobsDuring(body: => Payload): (Payload, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val p = body
-      var last = -1
-      var quiet = 0
-      while (quiet < 2) {
-        Thread.sleep(150)
-        val cur = n.get()
-        if (cur == last) quiet += 1 else { quiet = 0; last = cur }
-      }
-      (p, n.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def jobsDuring(body: => Payload): (Payload, Int) =
+    SinglePassDmlSpec.jobsDuring(spark)(body)
 
   test("UPDATE runs discovery + one rewrite scan + one write, exact count") {
     g.execute("CREATE TABLE spdml.t (k INTEGER, v INTEGER)")
@@ -153,5 +138,29 @@ class SinglePassDmlSpec extends AnyFunSuite {
     val (p, jobs) = jobsDuring(g.execute(s"SELECT k FROM $t WHERE v < 3 ORDER BY k DESC"))
     assert(p == Payload.Select(Seq("k"), (0L until 12L).reverse.map(Seq(_))))
     assert(jobs == 1, s"expected one job, saw $jobs")
+  }
+}
+
+
+object SinglePassDmlSpec {
+  /** Count jobs started while `body` runs (listener events are async:
+    * poll until the counter is quiet before reading it). */
+  def jobsDuring(spark: org.apache.spark.sql.SparkSession)(body: => Payload): (Payload, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val p = body
+      var last = -1
+      var quiet = 0
+      while (quiet < 2) {
+        Thread.sleep(150)
+        val cur = n.get()
+        if (cur == last) quiet += 1 else { quiet = 0; last = cur }
+      }
+      (p, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 }
