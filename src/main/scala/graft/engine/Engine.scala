@@ -23,7 +23,7 @@ import SqlText._
   *    src/executor/alter_row/insert.rs:10-98, validate_unique.rs:23-160,
   *    src/database/auto_increment.rs:6-33) — is enforced by this
   *    class's write path. A statically bounded batch (a plan whose
-  *    maxRows is at most `graft.insert.smallBatchRows`) is collected
+  *    maxRows is at most [[Engine.SmallBatchRows]]) is collected
   *    once and validated in one driver pass, and UNIQUE against stored
   *    rows is a key probe that reads only the row groups the batch
   *    keys can hit; any other batch is validated by distributed
@@ -39,9 +39,11 @@ import SqlText._
   *    files are swapped in through the manifest-bracketed rename
   *    protocol COMPACT uses (see [[swapIn]]) — untouched files
   *    survive, readers observe only the renames, and a failed check
-  *    or a crash leaves or converges to a consistent table.
-  *    Whole-table statements and single-file CSV storage overwrite
-  *    what they read, so they rewrite from a checkpoint.
+  *    or a crash leaves or converges to a consistent table. Without a
+  *    WHERE every file is affected: UPDATE lists them from the
+  *    directory, and DELETE and TRUNCATE swap them out for nothing.
+  *    Single-file CSV storage overwrites what it reads, so it
+  *    rewrites from a checkpoint ([[rewriteCsvFile]]).
   *  - **CREATE INDEX** records metadata and physically re-clusters the
   *    table by the indexed column (range partition + sort), so parquet
   *    row-group min/max stats provide the range pruning the
@@ -942,24 +944,14 @@ class Engine(val spark: SparkSession) {
       stable(out.queryExecution.optimizedPlan))
   }
 
-  /** `graft.insert.smallBatchRows` (default 2 000): the row bound under
-    * which an INSERT batch is small — validated on the driver and
-    * written as one file. */
-  private def insertSmallBatchRows: Long = {
-    val key = "graft.insert.smallBatchRows"
-    val v = spark.conf.get(key, "2000")
-    v.toLongOption.getOrElse(
-      throw new EngineException(s"$key must be an integer row count, got '$v'"))
-  }
-
-  /** A batch whose plan is statically bounded: `maxRows` within the
-    * small-batch bound (VALUES, local relations, range(), LIMIT
+  /** A batch whose plan is statically bounded: `maxRows` within
+    * [[Engine.SmallBatchRows]] (VALUES, local relations, range(), LIMIT
     * sources). Such a batch is collected once and validated in one
     * driver pass; any other batch — a large or unknown-size
     * INSERT…SELECT, a generator — is validated by distributed jobs and
     * keeps its partitioning. */
   private def boundedBatch(out: DataFrame): Boolean =
-    out.queryExecution.optimizedPlan.maxRows.exists(_ <= insertSmallBatchRows)
+    out.queryExecution.optimizedPlan.maxRows.exists(_ <= Engine.SmallBatchRows)
 
   /** Shared validated write path (SQL INSERT and [[insertVec]]):
     * position columns → coerce types → apply DEFAULTs → NOT NULL
@@ -1276,10 +1268,9 @@ class Engine(val spark: SparkSession) {
         if (tm.jdbc) throw new EngineException(
           s"UPDATE on JDBC-mounted table $db.$tbl is not supported (INSERT is); " +
             "run the update in the external database")
-        withDbWriter(db) {
-        // First writer after a crashed COMPACT swap converges the
-        // table before reading its file layout (manifest protocol).
-        if (tm.csvPath.isEmpty && tm.xlsxPath.isEmpty) { repairCompactSwap(db, tbl); syncExternalMeta(db, tbl) }
+        // The first writer after a crashed swap converges the table
+        // before reading its file layout (manifest protocol).
+        withTableWriter(db, tbl) {
         val cond = Option(wherePart).map(dialectExpr).getOrElse(lit(true))
         val assigns: Map[String, Column] = splitTop(setPart, ',').map { a =>
           val eq = a.indexOf('=')
@@ -1294,7 +1285,7 @@ class Engine(val spark: SparkSession) {
             .map(a => when(cond, a).otherwise(col(cm.name)).as(cm.name))
             .getOrElse(col(cm.name))
         }
-        if (wherePart != null && tm.csvPath.isEmpty) {
+        if (tm.csvPath.isEmpty) {
           // Copy-on-write at parquet-FILE granularity: a narrow
           // discovery scan (predicate columns only, filters pushed to
           // the parquet reader) finds the files holding matches; only
@@ -1302,8 +1293,10 @@ class Engine(val spark: SparkSession) {
           // staging, and swapped in — every other file survives
           // untouched. With the CREATE INDEX clustered layout, a
           // selective UPDATE on the indexed column touches O(matching
-          // range) files, not the table.
-          val affected = inputFiles(t.filter(cond))
+          // range) files, not the table. Without a WHERE every file is
+          // affected, listed from the directory with no job.
+          val affected =
+            if (wherePart == null) dataFiles(db, tbl).map(_._1) else inputFiles(t.filter(cond))
           if (affected.isEmpty) return Payload.Update(0L)
           // Matched and scanned rows (every row scanned is rewritten,
           // UPDATE is 1:1 — the parity gate's expectation) and the
@@ -1319,19 +1312,23 @@ class Engine(val spark: SparkSession) {
               count(lit(1)).as("n_rows") +: notNullAssigned.map(cm =>
                 coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${cm.name}")): _*)
             .drop("__graft_m")
-          stagedDmlSwap(db, tbl, out, affected) { staged =>
+          stagedSwap(db, tbl, affected, Some(out)) { staged =>
             val m = obs.get
             notNullAssigned.foreach { cm =>
               if (m(s"__nn_${cm.name}").asInstanceOf[Long] > 0)
                 throw new EngineException(s"null value in NOT NULL column ${cm.name}")
             }
             tm.uniqueColumns.filter(c => assigns.contains(c.name)).foreach { cm =>
-              // duplicates can span rewritten and untouched rows: check
-              // the union (one column scanned from the untouched files)
-              val untouched = t.filter(!input_file_name().isin(affected: _*))
-                .select(col(cm.name))
-              val dups = untouched.unionAll(staged.select(col(cm.name)))
-                .filter(col(cm.name).isNotNull)
+              // Duplicates can span rewritten and untouched rows: check
+              // the union (one column scanned from the untouched files).
+              // Without a WHERE nothing is untouched — and dataFiles'
+              // `file:/` URIs never string-match input_file_name()'s
+              // `file:///` ones, so the staged rows are checked alone.
+              val rewritten = staged.select(col(cm.name))
+              val scope = if (wherePart == null) rewritten
+                else t.filter(!input_file_name().isin(affected: _*))
+                  .select(col(cm.name)).unionAll(rewritten)
+              val dups = scope.filter(col(cm.name).isNotNull)
                 .groupBy(col(cm.name)).count().filter(col("count") > 1)
               if (dups.limit(1).count() > 0)
                 throw new EngineException(s"duplicate entry in unique column ${cm.name}")
@@ -1339,15 +1336,13 @@ class Engine(val spark: SparkSession) {
             m("n_rows").asInstanceOf[Long]
           }
           val n = obs.get("n_matched").asInstanceOf[Long]
-          spark.catalog.refreshTable(s"`$db`.`$tbl`")
-          tm.xlsxPath.foreach(syncXlsx)
           persistMeta(db, tbl) // epoch stamp: other processes refresh
           maybeAutoCompact(db, tbl) // opt-in, under the held writer lock
           Payload.Update(n)
         } else {
-          // Whole-table rewrite: no WHERE (every file is affected
-          // anyway) or CSV storage (one local file). The affected-row
-          // count is still an observed metric on the single scan.
+          // CSV storage is one local file: a whole rewrite from a
+          // checkpoint, the affected-row count an observed metric on
+          // the single scan.
           val obs = org.apache.spark.sql.Observation()
           val out = t
             .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
@@ -1364,8 +1359,7 @@ class Engine(val spark: SparkSession) {
             if (dups.limit(1).count() > 0)
               throw new EngineException(s"duplicate entry in unique column ${cm.name}")
           }
-          overwriteTable(db, tbl, out)
-          persistMeta(db, tbl) // epoch stamp: other processes refresh
+          rewriteCsvFile(db, tbl, tm.csvPath.get, out)
           Payload.Update(n)
         }
         }
@@ -1382,18 +1376,18 @@ class Engine(val spark: SparkSession) {
         if (tm.jdbc) throw new EngineException(
           s"DELETE on JDBC-mounted table $db.$tbl is not supported (INSERT is); " +
             "run the delete in the external database")
-        withDbWriter(db) {
-        // First writer after a crashed COMPACT swap converges the
-        // table before reading its file layout (manifest protocol).
-        if (tm.csvPath.isEmpty && tm.xlsxPath.isEmpty) { repairCompactSwap(db, tbl); syncExternalMeta(db, tbl) }
+        // The first writer after a crashed swap converges the table
+        // before reading its file layout (manifest protocol).
+        withTableWriter(db, tbl) {
         val t = spark.table(s"`$db`.`$tbl`")
         // A foldable condition (no WHERE, or WHERE 1=1 style) turns
         // the keep-filter into a constant — the optimizer then
         // replaces the whole scan with an empty relation, CollectMetrics
-        // included, so the observed count would never arrive. Those
-        // degenerate shapes get their own counted-truncation path
-        // (parquet count() is a metadata job); real predicates take
-        // the single-scan observe path.
+        // included, so the observed count would never arrive. When it
+        // folds to true, every file goes: the count comes from the
+        // footers and the files are swapped out for nothing, with no
+        // job (CSV counts its one file). Real predicates take the
+        // single-scan observe path.
         val condTreeOpt = Option(wherePart).map(dialectExprTree)
         val condOpt = condTreeOpt.map(org.apache.spark.sql.graft.Shims.column)
         val foldedTrue = condTreeOpt match {
@@ -1409,9 +1403,14 @@ class Engine(val spark: SparkSession) {
         }
         (condOpt, foldedTrue) match {
           case (_, Some(false)) => Payload.Delete(0L)
-          case (_, Some(true)) =>
+          case (_, Some(true)) if tm.csvPath.isDefined =>
             val n = t.count()
-            overwriteTable(db, tbl, t.limit(0).localCheckpoint(eager = true, Engine.StagingLevel))
+            rewriteCsvFile(db, tbl, tm.csvPath.get, t.limit(0))
+            Payload.Delete(n)
+          case (_, Some(true)) =>
+            val origs = dataFiles(db, tbl).map(_._1)
+            val n = footerRowCount(hadoopConf, origs.map(pathOfUri))
+            stagedSwap(db, tbl, origs, None)(_ => 0L)
             persistMeta(db, tbl) // epoch stamp: other processes refresh
             Payload.Delete(n)
           case (Some(cond), None) if tm.csvPath.isEmpty =>
@@ -1436,12 +1435,10 @@ class Engine(val spark: SparkSession) {
               // DELETE keeping zero rows stages zero files; the
               // manifest's empty_ok marker keeps its repair
               // roll-FORWARD (see swapIn).
-              stagedDmlSwap(db, tbl, kept, affected) { _ =>
+              stagedSwap(db, tbl, affected, Some(kept)) { _ =>
                 obs.get("n_rows").asInstanceOf[Long] - obs.get("n_matched").asInstanceOf[Long]
               }
               val n = obs.get("n_matched").asInstanceOf[Long]
-              spark.catalog.refreshTable(s"`$db`.`$tbl`")
-              tm.xlsxPath.foreach(syncXlsx)
               persistMeta(db, tbl) // epoch stamp: other processes refresh
               maybeAutoCompact(db, tbl) // opt-in, under the held writer lock
               Payload.Delete(n)
@@ -1454,8 +1451,7 @@ class Engine(val spark: SparkSession) {
               .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
               .filter(!cond || cond.isNull).localCheckpoint(eager = true, Engine.StagingLevel)
             val n = obs.get("n_matched").asInstanceOf[Long]
-            overwriteTable(db, tbl, kept)
-            persistMeta(db, tbl) // epoch stamp: other processes refresh
+            rewriteCsvFile(db, tbl, tm.csvPath.get, kept)
             Payload.Delete(n)
           case (None, None) => throw new IllegalStateException("unreachable")
         }
@@ -1481,26 +1477,14 @@ class Engine(val spark: SparkSession) {
   private def pathOfUri(uri: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(java.net.URI.create(uri))
 
-  private def overwriteTable(db: String, tbl: String, df: DataFrame): Unit = {
-    meta.get(db, tbl).flatMap(_.csvPath) match {
-      case Some(path) =>
-        // CSV storage is one local file — rewrite it whole (like the
-        // reference CSV backend), then refresh the scan cache.
-        rewriteCsvFile(db, tbl, path, df)
-      case None =>
-        df.write.mode(SaveMode.Overwrite).insertInto(s"`$db`.`$tbl`")
-        meta.get(db, tbl).flatMap(_.xlsxPath).foreach(syncXlsx)
-    }
-  }
-
-  /** Full-file rewrite (reference CSV backend parity), but streamed:
-    * rows go through toLocalIterator into a temp file next to the
-    * target, then an atomic rename swaps it in — driver memory is
-    * bounded by one partition and readers never see a half-written
-    * file. toLocalIterator runs one job per partition, so a `df` with
-    * real work behind it comes checkpointed: the whole-table UPDATE and
-    * DELETE paths and CSV CREATE INDEX pass an eager checkpoint,
-    * TRUNCATE an empty frame. */
+  /** A CSV table's one file rewritten whole (reference CSV backend
+    * parity), but streamed: rows go through toLocalIterator into a
+    * temp file next to the target, then an atomic rename swaps it in —
+    * driver memory is bounded by one partition and readers never see a
+    * half-written file. toLocalIterator runs one job per partition, so
+    * a `df` with real work behind it comes checkpointed: UPDATE, DELETE
+    * with a WHERE and CREATE INDEX pass an eager checkpoint; TRUNCATE
+    * and an unconditional DELETE pass an empty frame. */
   private def rewriteCsvFile(db: String, tbl: String, path: String, df: DataFrame): Unit = {
     val tm = meta.get(db, tbl).get
     val target = java.nio.file.Paths.get(path).toAbsolutePath
@@ -1614,68 +1598,31 @@ class Engine(val spark: SparkSession) {
     * (ADD/DROP/RENAME COLUMN). CSV tables reject ALTER like the
     * reference's per-backend exception list (tests/databases/csv.rs:30-35).
     *
-    * Managed parquet tables on an atomic-rename store take the SAME
-    * manifest-bracketed staged swap as COMPACT and the CoW DML
-    * (round-18 verdict task 3): the new-shape rows land in a hidden
-    * staging dir, are row-parity-gated against the originals' footer
-    * counts (ALTER never changes the row count — both sides are
-    * driver-side metadata reads, zero extra jobs), and enter through
-    * [[swapIn]] with the NEW constraint record riding the manifest.
-    * The previous flow was localCheckpoint → DROP TABLE → CREATE →
-    * append: a crash between the DROP and the append lost the table
-    * outright (the checkpoint dies with the JVM), and a crash before
-    * persistMeta silently dropped every constraint. Now every crash
-    * point converges through the shared repair to a consistent
-    * (files, meta) pair — old shape or new, never half. The staged
-    * write also replaces the checkpoint: the originals stay readable
-    * until the swap, so the rewrite is one scan→write job instead of
-    * checkpoint-write + read + write.
+    * A table with a [[swapDir]] takes the [[stagedSwap]] every
+    * rewriting statement takes: the new-shape rows land in a hidden
+    * `.alter_staging_*` directory, are row-parity-gated against the
+    * originals' footer counts (ALTER never changes the row count —
+    * driver-side metadata reads, no job), and enter with the NEW
+    * constraint record riding the manifest, so every crash point
+    * converges to a consistent (files, meta) pair — old shape or new,
+    * never half. The originals stay readable until the swap, so the
+    * rewrite is one scan→write job.
     *
-    * XLSX-mirrored tables and stores without atomic rename keep the
-    * drop+recreate flow (the book rewrite is the durability story for
-    * the former; half a swap protocol on a copy+delete "rename" is
-    * worse than none for the latter). */
+    * Without a swap directory (a store without atomic rename, a JDBC
+    * table) ALTER keeps its own fallback, the one case [[stagedSwap]]'s
+    * does not cover because the catalog schema changes:
+    * localCheckpoint → DROP TABLE → CREATE → append. A crash between
+    * the DROP and the append loses the table. */
   private def rewriteTable(db: String, tbl: String, newMeta: TableMeta, data: DataFrame): Unit = {
     meta.get(db, tbl).foreach { tm =>
       if (tm.csvPath.isDefined)
         throw new EngineException("ALTER TABLE is not supported for CSV tables")
     }
-    val conf = hadoopConf
-    val tdirOpt =
-      if (meta.get(db, tbl).exists(m => m.xlsxPath.isDefined || m.jdbc)) None
-      else tableDirectory(db, tbl)
-        .filter(TableFs.isDirectoryStrict(conf, _))
-        .filter(d => atomicRenameOk(conf, d))
-    tdirOpt match {
-      case Some(tdir) =>
+    swapDir(db, tbl) match {
+      case Some(_) =>
         val origUris = dataFiles(db, tbl).map(_._1)
-        val staging = new org.apache.hadoop.fs.Path(tdir,
-          s".alter_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-        try {
-          data.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-          val counted = TableFs.listData(conf, staging)
-            .map { case (p, _) => p -> footerRowCount(conf, Seq(p)) }
-          val landed = counted.map(_._2).sum
-          val expect = footerRowCount(conf, origUris.map(pathOfUri))
-          if (landed != expect)
-            throw new EngineException(
-              s"ALTER rewrite aborted: staged files hold $landed rows != " +
-                s"original $expect — staging discarded, originals untouched")
-          // The new record rides the manifest, epoch-bumped past the
-          // session's view so other processes adopt the new shape.
-          val stamped = meta.get(db, tbl) match {
-            case Some(cur) => newMeta.copy(
-              autoCounter = math.max(newMeta.autoCounter, cur.autoCounter),
-              epoch = cur.epoch + 1,
-              counterDirty = cur.counterDirty)
-            case None => newMeta.copy(epoch = newMeta.epoch + 1)
-          }
-          swapIn(db, tbl, conf, tdir, counted.filter(_._2 > 0).map(_._1),
-            origUris, Some(MetaJson.render(stamped)))
-          meta.put(db, tbl, stamped)
-          syncCatalogShape(db, tbl, stamped.schema)
-          spark.catalog.refreshTable(s"`$db`.`$tbl`")
-        } finally TableFs.deleteRecursively(conf, staging)
+        val rows = footerRowCount(hadoopConf, origUris.map(pathOfUri))
+        stagedSwap(db, tbl, origUris, Some(data), Some(newMeta), ".alter_staging_")(_ => rows)
       case None =>
         val out = data.localCheckpoint(eager = true, Engine.StagingLevel)
         spark.sql(s"DROP TABLE `$db`.`$tbl`")
@@ -1706,46 +1653,21 @@ class Engine(val spark: SparkSession) {
         // racing an INSERT could drop the insert's fresh files.
         withTableWriter(db, tbl) {
           val tm = requireMeta(db, tbl)
-          val conf = hadoopConf
-          val swapDir =
-            if (tm.csvPath.isDefined || tm.xlsxPath.isDefined || tm.jdbc) None
-            else tableDirectory(db, tbl)
-              .filter(TableFs.isDirectoryStrict(conf, _))
-              .filter(d => atomicRenameOk(conf, d))
-          swapDir match {
-            case Some(tdir) =>
-              // Manifest-bracketed EMPTY swap (staged = none, empty_ok)
-              // instead of SQL TRUNCATE: Spark's TRUNCATE deletes the
-              // whole directory — `.graft_meta` included — so a crash
-              // before the re-persist below silently lost the
-              // constraint record (the lossy-fallback remount: every
-              // column nullable, UNIQUE/AUTO_INCREMENT forgotten).
-              // Retiring only the DATA files through the same swapIn
-              // as COMPACT/DML/ALTER keeps the control file out of the
-              // blast radius entirely, and the counter reset
-              // (reference alter_table/truncate.rs:8-40) rides the
-              // manifest's meta line — a crash at ANY point converges
-              // through the shared repair to (empty table, reset
-              // counter, full constraints).
-              val origs = dataFiles(db, tbl).map(_._1)
-              val stamped = tm.copy(autoCounter = 1L, counterDirty = false,
-                epoch = tm.epoch + 1)
-              swapIn(db, tbl, conf, tdir, Seq.empty, origs,
-                Some(MetaJson.render(stamped)))
-              meta.put(db, tbl, stamped)
-              spark.catalog.refreshTable(s"`$db`.`$tbl`")
+          // Reference resets the auto-increment counter on truncate
+          // (alter_table/truncate.rs:8-40).
+          val reset = tm.copy(autoCounter = 1L, counterDirty = false)
+          tm.csvPath match {
+            case Some(path) =>
+              rewriteCsvFile(db, tbl, path, spark.table(s"`$db`.`$tbl`").limit(0))
+              meta.put(db, tbl, reset)
             case None =>
-              meta.get(db, tbl).flatMap(_.csvPath) match {
-                case Some(path) =>
-                  rewriteCsvFile(db, tbl, path, spark.table(s"`$db`.`$tbl`").limit(0))
-                case None =>
-                  spark.sql(s"TRUNCATE TABLE `$db`.`$tbl`")
-                  meta.get(db, tbl).flatMap(_.xlsxPath).foreach(syncXlsx)
-              }
-              // Reference resets the auto-increment counter on truncate
-              // (alter_table/truncate.rs:8-40).
-              meta.update(db, tbl)(_.copy(autoCounter = 1L))
-              persistMeta(db, tbl) // SQL TRUNCATE wiped the control file with the data
+              // The data files are swapped out for nothing, the counter
+              // reset riding the manifest, never SQL TRUNCATE: that
+              // deletes the whole directory, `.graft_meta` included,
+              // and a crash before the re-persist lost the constraint
+              // record. A crash at any point now converges to (empty
+              // table, reset counter, full constraints).
+              stagedSwap(db, tbl, dataFiles(db, tbl).map(_._1), None, Some(reset))(_ => 0L)
           }
         }
         Payload.TruncateTable
@@ -1963,8 +1885,8 @@ class Engine(val spark: SparkSession) {
   }
 
   /** Writer-lock + crash-repair bracket for table-REWRITING mutations
-    * (ALTER TABLE, CREATE INDEX, TRUNCATE — round-17 verdict task 1):
-    * the same two lines the DML paths run. Without it, a torn COMPACT
+    * (UPDATE, DELETE, ALTER TABLE, CREATE INDEX, TRUNCATE — round-17
+    * verdict task 1). Without it, a torn COMPACT
     * swap's duplicate view is what `spark.table` returns — and these
     * paths REWRITE the table from that view, baking the duplicates in
     * permanently and destroying the manifest evidence; and DDL racing
@@ -2097,36 +2019,13 @@ class Engine(val spark: SparkSession) {
     * ceil(bytes/target) rewrites. Returns the payload row
     * (files_in, files_out, rows_moved, bytes_moved).
     *
-    * Reader isolation (round-15 advice): readers deliberately bypass
-    * the writer lock (reader liveness is pinned by ConcurrentDmlSpec),
-    * so the swap must not expose intermediate state any longer than
-    * physics requires. The rewrite therefore lands in a DOT-PREFIXED
-    * staging subdirectory INSIDE the table directory — hidden from
-    * Spark's file listing, same filesystem so the swap is pure
-    * renames — and is parity-gated THERE: the scan-observed row count
-    * must equal the staged files' own parquet-footer count (one gate
-    * covering both a lost read and a lost write; a mismatch discards
-    * staging with the originals untouched). Only then does the swap
-    * run: k renames in + m deletes out, all filesystem METADATA ops.
-    * The concurrent-reader duplication window shrinks from "whole
-    * rewrite + count job" (the old append-then-verify flow) to those
-    * few renames.
-    *
-    * Crash closure (round-16 verdict task 3): a `.compact_swap_manifest`
-    * (staged names to rename in + original names to delete) is written
-    * into the table dir BEFORE the first rename and removed AFTER the
-    * last delete. A process crash anywhere inside the swap leaves the
-    * manifest behind, and [[repairCompactSwap]] — run at the head of
-    * every writer-lock-holding mutation — converges the table: all
-    * staged files present → finish the deletes (roll forward); any
-    * staged file missing → remove the partially-renamed-in ones (roll
-    * back; the originals are all still present, because deletes only
-    * start after the last rename). Either way: exact row parity. A
-    * crash BEFORE the manifest write leaves the table bit-identical
-    * plus one invisible staging directory swept by the next
-    * compaction. All file ops go through the table location's own
-    * Hadoop FileSystem (TableFs), so hdfs://-style tables compact
-    * identically to local ones. */
+    * The rewrite goes through [[stagedSwap]] under a
+    * `.compact_staging_*` prefix, gated against the row count the
+    * scan observed: readers (which bypass the writer lock) see only
+    * the swap's few renames, and a crash converges through
+    * [[repairCompactSwap]]. A crash BEFORE the manifest write leaves
+    * the table bit-identical plus one invisible staging directory,
+    * swept by the next compaction. */
   private def compactCore(db: String, tbl: String, tm: TableMeta, target: Long): Seq[Any] = {
     // Converge any crashed prior swap FIRST — its manifest supersedes
     // whatever the directory listing would otherwise show. Then sync
@@ -2158,48 +2057,31 @@ class Engine(val spark: SparkSession) {
       .foreach(TableFs.deleteRecursively(conf, _))
     TableFs.listPrefixed(conf, tdir, ".alter_staging_")
       .foreach(TableFs.deleteRecursively(conf, _))
-    val staging = new org.apache.hadoop.fs.Path(tdir,
-      s".compact_staging_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      val obs = org.apache.spark.sql.Observation()
-      // Explicit schema (no footer-inference job); the shuffle moves
-      // only the rewrite set's bytes, never the whole table. Layout:
-      // an INDEXED table re-packs BY RANGE on the indexed column +
-      // sorts within partitions (a round-robin pack would silently
-      // destroy the clustering CREATE INDEX paid a full rewrite for);
-      // unindexed tables take the even round-robin pack. The observe
-      // sits ABOVE the shuffle: repartitionByRange SAMPLES its child
-      // for boundaries, so a metric below the exchange would count
-      // the sampling pass too and double-count rows.
-      val scanned = spark.read.schema(t.schema).parquet(paths: _*)
-      val packed = tm.indexes.headOption match {
-        case Some(idx) => scanned
-          .repartitionByRange(k, col(idx.column))
-          .sortWithinPartitions(col(idx.column))
-        case None => scanned.repartition(k)
-      }
-      packed.observe(obs, coalesce(sum(lit(1L)), lit(0L)).as("n_rows"))
-        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val n = obs.get("n_rows").asInstanceOf[Long]
-      val stagedFiles = TableFs.listData(conf, staging).map(_._1)
-      // Parity gate, entirely inside staging: the rows that LANDED
-      // (the staged files' own footer counts — driver-side metadata
-      // reads, zero Spark jobs) must equal the rows the scan OBSERVED
-      // flowing into the writer.
-      val landed = footerRowCount(conf, stagedFiles)
-      if (landed != n)
-        throw new EngineException(
-          s"COMPACT aborted: staged files hold $landed rows != scanned $n — " +
-            "staging discarded, originals untouched")
-      // THE SWAP — the only span a concurrent reader can observe:
-      // k renames + m deletes, filesystem metadata only, bracketed by
-      // the crash manifest (intent before the first rename, removal
-      // after the last delete).
-      swapIn(db, tbl, conf, tdir, stagedFiles, paths)
-      spark.catalog.refreshTable(s"`$db`.`$tbl`")
-      persistMeta(db, tbl) // epoch stamp: other processes re-list the swapped layout
-      Seq(moveSet.size, stagedFiles.size, n, totalMove)
-    } finally TableFs.deleteRecursively(conf, staging)
+    val obs = org.apache.spark.sql.Observation()
+    // Explicit schema (no footer-inference job); the shuffle moves
+    // only the rewrite set's bytes, never the whole table. Layout:
+    // an INDEXED table re-packs BY RANGE on the indexed column +
+    // sorts within partitions (a round-robin pack would silently
+    // destroy the clustering CREATE INDEX paid a full rewrite for);
+    // unindexed tables take the even round-robin pack. The observe
+    // sits ABOVE the shuffle: repartitionByRange SAMPLES its child
+    // for boundaries, so a metric below the exchange would count
+    // the sampling pass too and double-count rows.
+    val scanned = spark.read.schema(t.schema).parquet(paths: _*)
+    val packed = tm.indexes.headOption match {
+      case Some(idx) => scanned
+        .repartitionByRange(k, col(idx.column))
+        .sortWithinPartitions(col(idx.column))
+      case None => scanned.repartition(k)
+    }
+    // The staged rows are gated against the rows the scan observed
+    // flowing into the writer: one gate covering both a lost read and
+    // a lost write.
+    val filesOut = stagedSwap(db, tbl, paths,
+      Some(packed.observe(obs, coalesce(sum(lit(1L)), lit(0L)).as("n_rows"))),
+      prefix = ".compact_staging_")(_ => obs.get("n_rows").asInstanceOf[Long])
+    persistMeta(db, tbl) // epoch stamp: other processes re-list the swapped layout
+    Seq(moveSet.size, filesOut, obs.get("n_rows").asInstanceOf[Long], totalMove)
   }
 
   /** Refuse the COMPACT swap on a filesystem whose `rename` is not
@@ -2231,8 +2113,8 @@ class Engine(val spark: SparkSession) {
           "in-place swap")
   }
 
-  /** THE SWAP — the only span a concurrent reader can observe, shared
-    * by COMPACT and the CoW UPDATE/DELETE rewrite: k renames in + m
+  /** THE SWAP — the only span a concurrent reader can observe, run by
+    * [[stagedSwap]] for every rewriting statement: k renames in + m
     * deletes out, all filesystem METADATA ops, bracketed by the crash
     * manifest (intent before the first rename, removal after the last
     * verified delete). `stagedFiles` may legitimately be EMPTY (a
@@ -2295,61 +2177,92 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** Staged swap for the CoW UPDATE/DELETE rewrite and CREATE INDEX's
-    * re-clustering: the rewrite scan of the affected files writes
-    * straight into a hidden staging directory — no checkpoint, because
-    * the originals it reads stay in place until the staging write has
-    * finished. `check` then runs
-    * the statement's constraint checks (given the staged rows, read
-    * back from the staged files) and returns the row count the
-    * rewrite must have produced; the rows that LANDED are gated
+  /** The directory whose files [[stagedSwap]] replaces through
+    * [[swapIn]]'s renames: a managed parquet table's (an XLSX sheet's
+    * parquet mirror included) when it is a listable directory on a
+    * store with atomic rename. None for CSV tables (one file,
+    * [[rewriteCsvFile]]), JDBC tables, and stores without atomic
+    * rename, where [[stagedSwap]] falls back and COMPACT refuses. */
+  private def swapDir(db: String, tbl: String): Option[org.apache.hadoop.fs.Path] =
+    if (meta.get(db, tbl).exists(m => m.jdbc || m.csvPath.isDefined)) None
+    else {
+      val conf = hadoopConf
+      tableDirectory(db, tbl)
+        .filter(TableFs.isDirectoryStrict(conf, _))
+        .filter(atomicRenameOk(conf, _))
+    }
+
+  /** The one way a statement replaces a table's files: UPDATE, DELETE,
+    * TRUNCATE, ALTER's column rewrites, COMPACT and CREATE INDEX's
+    * re-clustering. `newData` (None: the originals `origUris` go with
+    * nothing in their place) is written straight into a hidden
+    * `prefix*` staging directory — no checkpoint, because the originals
+    * stay in place until the swap. `check` then runs the statement's
+    * constraint checks (given the staged rows, read back from the
+    * staged files) and returns the row count the rewrite must have
+    * produced; the rows that LANDED (footer counts, no job) are gated
     * against it, and only then do the files enter the table through
-    * [[swapIn]]'s manifest-bracketed renames. A failed check or gate
-    * discards staging and leaves the originals untouched. This
-    * closes the two windows COMPACT's swap closes:
-    *  - READER ISOLATION: a concurrent reader never sees rewritten
-    *    and original rows together;
-    *  - CRASH: a death mid-swap converges through the same manifest
-    *    repair, never leaving permanent duplicates.
-    * FALLBACK: a store without atomic rename (not on the COMPACT
-    * allowlist) or a table without a listable directory materializes
-    * the rewrite in a checkpoint, checks it, then appends it directly
-    * and deletes the originals — correct end state, documented
-    * visible-duplicates window — because half a swap protocol on a
-    * copy+delete "rename" is worse than none. */
-  private def stagedDmlSwap(db: String, tbl: String, newData: DataFrame,
-      origUris: Seq[String])(check: (=> DataFrame) => Long): Unit = {
-    val conf = hadoopConf
-    val tdirOpt = tableDirectory(db, tbl)
-      .filter(TableFs.isDirectoryStrict(conf, _))
-      .filter(d => atomicRenameOk(conf, d))
-    tdirOpt match {
+    * [[swapIn]], with `newMeta` (epoch-bumped) riding its manifest. A
+    * failed check or gate discards staging and leaves the originals
+    * untouched:
+    *  - READER ISOLATION: a concurrent reader never sees rewritten and
+    *    original rows together, nor an empty table;
+    *  - CRASH: a death mid-swap converges through the manifest repair,
+    *    and `.graft_meta` is only ever replaced atomically.
+    * FALLBACK, when there is no [[swapDir]]: the rows are checkpointed,
+    * checked and appended, then the originals get checked deletes and
+    * `newMeta` is persisted — correct end state, a documented
+    * visible-duplicates window, because half a swap protocol on a
+    * copy+delete "rename" is worse than none. `.graft_meta` is never
+    * deleted on either path. Refreshes the table and re-renders an
+    * XLSX workbook; returns the number of files swapped in (0 on the
+    * fallback). */
+  private def stagedSwap(db: String, tbl: String, origUris: Seq[String],
+      newData: Option[DataFrame], newMeta: Option[TableMeta] = None,
+      prefix: String = ".dml_staging_")(check: (=> DataFrame) => Long): Int = {
+    lazy val empty = spark.table(s"`$db`.`$tbl`").limit(0)
+    val swapped = swapDir(db, tbl) match {
       case None =>
-        val staged = newData.localCheckpoint(eager = true, Engine.StagingLevel)
-        check(staged)
-        staged.write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`")
+        newData match {
+          case Some(df) =>
+            val staged = df.localCheckpoint(eager = true, Engine.StagingLevel)
+            check(staged)
+            staged.write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`")
+          case None => check(empty)
+        }
         origUris.foreach(deleteDataFile)
+        newMeta.foreach { m => meta.put(db, tbl, m); persistMeta(db, tbl) }
+        0
       case Some(tdir) =>
+        val conf = hadoopConf
         val staging = new org.apache.hadoop.fs.Path(tdir,
-          s".dml_staging_${java.util.UUID.randomUUID().toString.take(8)}")
+          s"$prefix${java.util.UUID.randomUUID().toString.take(8)}")
         try {
-          newData.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-          val expectRows = check(spark.read.schema(newData.schema).parquet(staging.toString))
-          val counted = TableFs.listData(conf, staging)
-            .map { case (p, _) => p -> footerRowCount(conf, Seq(p)) }
+          newData.foreach(_.write.mode(SaveMode.Overwrite).parquet(staging.toString))
+          val expectRows = check(newData.fold(empty)(df =>
+            spark.read.schema(df.schema).parquet(staging.toString)))
+          val counted = if (newData.isEmpty) Seq.empty
+            else TableFs.listData(conf, staging).map { case (p, _) => p -> footerRowCount(conf, Seq(p)) }
           // Parity gate, entirely inside staging: the rows that
           // LANDED (driver-side footer reads, zero jobs) must equal
-          // the rows the rewrite scan observed flowing to the writer.
+          // the rows the statement expects.
           val landed = counted.map(_._2).sum
           if (landed != expectRows)
             throw new EngineException(
-              s"DML rewrite aborted: staged files hold $landed rows != " +
+              s"rewrite of $db.$tbl aborted: staged files hold $landed rows != " +
                 s"expected $expectRows — staging discarded, originals untouched")
           // Zero-row part files (an empty writer task) convey nothing —
           // swapping them in would only re-fragment the layout.
-          swapIn(db, tbl, conf, tdir, counted.filter(_._2 > 0).map(_._1), origUris)
+          val stagedFiles = counted.filter(_._2 > 0).map(_._1)
+          val stamped = newMeta.map(m => m.copy(epoch = m.epoch + 1))
+          swapIn(db, tbl, conf, tdir, stagedFiles, origUris, stamped.map(MetaJson.render))
+          stamped.foreach { m => meta.put(db, tbl, m); syncCatalogShape(db, tbl, m.schema) }
+          stagedFiles.size
         } finally TableFs.deleteRecursively(conf, staging)
     }
+    spark.catalog.refreshTable(s"`$db`.`$tbl`")
+    meta.get(db, tbl).flatMap(_.xlsxPath).foreach(syncXlsx)
+    swapped
   }
 
   /** The distinct input files (input_file_name URIs) of `df`'s rows in
@@ -2384,8 +2297,8 @@ class Engine(val spark: SparkSession) {
       dataFiles(db, tbl).forall(f => footerRowCount(conf, Seq(pathOfUri(f._1))) == 0L)
   }
 
-  /** Non-throwing [[requireAtomicRename]] — the CoW DML path FALLS
-    * BACK rather than refuses (see [[stagedDmlSwap]]). */
+  /** Non-throwing [[requireAtomicRename]]: [[swapDir]] is None where
+    * it fails, and [[stagedSwap]] falls back rather than refuses. */
   private def atomicRenameOk(conf: org.apache.hadoop.conf.Configuration,
       dir: org.apache.hadoop.fs.Path): Boolean = {
     val scheme = Option(dir.toUri.getScheme).getOrElse("file")
@@ -2522,8 +2435,9 @@ class Engine(val spark: SparkSession) {
     * physical analogue of the reference's sorted KV index — parquet
     * min/max stats prune range scans, and range-disjoint files make a
     * selective UPDATE touch O(matching range) files (see
-    * [[clusterByIndex]]). CSV and XLSX tables are rewritten whole
-    * through [[overwriteTable]]. */
+    * [[clusterByIndex]]). A CSV table's file is rewritten whole
+    * through [[rewriteCsvFile]]; a JDBC table keeps its external
+    * layout and records the index only. */
   private def createIndex(sql: String): Payload = {
     val re = """(?is)CREATE\s+(UNIQUE\s+)?INDEX\s+([`"\w]+)\s+ON\s+([`"\w.]+)\s*\(([^)]*)\)\s*""".r
     sql match {
@@ -2548,15 +2462,11 @@ class Engine(val spark: SparkSession) {
           if (dups.limit(1).count() > 0)
             throw new EngineException(s"duplicate entry in unique column ${cm.name}")
         }
-        if (!tm.jdbc && tm.csvPath.isEmpty && tm.xlsxPath.isEmpty)
-          clusterByIndex(db, tbl, cm, dataFiles(db, tbl).map(_._1))
-        else if (t.limit(1).count() > 0) {
-          // Partition count pinned to the current file count: without
-          // it AQE coalesces a small table into ONE partition.
-          val clustered = t.repartitionByRange(math.max(t.inputFiles.length, 1), col(cm.name))
-            .sortWithinPartitions(col(cm.name))
-            .localCheckpoint(eager = true, Engine.StagingLevel)
-          overwriteTable(db, tbl, clustered)
+        tm.csvPath match {
+          case Some(path) => if (t.limit(1).count() > 0)
+            rewriteCsvFile(db, tbl, path, t.sort(col(cm.name))
+              .localCheckpoint(eager = true, Engine.StagingLevel))
+          case None => if (!tm.jdbc) clusterByIndex(db, tbl, cm, dataFiles(db, tbl).map(_._1))
         }
         meta.update(db, tbl)(m => m.copy(indexes =
           m.indexes.filterNot(_.name.equalsIgnoreCase(cleanIdent(rawIdx))) :+
@@ -2584,7 +2494,7 @@ class Engine(val spark: SparkSession) {
     *  - The rewrite keeps the count of non-empty files (without the
     *    pin, AQE coalesces a small table into ONE file, destroying
     *    the pruning granularity and the file-granular DML) and writes
-    *    straight into staging through [[stagedDmlSwap]], with the
+    *    straight into staging through [[stagedSwap]], with the
     *    originals' footer row count as its parity gate: range sampling,
     *    the shuffle and the write, no checkpoint. */
   private def clusterByIndex(db: String, tbl: String, cm: ColumnMeta, files: Seq[String]): Unit = {
@@ -2616,8 +2526,7 @@ class Engine(val spark: SparkSession) {
       scan.select(input_file_name(), input_file_block_start(), k))))
     if (!clustered) {
       val sorted = scan.repartitionByRange(populated.size, c).sortWithinPartitions(c)
-      stagedDmlSwap(db, tbl, sorted, files)(_ => total)
-      spark.catalog.refreshTable(s"`$db`.`$tbl`")
+      stagedSwap(db, tbl, files, Some(sorted))(_ => total)
     }
   }
 
@@ -3114,26 +3023,28 @@ object Engine {
     }
 
   /** Storage level for every DML/DDL staging localCheckpoint: an
-    * unbounded INSERT batch with a shuffle upstream, the rewrites that
-    * overwrite what they read (ALTER, CSV/XLSX CREATE INDEX,
-    * whole-table and CSV UPDATE/DELETE, TRUNCATE-style DELETE), the
-    * CoW fallback on stores without atomic rename, and INSERT-in-CTE.
-    * File-granular UPDATE/DELETE and CREATE INDEX on a managed table
-    * stage into files instead (see stagedDmlSwap). Disk tier: staged
-    * blocks can outlive the statement (released on driver GC, not
-    * statement end) and
+    * unbounded INSERT batch with a shuffle upstream, the CSV rewrites
+    * (UPDATE, DELETE with a WHERE, CREATE INDEX), ALTER's
+    * drop-and-recreate fallback, the staged swap's fallback on stores
+    * without atomic rename, and INSERT-in-CTE. Every other rewrite of a
+    * managed table stages into files instead (see stagedSwap). Disk
+    * tier: staged blocks can outlive the statement (released on driver
+    * GC, not statement end) and
     * memory-tier blocks squat the unified pool's protected storage
     * half — the measured sf10 hazard that moved the operator
     * checkpoints to disk. 2-replica: localCheckpoint TRUNCATES
     * lineage, so an un-replicated block lost with its executor is
-    * unrecoverable — and the overwriting paths drop table files
-    * before re-writing from the checkpoint, the highest-stakes window
+    * unrecoverable — and ALTER's fallback drops the table before
+    * re-writing from the checkpoint, the highest-stakes window
     * for block loss. One replica survives a single executor loss; in
     * local mode replication is a no-op. Same rationale as
     * DistributedPrefix.shared / Dedup's posting checkpoint. */
   val StagingLevel: org.apache.spark.storage.StorageLevel =
     org.apache.spark.storage.StorageLevel.DISK_ONLY_2
 
+  /** The row bound under which an INSERT batch is small: validated on
+    * the driver and written as one file (see `boundedBatch`). */
+  val SmallBatchRows: Long = 2000L
 
   /** COMPACT TABLE's default output-file target (and EXPLAIN FILES'
     * histogram threshold): 128 MB, matching Spark's default

@@ -3,28 +3,30 @@ package graft.engine
 import graft.SparkFixture
 import org.scalatest.funsuite.AnyFunSuite
 
-/** COMPACT's rename-atomicity probe (round-17 verdict task 5).
+/** The rename-atomicity probe (round-17 verdict task 5).
   *
   * The staged swap assumes atomic same-directory rename; raw object
   * stores implement rename as copy+delete, where the swap would
   * CORRUPT (readers observing half-copied files, crash states the
   * manifest protocol never enumerated) rather than refuse. The engine
-  * now checks the table's filesystem scheme against a documented
+  * checks the table's filesystem scheme against a documented
   * allowlist (file/hdfs/viewfs + the Hadoop conf extension
   * `graft.fs.atomic.rename.schemes`) before any rewrite work. This
   * spec mounts a database on `unatomicfs://` — a registered scheme
   * deliberately NOT allowlisted — and pins that COMPACT fails loudly
-  * with the table bit-untouched, while DML (which never renames:
-  * CoW is append + checked delete) still works there. */
+  * with the table bit-untouched, while UPDATE, DELETE and TRUNCATE
+  * take the swap's one fallback there: DML never renames — it appends
+  * its checked rows and makes checked deletes of the originals, and
+  * `.graft_meta` stays in place throughout. */
 class AtomicRenameGuardSpec extends AnyFunSuite {
 
   private lazy val spark = SparkFixture.session
+  private lazy val local = java.nio.file.Files.createTempDirectory("uat").toFile.getAbsolutePath
   private lazy val g = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.unatomicfs.impl", classOf[UnatomicTestFs].getName)
     val e = new Engine(spark)
     e.execute("DROP DATABASE IF EXISTS uat")
-    val local = java.nio.file.Files.createTempDirectory("uat").toFile.getAbsolutePath
     e.execute(s"CREATE DATABASE uat LOCATION 'unatomicfs://$local'")
     e
   }
@@ -49,9 +51,10 @@ class AtomicRenameGuardSpec extends AnyFunSuite {
   test("CoW DML still works there — the staged swap FALLS BACK to direct append+delete") {
     // On an atomic-rename store the CoW rewrite goes through the
     // manifest-bracketed staged swap; here that protocol would be
-    // built on a copy+delete "rename", so stagedDmlSwap detects the
-    // scheme and keeps the legacy direct path (correct end state,
-    // documented visible-duplicates window).
+    // built on a copy+delete "rename", so the swap finds no swap
+    // directory and takes its one fallback: checked append, then
+    // checked deletes (correct end state, documented
+    // visible-duplicates window).
     val Payload.Update(nu) =
       g.execute("UPDATE uat.t SET v = v + 1 WHERE k < 50"): @unchecked
     assert(nu == 50L)
@@ -70,5 +73,36 @@ class AtomicRenameGuardSpec extends AnyFunSuite {
       assert(spark.table("uat.t").count() == 350L)
     } finally spark.sparkContext.hadoopConfiguration
       .set("graft.fs.atomic.rename.schemes", "graftfs")
+  }
+
+  test("whole-table UPDATE, unconditional DELETE and TRUNCATE fall back there, keeping .graft_meta") {
+    g.execute("CREATE TABLE uat.w (id INTEGER AUTO_INCREMENT, v INTEGER NOT NULL, u INTEGER UNIQUE)")
+    g.execute("INSERT INTO uat.w (v, u) SELECT id, id FROM range(100)")
+    def metaKept(): Unit = assert(
+      new java.io.File(s"$local/w/${Engine.TableMetaName}").isFile, "the constraint record must stay")
+    def all(): Seq[Seq[Any]] =
+      spark.sql("SELECT id, v, u FROM uat.w ORDER BY id").collect().map(_.toSeq.map {
+        case n: Number => n.longValue; case x => x
+      }).toSeq
+    val dir = java.nio.file.Paths.get(local, "w")
+    val (pu, _, seen) = DmlSwapSpec.jobsSeeing(spark, dir)(g.execute("UPDATE uat.w SET v = v + 1"))
+    assert(pu == Payload.Update(100L))
+    DmlSwapSpec.assertIntact(seen)
+    metaKept()
+    assert(all() == (0L until 100L).map(i => Seq(i + 1, i + 1, i)))
+    val (pd, jobs, _) = DmlSwapSpec.jobsSeeing(spark, dir)(g.execute("DELETE FROM uat.w"))
+    assert(pd == Payload.Delete(100L))
+    assert(jobs == 0, s"the footers count the deleted rows, saw $jobs jobs")
+    metaKept()
+    assert(all().isEmpty)
+    g.execute("INSERT INTO uat.w (v, u) VALUES (5, 5), (6, 6)")
+    assert(all() == Seq(Seq(101L, 5L, 5L), Seq(102L, 6L, 6L)))
+    assert(g.execute("TRUNCATE TABLE uat.w") == Payload.TruncateTable)
+    metaKept()
+    assert(all().isEmpty)
+    g.execute("INSERT INTO uat.w (v, u) VALUES (7, 7)")
+    assert(all() == Seq(Seq(1L, 7L, 7L)), "TRUNCATE resets the counter")
+    assert(intercept[EngineException](g.execute("INSERT INTO uat.w (v, u) VALUES (8, 7)"))
+      .getMessage.contains("duplicate entry in unique column u"), "constraints survive")
   }
 }

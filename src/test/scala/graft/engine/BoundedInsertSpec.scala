@@ -4,13 +4,13 @@ import graft.SparkFixture
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A bounded INSERT (a plan whose maxRows is at most
-  * `graft.insert.smallBatchRows`) is validated in one driver pass and
+  * `Engine.SmallBatchRows`, 2,000) is validated in one driver pass and
   * checks UNIQUE with a key probe that reads only the row groups the
   * batch keys can hit. These cases pin that the probe still finds a
   * collision in a file far from the rest of the batch's keys, that a
   * bounded batch whose source shuffles draws its ids in row order, and
   * that a batch without a static bound under the limit — a generator,
-  * or a VALUES list longer than the bound — stays distributed. */
+  * or a source one row over the bound — stays distributed. */
 class BoundedInsertSpec extends AnyFunSuite {
 
   private lazy val spark = SparkFixture.session
@@ -56,28 +56,26 @@ class BoundedInsertSpec extends AnyFunSuite {
   test("only a batch whose maxRows is within the bound is collected on the driver") {
     g.execute("CREATE TABLE bins.gen (id INTEGER AUTO_INCREMENT UNIQUE, v INTEGER)")
     def plan(sql: String): Seq[String] = rows("EXPLAIN " + sql).map(_.head.toString)
-    val key = "graft.insert.smallBatchRows"
-    spark.conf.set(key, "10")
-    try {
-      val small = "INSERT INTO bins.gen (v) VALUES " + (1 to 10).map(i => s"($i)").mkString(", ")
-      val wide = "INSERT INTO bins.gen (v) VALUES " + (11 to 30).map(i => s"($i)").mkString(", ")
-      // a generator has no maxRows: 100 rows from one literal stay distributed
-      val gen = "INSERT INTO bins.gen (v) SELECT explode(sequence(31, 130))"
-      val bounded = "staging: none — bounded batch, collected once and validated on the driver"
-      assert(plan(small).contains(bounded), plan(small).mkString("\n"))
-      assert(plan(small).contains("auto_increment: id (driver row-order fill)"))
-      for (sql <- Seq(wide, gen)) {
-        val p = plan(sql)
-        assert(!p.exists(_.contains("bounded batch")), p.mkString("\n"))
-        assert(p.contains("auto_increment: id (parallel per-partition offset fill)"), p.mkString("\n"))
-      }
-      assert(g.execute(small) == Payload.Insert(10))
-      assert(g.execute(wide) == Payload.Insert(20))
-      assert(g.execute(gen) == Payload.Insert(100))
-    } finally spark.conf.unset(key)
+    assert(Engine.SmallBatchRows == 2000L)
+    val small = "INSERT INTO bins.gen (v) VALUES " + (1 to 10).map(i => s"($i)").mkString(", ")
+    // range(2001) is statically bounded, one row over the bound
+    val wide = "INSERT INTO bins.gen (v) SELECT id + 11 FROM range(2001)"
+    // a generator has no maxRows: 100 rows from one literal stay distributed
+    val gen = "INSERT INTO bins.gen (v) SELECT explode(sequence(2012, 2111))"
+    val bounded = "staging: none — bounded batch, collected once and validated on the driver"
+    assert(plan(small).contains(bounded), plan(small).mkString("\n"))
+    assert(plan(small).contains("auto_increment: id (driver row-order fill)"))
+    for (sql <- Seq(wide, gen)) {
+      val p = plan(sql)
+      assert(!p.exists(_.contains("bounded batch")), p.mkString("\n"))
+      assert(p.contains("auto_increment: id (parallel per-partition offset fill)"), p.mkString("\n"))
+    }
+    assert(g.execute(small) == Payload.Insert(10))
+    assert(g.execute(wide) == Payload.Insert(2001))
+    assert(g.execute(gen) == Payload.Insert(100))
     // every path draws the same dense row-order ids
     assert(rows("SELECT COUNT(*) AS n, MIN(id) AS lo, MAX(id) AS hi, " +
       "SUM(CASE WHEN id = v THEN 1 ELSE 0 END) AS same FROM bins.gen") ==
-      Seq(Seq(130L, 1L, 130L, 130L)))
+      Seq(Seq(2111L, 1L, 2111L, 2111L)))
   }
 }

@@ -53,12 +53,17 @@ class ConnectorsSpec extends AnyFunSuite {
     val te = intercept[EngineException](
       g.execute("TRUNCATE TABLE jdb.ext_parts"))
     assert(te.getMessage.contains("JDBC"))
-    // and the external table is untouched
+    // CREATE INDEX records the index and leaves the external layout
+    // alone: no rewrite of the external table through Spark
+    assert(g.execute("CREATE INDEX ext_id ON jdb.ext_parts (id)") == Payload.Create)
+    // and the external table is untouched, its declared types included
     val check2 = java.sql.DriverManager.getConnection(url)
     try {
       val rs = check2.createStatement().executeQuery("SELECT COUNT(*) FROM ext_parts")
       rs.next()
       assert(rs.getInt(1) == 4)
+      val cols = check2.getMetaData.getColumns(null, null, "EXT_PARTS", "PNAME")
+      assert(cols.next() && cols.getString("TYPE_NAME") == "VARCHAR" && cols.getInt("COLUMN_SIZE") == 40)
     } finally check2.close()
   }
 

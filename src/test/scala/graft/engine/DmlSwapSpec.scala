@@ -3,21 +3,21 @@ package graft.engine
 import graft.SparkFixture
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The CoW UPDATE/DELETE staged swap (round 18).
+/** UPDATE and DELETE replace files only through the engine's one
+  * staged swap ([[Engine]]'s `stagedSwap`).
   *
-  * Before this round, the file-granular rewrite appended its output
-  * DIRECTLY into the table directory and then deleted the originals —
-  * so a concurrent reader saw rewritten + original rows together for
-  * the whole write, and a crash between append and deletes left those
-  * duplicates permanently with no manifest: exactly the two windows
-  * the COMPACT swap closed in rounds 15–17, still open on the much
-  * hotter DML path. Now UPDATE/DELETE stage into a hidden
-  * `.dml_staging_*` directory, parity-gate there, and enter the table
-  * through the same manifest-bracketed [[Engine]] swap (one protocol,
-  * one repair). This spec pins the observable contract; the torn-swap
-  * convergence itself is CompactSwapRepairSpec/CompactRepairStrictSpec
-  * territory (same manifest, same repair). */
+  * The rewrite of the affected files — every file when there is no
+  * WHERE — lands in a hidden `.dml_staging_*` directory, is
+  * parity-gated there, and enters the table through the
+  * manifest-bracketed rename protocol COMPACT, TRUNCATE and ALTER use
+  * (one protocol, one repair). An unconditional DELETE swaps the files
+  * out for nothing. So a concurrent reader never sees rewritten and
+  * original rows together, nor an empty table, and `.graft_meta` is
+  * never deleted. This spec pins the observable contract; the
+  * torn-swap convergence itself is CompactSwapRepairSpec/
+  * CompactRepairStrictSpec territory (same manifest, same repair). */
 class DmlSwapSpec extends AnyFunSuite {
+  import DmlSwapSpec._
 
   private lazy val spark = SparkFixture.session
   private lazy val loc = java.nio.file.Files.createTempDirectory("dmlswap")
@@ -28,13 +28,7 @@ class DmlSwapSpec extends AnyFunSuite {
     e
   }
 
-  private def names(tbl: String): Set[String] = {
-    val s = java.nio.file.Files.list(loc.resolve(tbl))
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString).toSet
-    } finally s.close()
-  }
+  private def names(tbl: String): Set[String] = entries(loc.resolve(tbl))
   private def dataNames(tbl: String): Set[String] =
     names(tbl).filter(n => !n.startsWith(".") && !n.startsWith("_"))
 
@@ -125,5 +119,93 @@ class DmlSwapSpec extends AnyFunSuite {
     assert(dataFiles("uq") == before, "a failed UPDATE must not touch the original files")
     assert(!names("uq").exists(_.startsWith(".dml_staging_")), s"staging left: ${names("uq")}")
     assert(spark.sql("SELECT count(*) FROM dsw.uq WHERE u = 399").head.getLong(0) == 1L)
+  }
+
+  test("whole-table UPDATE and unconditional DELETE keep the record and the originals until the swap") {
+    g.execute("CREATE TABLE dsw.w (id INTEGER AUTO_INCREMENT PRIMARY KEY, v INTEGER NOT NULL, u INTEGER UNIQUE)")
+    g.execute("INSERT INTO dsw.w (v, u) SELECT id, id FROM range(1000)")
+    def noResidue(): Unit = {
+      val after = names("w")
+      assert(!after.exists(_.startsWith(".dml_staging_")), s"staging left: $after")
+      assert(!after.contains(Engine.SwapManifestName), s"manifest left: $after")
+      assert(after.contains(Engine.TableMetaName), s"constraint record gone: $after")
+    }
+    val (pu, ju, su) = jobsSeeing(spark, loc.resolve("w"))(g.execute("UPDATE dsw.w SET v = v + 1"))
+    assert(pu == Payload.Update(1000L))
+    assert(ju == 1, s"expected the staged rewrite alone = 1 job, saw $ju")
+    assertIntact(su)
+    noResidue()
+    assert(spark.sql("SELECT count(*), sum(v) FROM dsw.w").head.toSeq == Seq(1000L, 500500L))
+    val (pd, jd, sd) = jobsSeeing(spark, loc.resolve("w"))(g.execute("DELETE FROM dsw.w"))
+    assert(pd == Payload.Delete(1000L))
+    assert(jd == 0, s"an unconditional DELETE counts from the footers and runs no job, saw $jd")
+    assertIntact(sd)
+    noResidue()
+    assert(dataNames("w").isEmpty, s"every original retired: ${names("w")}")
+    assert(spark.table("dsw.w").count() == 0L)
+    // the record survived: constraints still enforced
+    g.execute("INSERT INTO dsw.w (v, u) VALUES (1, 1)")
+    assert(intercept[EngineException](g.execute("INSERT INTO dsw.w (v, u) VALUES (2, 1)"))
+      .getMessage.contains("duplicate entry in unique column u"))
+  }
+
+  test("whole-table UPDATE making a UNIQUE column collide aborts: originals intact, no staging left") {
+    fourRangeFiles("wu", "k INTEGER, u INTEGER UNIQUE")
+    val before = dataFiles("wu")
+    val e = intercept[EngineException](g.execute("UPDATE dsw.wu SET u = 7"))
+    assert(e.getMessage.contains("duplicate entry in unique column u"), e.getMessage)
+    assert(dataFiles("wu") == before, "a failed UPDATE must not touch the original files")
+    assert(!names("wu").exists(_.startsWith(".dml_staging_")), s"staging left: ${names("wu")}")
+    assert(spark.sql("SELECT count(DISTINCT u) FROM dsw.wu").head.getLong(0) == 400L)
+  }
+
+  test("Engine.scala replaces table files only through the staged swap") {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/engine/Engine.scala")), "UTF-8")
+    assert("""SaveMode\.Overwrite\s*\)\s*\.\s*insertInto""".r.findFirstIn(src).isEmpty,
+      "a statement overwrites a table with insertInto(SaveMode.Overwrite)")
+    // every atomicRenameOk( call sits in swapDir or requireAtomicRename
+    val defRe = """\bdef\s+(\w+)""".r
+    val callers = """(?<!def )atomicRenameOk\(""".r.findAllMatchIn(src).map { m =>
+      defRe.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
+    }.toSet
+    assert(callers == Set("swapDir", "requireAtomicRename"), s"atomicRenameOk called from $callers")
+  }
+}
+
+object DmlSwapSpec {
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  import org.scalatest.Assertions._
+
+  /** The names in `dir`. */
+  def entries(dir: java.nio.file.Path): Set[String] = {
+    val s = java.nio.file.Files.list(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(_.getFileName.toString).toSet
+    } finally s.close()
+  }
+
+  /** The jobs `body` runs, and the entries of the table directory
+    * `dir` as a listener saw them at each job start. */
+  def jobsSeeing(spark: org.apache.spark.sql.SparkSession, dir: java.nio.file.Path)(
+      body: => Payload): (Payload, Int, Seq[Set[String]]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = seen.add(entries(dir))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val (p, jobs) = SinglePassDmlSpec.jobsDuring(spark)(body)
+      import scala.jdk.CollectionConverters._
+      (p, jobs, seen.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Every listing holds the constraint record and a data file. */
+  def assertIntact(seen: Seq[Set[String]]): Unit = seen.foreach { ns =>
+    assert(ns.contains(Engine.TableMetaName), s"a job started without the constraint record: $ns")
+    assert(ns.exists(n => !n.startsWith(".") && !n.startsWith("_")),
+      s"a job started with no data file in the table: $ns")
   }
 }

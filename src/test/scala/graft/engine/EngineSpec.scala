@@ -409,17 +409,6 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterEach {
       col(IntegerType, nullable = false), Seq(Seq("6"), Seq("8")))
   }
 
-  test("a malformed graft.insert.smallBatchRows fails loudly, naming the key and value") {
-    g.execute("CREATE TABLE sbr (x INTEGER)")
-    val key = "graft.insert.smallBatchRows"
-    spark.conf.set(key, "2k")
-    try {
-      val e = intercept[EngineException](g.execute("INSERT INTO sbr VALUES (1)"))
-      assert(e.getMessage.contains(key) && e.getMessage.contains("'2k'"), e.getMessage)
-    } finally spark.conf.unset(key)
-    assert(g.execute("INSERT INTO sbr VALUES (1)") == Payload.Insert(1))
-  }
-
   test("insert through vec runs the same constraint pipeline") {
     g.execute("CREATE TABLE hv (id INTEGER UNIQUE, s TEXT NOT NULL)")
     g.insertVec("hv", Seq("id", "s"), Seq(Seq(1L, "a")))

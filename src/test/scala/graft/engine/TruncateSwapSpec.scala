@@ -3,21 +3,21 @@ package graft.engine
 import graft.SparkFixture
 import org.scalatest.funsuite.AnyFunSuite
 
-/** TRUNCATE through the manifest-bracketed swap (round 19).
+/** TRUNCATE through the engine's one staged swap.
   *
   * Spark's `TRUNCATE TABLE` deletes the whole table directory —
   * `.graft_meta` included — so a crash between the wipe and the
-  * engine's re-persist silently destroyed the constraint record: the
-  * remount fell back to LOSSY metadata (every column nullable,
-  * UNIQUE/AUTO_INCREMENT forgotten), the exact failure mode the
-  * persistence layer exists to prevent, on a statement whose whole
-  * job is file retirement. Managed parquet tables on atomic-rename
-  * stores now truncate through the SAME [[Engine]] swapIn as
-  * COMPACT/DML/ALTER: an empty staged set (`empty_ok`), every data
-  * file an original, and the counter-reset record riding the
-  * manifest's meta line — the control file is never deleted at all,
-  * and a crash at any point converges through the shared repair to
-  * (empty table, reset counter, full constraints).
+  * engine's re-persist destroyed the constraint record: the remount
+  * fell back to LOSSY metadata (every column nullable,
+  * UNIQUE/AUTO_INCREMENT forgotten). Every non-CSV table now
+  * truncates through the same swap as UPDATE, DELETE, COMPACT and
+  * ALTER: nothing staged (`empty_ok`), every data file an original,
+  * and the counter-reset record riding the manifest's meta line — the
+  * control file is never deleted, and a crash at any point converges
+  * through the shared repair to (empty table, reset counter, full
+  * constraints). On a store without atomic rename the swap's fallback
+  * deletes the data files and persists the reset record
+  * (AtomicRenameGuardSpec).
   *
   * Reference: TRUNCATE resets the auto-increment counter
   * (src/alter_table/truncate.rs:8-40). */

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Sheet (XLSX) backend: codec round trip, database mount with the
   * inference policy, engine inserts rewriting the workbook, multi-
-  * sheet books (one table per worksheet). */
+  * sheet books (one table per worksheet), and every rewriting
+  * statement leaving the workbook equal to the table. */
 class XlsxSpec extends AnyFunSuite {
 
   private lazy val spark = SparkFixture.session
@@ -84,5 +85,34 @@ class XlsxSpec extends AnyFunSuite {
     val after = Xlsx.read(f).map(s => s.name -> s.rows).toMap
     assert(!after("people").exists(_.head == "bob"))
     assert(after("people").length == 3) // header + alice + carol
+  }
+
+  test("whole-table UPDATE, ALTER ADD COLUMN, unconditional DELETE and TRUNCATE keep the book equal to the table") {
+    val f = java.nio.file.Files.createTempFile("rw", ".xlsx").toString
+    book(f, Xlsx.Sheet("t", Seq(Seq("k", "s"), Seq("1", "a"), Seq("2", "b"), Seq("3", "c"))))
+    g.execute("DROP DATABASE IF EXISTS xrw")
+    g.execute(s"CREATE DATABASE xrw LOCATION '$f'")
+    def same(rows: Int): Unit = {
+      val sheet = Xlsx.read(f).find(_.name == "t").get.rows
+      val Payload.Select(labels, table) = g.execute("SELECT * FROM xrw.t"): @unchecked
+      assert(sheet.head == labels, s"header: ${sheet.head} vs $labels")
+      val rendered = table.map(_.map { case null => ""; case v => v.toString })
+      assert(sheet.tail.map(_.toString).sorted == rendered.map(_.toString).sorted,
+        s"book ${sheet.tail} != table $rendered")
+      assert(table.size == rows)
+    }
+    try {
+      assert(g.execute("UPDATE xrw.t SET s = 'z'") == Payload.Update(3))
+      same(3)
+      g.execute("ALTER TABLE xrw.t ADD COLUMN n INTEGER DEFAULT 9")
+      same(3)
+      assert(Xlsx.read(f).head.rows.head == Seq("k", "s", "n"))
+      assert(g.execute("DELETE FROM xrw.t") == Payload.Delete(3))
+      same(0)
+      g.execute("INSERT INTO xrw.t VALUES (4, 'd', 1)")
+      same(1)
+      assert(g.execute("TRUNCATE TABLE xrw.t") == Payload.TruncateTable)
+      same(0)
+    } finally g.execute("DROP DATABASE IF EXISTS xrw")
   }
 }
