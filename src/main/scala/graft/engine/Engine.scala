@@ -541,8 +541,7 @@ class Engine(val spark: SparkSession) {
     spark.sql(
       s"""CREATE TABLE `$db`.`$tableName` ($fields) USING csv
          |OPTIONS (path '$path', header '${inf.hasHeader}')""".stripMargin)
-    meta.put(db, tableName, TableMeta(inf.columns,
-      csvPath = Some(path), csvHasHeader = inf.hasHeader))
+    meta.put(db, tableName, TableMeta(inf.columns, storage = Storage.Csv(path, inf.hasHeader)))
   }
 
   /** XLSX (Sheet) database: one table per worksheet (reference
@@ -560,8 +559,7 @@ class Engine(val spark: SparkSession) {
       val tbl = sheet.name
       val fields = inf.columns.map(c => s"`${c.name}` ${typeName(c.dataType)}").mkString(", ")
       spark.sql(s"CREATE TABLE `$db`.`$tbl` ($fields) USING parquet")
-      meta.put(db, tbl, TableMeta(inf.columns,
-        xlsxPath = Some(path), sheetName = sheet.name))
+      meta.put(db, tbl, TableMeta(inf.columns, storage = Storage.Xlsx(path, sheet.name)))
       val dataRows = if (inf.hasHeader) sheet.rows.tail else sheet.rows
       if (dataRows.nonEmpty) {
         val strSchema = StructType(inf.columns.map(c => StructField(c.name, StringType)))
@@ -587,8 +585,8 @@ class Engine(val spark: SparkSession) {
   @volatile var xlsxMaxSyncRows: Int = 1048575 // format limit minus header row
 
   private def syncXlsx(path: String): Unit = {
-    val sheets = meta.entries.collect {
-      case (key, tm) if tm.xlsxPath.contains(path) =>
+    val sheets = meta.entries.flatMap { case (key, tm) => tm.storage match {
+      case Storage.Xlsx(`path`, sheet) =>
         val Array(db, tbl) = key.split("\\.", 2)
         val header = tm.columns.map(_.name)
         val it = spark.table(s"`$db`.`$tbl`").toLocalIterator()
@@ -600,8 +598,9 @@ class Engine(val spark: SparkSession) {
                 "XLSX is a small-data backend — use a parquet or CSV database")
           rows += it.next().toSeq.map { case null => ""; case v => v.toString }
         }
-        Xlsx.Sheet(tm.sheetName, header +: rows.toSeq)
-    }
+        Some(Xlsx.Sheet(sheet, header +: rows.toSeq))
+      case _ => None
+    }}
     Xlsx.write(path, sheets)
   }
 
@@ -629,7 +628,7 @@ class Engine(val spark: SparkSession) {
                |OPTIONS (url '$url', dbtable '$dbtable')""".stripMargin)
           val cols = spark.table(s"`$db`.`$local`").schema.map(f =>
             ColumnMeta(f.name, f.dataType))
-          meta.put(db, local, TableMeta(cols, jdbc = true))
+          meta.put(db, local, TableMeta(cols, storage = Storage.Jdbc))
         }
       }
     } finally conn.close()
@@ -705,24 +704,22 @@ class Engine(val spark: SparkSession) {
         // A table created inside a Sheet database lives in the
         // workbook: bind it to the book and save (new empty sheet) —
         // reference src/databases/sheet/mod.rs:26-51.
-        val xlsxBook = meta.xlsxDb(db)
+        val storage = meta.xlsxDb(db).fold[Storage](Storage.Managed)(Storage.Xlsx(_, tbl))
         if (rest.trim.toUpperCase.startsWith("AS ")) {
           // CTAS: Spark-native; metadata derived from the result.
           spark.sql(s"CREATE TABLE `$db`.`$tbl` USING parquet ${rest.trim}")
           val cols = spark.table(s"`$db`.`$tbl`").schema.map(f =>
             ColumnMeta(f.name, f.dataType))
-          meta.put(db, tbl, TableMeta(cols,
-            xlsxPath = xlsxBook, sheetName = if (xlsxBook.isDefined) tbl else ""))
+          meta.put(db, tbl, TableMeta(cols, storage = storage))
         } else {
           val (block, _) = parenBlock(rest, 0)
           val cols = parseColumnDefs(block)
           val fields = cols.map(c => s"`${c.name}` ${typeName(c.dataType)}").mkString(", ")
           spark.sql(s"CREATE TABLE `$db`.`$tbl` ($fields) USING parquet")
-          meta.put(db, tbl, TableMeta(cols,
-            xlsxPath = xlsxBook, sheetName = if (xlsxBook.isDefined) tbl else ""))
+          meta.put(db, tbl, TableMeta(cols, storage = storage))
         }
         persistMeta(db, tbl)
-        xlsxBook.foreach(syncXlsx)
+        meta.xlsxDb(db).foreach(syncXlsx)
         Payload.Create
       case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
     }
@@ -971,7 +968,7 @@ class Engine(val spark: SparkSession) {
     // advance (DbLock): UNIQUE and AUTO_INCREMENT checks are only
     // sound with no concurrent writer, the guarantee the reference
     // gets from its Sled directory flock (database/mod.rs:72-92).
-    withDbWriter(db)(insertDataFrameLocked(db, tbl, tm, cols, src))
+    withTableWriter(db, tbl)(insertDataFrameLocked(db, tbl, tm, cols, src))
 
   private def insertDataFrameLocked(db: String, tbl: String, tm0: TableMeta,
                               cols: Seq[String], src: DataFrame): (Payload, DataFrame) = {
@@ -981,14 +978,6 @@ class Engine(val spark: SparkSession) {
     // reproduces). Re-read inside the critical section — AFTER the
     // cross-process sync, so another process's counter advance and
     // rows are visible to the fill and the constraint checks.
-    val tmPre = meta.get(db, tbl).getOrElse(tm0)
-    if (!tmPre.jdbc && tmPre.csvPath.isEmpty && tmPre.xlsxPath.isEmpty) {
-      // First writer after a crashed COMPACT swap converges the table
-      // before appending to it (manifest protocol) — one existence
-      // check on a known path when no crash happened.
-      repairCompactSwap(db, tbl)
-      syncExternalMeta(db, tbl)
-    }
     val tm = meta.get(db, tbl).getOrElse(tm0)
     cols.foreach(c => if (tm.column(c).isEmpty)
       throw new EngineException(s"unknown column $c in $db.$tbl"))
@@ -1134,7 +1123,7 @@ class Engine(val spark: SparkSession) {
             if (autoFilled == n) filledRows
             else if (autoFilled == 0L) out
             else out.filter(col(cm.name).isNotNull).unionAll(filledRows)
-        case None if notNullCols.nonEmpty || tm.xlsxPath.nonEmpty =>
+        case None if notNullCols.nonEmpty || tm.workbook.nonEmpty =>
           // count + all NOT NULL checks in the same narrow job; xlsx
           // tables also land here because the workbook bound check
           // below needs the row count before the write.
@@ -1177,13 +1166,13 @@ class Engine(val spark: SparkSession) {
     // the next process would re-issue them. A reader of a dirty
     // record recomputes the counter from max(id) over the data
     // (recoverDirtyCounter) before trusting it.
-    if (autoCol.isDefined && tm.csvPath.isEmpty && tm.xlsxPath.isEmpty) {
+    if (autoCol.isDefined && tm.storage.keepsMeta) {
       meta.update(db, tbl)(_.copy(counterDirty = true))
       persistMeta(db, tbl)
     }
 
-    tm.csvPath match {
-      case Some(path) =>
+    tm.storage match {
+      case Storage.Csv(path, _) =>
         // CSV table = one local file (reference csv backend): append
         // rendered lines and refresh the catalog's file cache. Rows
         // stream through toLocalIterator, so partitions arrive one at
@@ -1208,7 +1197,7 @@ class Engine(val spark: SparkSession) {
         } finally fw.close()
         if (n < 0) n = written
         spark.catalog.refreshTable(s"`$db`.`$tbl`")
-      case None =>
+      case _ =>
         // Enforce the workbook bound BEFORE the mirror write: checking
         // only at sync time would commit the rows to the parquet
         // mirror, then fail the book rewrite — leaving the table
@@ -1216,7 +1205,7 @@ class Engine(val spark: SparkSession) {
         // workbook wedged. INSERT is the only growth path, so this
         // pre-check keeps table and book consistent; the streaming
         // check in syncXlsx stays as the backstop.
-        tm.xlsxPath.foreach { _ =>
+        tm.workbook.foreach { _ =>
           val have = spark.table(s"`$db`.`$tbl`").count()
           if (have + n > xlsxMaxSyncRows)
             throw new EngineException(
@@ -1240,7 +1229,7 @@ class Engine(val spark: SparkSession) {
         // serial-encode time it reclaims. The un-widened write is the
         // measured optimum; at cluster scale source partitions exceed
         // cores anyway.)
-        tm.xlsxPath.foreach(syncXlsx)
+        tm.workbook.foreach(syncXlsx)
     }
     autoCol.foreach(_ =>
       meta.update(db, tbl)(m =>
@@ -1264,10 +1253,7 @@ class Engine(val spark: SparkSession) {
     sql match {
       case re(rawName, setPart, wherePart) =>
         val (db, tbl) = resolve(rawName)
-        val tm = requireMeta(db, tbl)
-        if (tm.jdbc) throw new EngineException(
-          s"UPDATE on JDBC-mounted table $db.$tbl is not supported (INSERT is); " +
-            "run the update in the external database")
+        val tm = rewritableMeta("UPDATE", db, tbl)
         // The first writer after a crashed swap converges the table
         // before reading its file layout (manifest protocol).
         withTableWriter(db, tbl) {
@@ -1285,82 +1271,83 @@ class Engine(val spark: SparkSession) {
             .map(a => when(cond, a).otherwise(col(cm.name)).as(cm.name))
             .getOrElse(col(cm.name))
         }
-        if (tm.csvPath.isEmpty) {
-          // Copy-on-write at parquet-FILE granularity: a narrow
-          // discovery scan (predicate columns only, filters pushed to
-          // the parquet reader) finds the files holding matches; only
-          // those files are read full-width, rewritten straight into
-          // staging, and swapped in — every other file survives
-          // untouched. With the CREATE INDEX clustered layout, a
-          // selective UPDATE on the indexed column touches O(matching
-          // range) files, not the table. Without a WHERE every file is
-          // affected, listed from the directory with no job.
-          val affected =
-            if (wherePart == null) dataFiles(db, tbl).map(_._1) else inputFiles(t.filter(cond))
-          if (affected.isEmpty) return Payload.Update(0L)
-          // Matched and scanned rows (every row scanned is rewritten,
-          // UPDATE is 1:1 — the parity gate's expectation) and the
-          // nulls of every assigned NOT NULL column are observed on the
-          // staging write job itself — no separate pass.
-          val notNullAssigned = tm.columns.filter(c => !c.nullable && assigns.contains(c.name))
-          val obs = org.apache.spark.sql.Observation()
-          // schema passed explicitly: avoids a footer-inference job
-          val out = spark.read.schema(t.schema).parquet(affected: _*)
-            .select(projection :+ cond.as("__graft_m"): _*)
-            .observe(obs,
-              coalesce(sum(when(col("__graft_m"), 1L).otherwise(0L)), lit(0L)).as("n_matched"),
-              count(lit(1)).as("n_rows") +: notNullAssigned.map(cm =>
-                coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${cm.name}")): _*)
-            .drop("__graft_m")
-          stagedSwap(db, tbl, affected, Some(out)) { staged =>
-            val m = obs.get
-            notNullAssigned.foreach { cm =>
-              if (m(s"__nn_${cm.name}").asInstanceOf[Long] > 0)
+        tm.storage match {
+          case csv: Storage.Csv =>
+            // CSV storage is one local file: a whole rewrite from a
+            // checkpoint, the affected-row count an observed metric on
+            // the single scan.
+            val obs = org.apache.spark.sql.Observation()
+            val out = t
+              .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
+              .select(projection: _*)
+              .localCheckpoint(eager = true, Engine.StagingLevel)
+            val n = obs.get("n_matched").asInstanceOf[Long]
+            tm.columns.filter(!_.nullable).filter(c => assigns.contains(c.name)).foreach { cm =>
+              if (out.filter(col(cm.name).isNull).limit(1).count() > 0)
                 throw new EngineException(s"null value in NOT NULL column ${cm.name}")
             }
             tm.uniqueColumns.filter(c => assigns.contains(c.name)).foreach { cm =>
-              // Duplicates can span rewritten and untouched rows: check
-              // the union (one column scanned from the untouched files).
-              // Without a WHERE nothing is untouched — and dataFiles'
-              // `file:/` URIs never string-match input_file_name()'s
-              // `file:///` ones, so the staged rows are checked alone.
-              val rewritten = staged.select(col(cm.name))
-              val scope = if (wherePart == null) rewritten
-                else t.filter(!input_file_name().isin(affected: _*))
-                  .select(col(cm.name)).unionAll(rewritten)
-              val dups = scope.filter(col(cm.name).isNotNull)
+              val dups = out.filter(col(cm.name).isNotNull)
                 .groupBy(col(cm.name)).count().filter(col("count") > 1)
               if (dups.limit(1).count() > 0)
                 throw new EngineException(s"duplicate entry in unique column ${cm.name}")
             }
-            m("n_rows").asInstanceOf[Long]
-          }
-          val n = obs.get("n_matched").asInstanceOf[Long]
-          persistMeta(db, tbl) // epoch stamp: other processes refresh
-          maybeAutoCompact(db, tbl) // opt-in, under the held writer lock
-          Payload.Update(n)
-        } else {
-          // CSV storage is one local file: a whole rewrite from a
-          // checkpoint, the affected-row count an observed metric on
-          // the single scan.
-          val obs = org.apache.spark.sql.Observation()
-          val out = t
-            .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
-            .select(projection: _*)
-            .localCheckpoint(eager = true, Engine.StagingLevel)
-          val n = obs.get("n_matched").asInstanceOf[Long]
-          tm.columns.filter(!_.nullable).filter(c => assigns.contains(c.name)).foreach { cm =>
-            if (out.filter(col(cm.name).isNull).limit(1).count() > 0)
-              throw new EngineException(s"null value in NOT NULL column ${cm.name}")
-          }
-          tm.uniqueColumns.filter(c => assigns.contains(c.name)).foreach { cm =>
-            val dups = out.filter(col(cm.name).isNotNull)
-              .groupBy(col(cm.name)).count().filter(col("count") > 1)
-            if (dups.limit(1).count() > 0)
-              throw new EngineException(s"duplicate entry in unique column ${cm.name}")
-          }
-          rewriteCsvFile(db, tbl, tm.csvPath.get, out)
-          Payload.Update(n)
+            rewriteCsvFile(db, tbl, csv, out)
+            Payload.Update(n)
+          case _ =>
+            // Copy-on-write at parquet-FILE granularity: a narrow
+            // discovery scan (predicate columns only, filters pushed to
+            // the parquet reader) finds the files holding matches; only
+            // those files are read full-width, rewritten straight into
+            // staging, and swapped in — every other file survives
+            // untouched. With the CREATE INDEX clustered layout, a
+            // selective UPDATE on the indexed column touches O(matching
+            // range) files, not the table. Without a WHERE every file is
+            // affected, listed from the directory with no job.
+            val affected =
+              if (wherePart == null) dataFiles(db, tbl).map(_._1) else inputFiles(t.filter(cond))
+            if (affected.isEmpty) return Payload.Update(0L)
+            // Matched and scanned rows (every row scanned is rewritten,
+            // UPDATE is 1:1 — the parity gate's expectation) and the
+            // nulls of every assigned NOT NULL column are observed on the
+            // staging write job itself — no separate pass.
+            val notNullAssigned = tm.columns.filter(c => !c.nullable && assigns.contains(c.name))
+            val obs = org.apache.spark.sql.Observation()
+            // schema passed explicitly: avoids a footer-inference job
+            val out = spark.read.schema(t.schema).parquet(affected: _*)
+              .select(projection :+ cond.as("__graft_m"): _*)
+              .observe(obs,
+                coalesce(sum(when(col("__graft_m"), 1L).otherwise(0L)), lit(0L)).as("n_matched"),
+                count(lit(1)).as("n_rows") +: notNullAssigned.map(cm =>
+                  coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${cm.name}")): _*)
+              .drop("__graft_m")
+            stagedSwap(db, tbl, affected, Some(out)) { staged =>
+              val m = obs.get
+              notNullAssigned.foreach { cm =>
+                if (m(s"__nn_${cm.name}").asInstanceOf[Long] > 0)
+                  throw new EngineException(s"null value in NOT NULL column ${cm.name}")
+              }
+              tm.uniqueColumns.filter(c => assigns.contains(c.name)).foreach { cm =>
+                // Duplicates can span rewritten and untouched rows: check
+                // the union (one column scanned from the untouched files).
+                // Without a WHERE nothing is untouched — and dataFiles'
+                // `file:/` URIs never string-match input_file_name()'s
+                // `file:///` ones, so the staged rows are checked alone.
+                val rewritten = staged.select(col(cm.name))
+                val scope = if (wherePart == null) rewritten
+                  else t.filter(!input_file_name().isin(affected: _*))
+                    .select(col(cm.name)).unionAll(rewritten)
+                val dups = scope.filter(col(cm.name).isNotNull)
+                  .groupBy(col(cm.name)).count().filter(col("count") > 1)
+                if (dups.limit(1).count() > 0)
+                  throw new EngineException(s"duplicate entry in unique column ${cm.name}")
+              }
+              m("n_rows").asInstanceOf[Long]
+            }
+            val n = obs.get("n_matched").asInstanceOf[Long]
+            persistMeta(db, tbl) // epoch stamp: other processes refresh
+            maybeAutoCompact(db, tbl) // opt-in, under the held writer lock
+            Payload.Update(n)
         }
         }
       case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
@@ -1372,10 +1359,7 @@ class Engine(val spark: SparkSession) {
     sql match {
       case re(rawName, wherePart) =>
         val (db, tbl) = resolve(rawName)
-        val tm = requireMeta(db, tbl)
-        if (tm.jdbc) throw new EngineException(
-          s"DELETE on JDBC-mounted table $db.$tbl is not supported (INSERT is); " +
-            "run the delete in the external database")
+        val tm = rewritableMeta("DELETE", db, tbl)
         // The first writer after a crashed swap converges the table
         // before reading its file layout (manifest protocol).
         withTableWriter(db, tbl) {
@@ -1401,19 +1385,29 @@ class Engine(val spark: SparkSession) {
             Some(!r.isNullAt(0) && r.getBoolean(0))
           case _ => None
         }
-        (condOpt, foldedTrue) match {
-          case (_, Some(false)) => Payload.Delete(0L)
-          case (_, Some(true)) if tm.csvPath.isDefined =>
+        (condOpt, foldedTrue, tm.storage) match {
+          case (_, Some(false), _) => Payload.Delete(0L)
+          case (_, Some(true), csv: Storage.Csv) =>
             val n = t.count()
-            rewriteCsvFile(db, tbl, tm.csvPath.get, t.limit(0))
+            rewriteCsvFile(db, tbl, csv, t.limit(0))
             Payload.Delete(n)
-          case (_, Some(true)) =>
+          case (Some(cond), None, csv: Storage.Csv) =>
+            // CSV storage is one file — whole rewrite, count observed
+            // on the same scan.
+            val obs = org.apache.spark.sql.Observation()
+            val kept = t
+              .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
+              .filter(!cond || cond.isNull).localCheckpoint(eager = true, Engine.StagingLevel)
+            val n = obs.get("n_matched").asInstanceOf[Long]
+            rewriteCsvFile(db, tbl, csv, kept)
+            Payload.Delete(n)
+          case (_, Some(true), _) =>
             val origs = dataFiles(db, tbl).map(_._1)
             val n = footerRowCount(hadoopConf, origs.map(pathOfUri))
             stagedSwap(db, tbl, origs, None)(_ => 0L)
             persistMeta(db, tbl) // epoch stamp: other processes refresh
             Payload.Delete(n)
-          case (Some(cond), None) if tm.csvPath.isEmpty =>
+          case (Some(cond), None, _) =>
             // File-granular copy-on-write, like UPDATE: narrow
             // discovery scan → read only the files holding matches →
             // stage their surviving rows → swap them in. The
@@ -1443,17 +1437,7 @@ class Engine(val spark: SparkSession) {
               maybeAutoCompact(db, tbl) // opt-in, under the held writer lock
               Payload.Delete(n)
             }
-          case (Some(cond), None) =>
-            // CSV storage is one file — whole rewrite, count observed
-            // on the same scan.
-            val obs = org.apache.spark.sql.Observation()
-            val kept = t
-              .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
-              .filter(!cond || cond.isNull).localCheckpoint(eager = true, Engine.StagingLevel)
-            val n = obs.get("n_matched").asInstanceOf[Long]
-            rewriteCsvFile(db, tbl, tm.csvPath.get, kept)
-            Payload.Delete(n)
-          case (None, None) => throw new IllegalStateException("unreachable")
+          case (None, None, _) => throw new IllegalStateException("unreachable")
         }
         }
       case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
@@ -1485,14 +1469,14 @@ class Engine(val spark: SparkSession) {
     * a `df` with real work behind it comes checkpointed: UPDATE, DELETE
     * with a WHERE and CREATE INDEX pass an eager checkpoint; TRUNCATE
     * and an unconditional DELETE pass an empty frame. */
-  private def rewriteCsvFile(db: String, tbl: String, path: String, df: DataFrame): Unit = {
+  private def rewriteCsvFile(db: String, tbl: String, csv: Storage.Csv, df: DataFrame): Unit = {
     val tm = meta.get(db, tbl).get
-    val target = java.nio.file.Paths.get(path).toAbsolutePath
+    val target = java.nio.file.Paths.get(csv.path).toAbsolutePath
     val tmp = java.nio.file.Files.createTempFile(
       target.getParent, s".${target.getFileName}", ".tmp")
     val w = java.nio.file.Files.newBufferedWriter(tmp)
     try {
-      if (tm.csvHasHeader) {
+      if (csv.header) {
         w.write(tm.columns.map(c => csvQuote(c.name)).mkString(","))
         w.write("\n")
       }
@@ -1535,9 +1519,11 @@ class Engine(val spark: SparkSession) {
           // Sheet table: the worksheet is named after the table — point
           // the meta at the new name and rewrite the book, else the
           // rename never persists to the workbook
-          meta.update(db, to)(m =>
-            if (m.xlsxPath.isDefined) m.copy(sheetName = to) else m)
-          meta.get(db, to).flatMap(_.xlsxPath).foreach(syncXlsx)
+          meta.update(db, to)(m => m.storage match {
+            case x: Storage.Xlsx => m.copy(storage = x.copy(sheet = to))
+            case _ => m
+          })
+          meta.get(db, to).flatMap(_.workbook).foreach(syncXlsx)
           persistMeta(db, to) // the moved dir carries the old file; re-stamp
         }
         Payload.AlterTable
@@ -1546,7 +1532,7 @@ class Engine(val spark: SparkSession) {
         val (db, tbl) = resolve(rawName)
         val from = cleanIdent(rawFrom); val to = cleanIdent(rawTo)
         withTableWriter(db, tbl) {
-          val tm = requireMeta(db, tbl)
+          val tm = rewritableMeta("ALTER TABLE", db, tbl)
           if (tm.column(from).isEmpty) throw new EngineException(s"unknown column $from")
           val newMeta = tm.copy(columns = tm.columns.map(c =>
             if (c.name.equalsIgnoreCase(from)) c.copy(name = to) else c))
@@ -1557,7 +1543,7 @@ class Engine(val spark: SparkSession) {
         val (db, tbl) = resolve(rawName)
         val cm = parseColumnDef(colDef.trim)
         withTableWriter(db, tbl) {
-          val tm = requireMeta(db, tbl)
+          val tm = rewritableMeta("ALTER TABLE", db, tbl)
           // Reference restricts ADD COLUMN types (alter_table/validate.rs:14-19)
           // and fills existing rows with the DEFAULT value.
           if (tm.column(cm.name).isDefined)
@@ -1578,7 +1564,7 @@ class Engine(val spark: SparkSession) {
         // may have ADDED the column, and skipping from the stale view
         // silently failed to drop a column that exists on disk.
         withTableWriter(db, tbl) {
-          val tm = requireMeta(db, tbl)
+          val tm = rewritableMeta("ALTER TABLE", db, tbl)
           tm.column(c) match {
             case None if ifExists != null => // silent no-op
               // (reference alter_table.rs DROP COLUMN IF EXISTS battery)
@@ -1595,44 +1581,28 @@ class Engine(val spark: SparkSession) {
   }
 
   /** The rewrite path for schema changes parquet can't do in place
-    * (ADD/DROP/RENAME COLUMN). CSV tables reject ALTER like the
-    * reference's per-backend exception list (tests/databases/csv.rs:30-35).
+    * (ADD/DROP/RENAME COLUMN), through the [[stagedSwap]] every
+    * rewriting statement takes. CSV tables reject ALTER like the
+    * reference's per-backend exception list (tests/databases/csv.rs:30-35);
+    * JDBC tables were refused by [[rewritableMeta]].
     *
-    * A table with a [[swapDir]] takes the [[stagedSwap]] every
-    * rewriting statement takes: the new-shape rows land in a hidden
-    * `.alter_staging_*` directory, are row-parity-gated against the
-    * originals' footer counts (ALTER never changes the row count —
-    * driver-side metadata reads, no job), and enter with the NEW
-    * constraint record riding the manifest, so every crash point
-    * converges to a consistent (files, meta) pair — old shape or new,
-    * never half. The originals stay readable until the swap, so the
-    * rewrite is one scan→write job.
-    *
-    * Without a swap directory (a store without atomic rename, a JDBC
-    * table) ALTER keeps its own fallback, the one case [[stagedSwap]]'s
-    * does not cover because the catalog schema changes:
-    * localCheckpoint → DROP TABLE → CREATE → append. A crash between
-    * the DROP and the append loses the table. */
+    * The new-shape rows land in a hidden `.alter_staging_*` directory,
+    * are row-parity-gated against the originals' footer counts (ALTER
+    * never changes the row count — driver-side metadata reads, no
+    * job), and enter with the NEW constraint record riding the
+    * manifest, so every crash point converges to a consistent (files,
+    * meta) pair — old shape or new, never half. The originals stay
+    * readable until the swap, so the rewrite is one scan→write job.
+    * Without a [[swapDir]] the swap's fallback re-points the catalog
+    * shape before it appends: no statement drops a live table. */
   private def rewriteTable(db: String, tbl: String, newMeta: TableMeta, data: DataFrame): Unit = {
-    meta.get(db, tbl).foreach { tm =>
-      if (tm.csvPath.isDefined)
-        throw new EngineException("ALTER TABLE is not supported for CSV tables")
+    newMeta.storage match {
+      case _: Storage.Csv => throw new EngineException("ALTER TABLE is not supported for CSV tables")
+      case _ =>
     }
-    swapDir(db, tbl) match {
-      case Some(_) =>
-        val origUris = dataFiles(db, tbl).map(_._1)
-        val rows = footerRowCount(hadoopConf, origUris.map(pathOfUri))
-        stagedSwap(db, tbl, origUris, Some(data), Some(newMeta), ".alter_staging_")(_ => rows)
-      case None =>
-        val out = data.localCheckpoint(eager = true, Engine.StagingLevel)
-        spark.sql(s"DROP TABLE `$db`.`$tbl`")
-        val fields = newMeta.columns.map(c => s"`${c.name}` ${typeName(c.dataType)}").mkString(", ")
-        spark.sql(s"CREATE TABLE `$db`.`$tbl` ($fields) USING parquet")
-        out.write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`")
-        meta.put(db, tbl, newMeta)
-        persistMeta(db, tbl)
-        newMeta.xlsxPath.foreach(syncXlsx)
-    }
+    val origUris = dataFiles(db, tbl).map(_._1)
+    val rows = footerRowCount(hadoopConf, origUris.map(pathOfUri))
+    stagedSwap(db, tbl, origUris, Some(data), Some(newMeta), ".alter_staging_")(_ => rows)
   }
 
   // ------------------------------------------------------------------
@@ -1644,9 +1614,7 @@ class Engine(val spark: SparkSession) {
     sql match {
       case re(rawName) =>
         val (db, tbl) = resolve(rawName)
-        if (meta.get(db, tbl).exists(_.jdbc)) throw new EngineException(
-          s"TRUNCATE on JDBC-mounted table $db.$tbl is not supported (INSERT is); " +
-            "truncate in the external database")
+        rewritableMeta("TRUNCATE", db, tbl)
         // Writer lock + repair-first (round-17 verdict task 1):
         // TRUNCATE after a torn swap would otherwise orphan the stale
         // manifest over an emptied table, and an unserialized TRUNCATE
@@ -1656,11 +1624,11 @@ class Engine(val spark: SparkSession) {
           // Reference resets the auto-increment counter on truncate
           // (alter_table/truncate.rs:8-40).
           val reset = tm.copy(autoCounter = 1L, counterDirty = false)
-          tm.csvPath match {
-            case Some(path) =>
-              rewriteCsvFile(db, tbl, path, spark.table(s"`$db`.`$tbl`").limit(0))
+          tm.storage match {
+            case csv: Storage.Csv =>
+              rewriteCsvFile(db, tbl, csv, spark.table(s"`$db`.`$tbl`").limit(0))
               meta.put(db, tbl, reset)
-            case None =>
+            case _ =>
               // The data files are swapped out for nothing, the counter
               // reset riding the manifest, never SQL TRUNCATE: that
               // deletes the whole directory, `.graft_meta` included,
@@ -1709,7 +1677,7 @@ class Engine(val spark: SparkSession) {
     * (loud beats lossy); O(KB) driver-side write. */
   private def persistMeta(db: String, tbl: String): Unit =
     meta.get(db, tbl).foreach { tm0 =>
-      if (!tm0.jdbc && tm0.csvPath.isEmpty && tm0.xlsxPath.isEmpty)
+      if (tm0.storage.keepsMeta)
         tableDirectory(db, tbl).foreach { tdir =>
           // Epoch bump BEFORE the write: the stamped file is how other
           // processes detect this mutation (see [[syncExternalMeta]]).
@@ -1751,7 +1719,7 @@ class Engine(val spark: SparkSession) {
   private def adoptExternalMeta(db: String, tbl: String): Boolean = {
     var adopted = false
     meta.get(db, tbl).foreach { m =>
-      if (!m.jdbc && m.csvPath.isEmpty && m.xlsxPath.isEmpty)
+      if (m.storage.keepsMeta)
         tableDirectory(db, tbl).flatMap(loadPersistedMeta).foreach { p =>
           if (p.epoch != m.epoch || p.autoCounter > m.autoCounter) {
             adopted = true
@@ -1766,10 +1734,7 @@ class Engine(val spark: SparkSession) {
             // in-flight state the persisted record predates.
             val shapeChanged = p.columns.map(c => (c.name, c.dataType)) !=
               m.columns.map(c => (c.name, c.dataType))
-            meta.update(db, tbl)(cur => p.copy(
-              csvPath = cur.csvPath, csvHasHeader = cur.csvHasHeader,
-              xlsxPath = cur.xlsxPath, sheetName = cur.sheetName,
-              jdbc = cur.jdbc,
+            meta.update(db, tbl)(cur => p.copy(storage = cur.storage,
               autoCounter = math.max(cur.autoCounter, p.autoCounter),
               epoch = math.max(cur.epoch, p.epoch),
               counterDirty = cur.counterDirty || p.counterDirty))
@@ -1791,9 +1756,9 @@ class Engine(val spark: SparkSession) {
 
   /** Re-point the session catalog's data schema for `db.tbl` at
     * `schema` — the catalog-side half of adopting another process's
-    * ALTER TABLE (see [[syncExternalMeta]]) and of the staged ALTER
-    * rewrite. `alterTableDataSchema` is the sanctioned API but refuses
-    * any change that REMOVES an old column name (so cross-process
+    * ALTER TABLE (see [[syncExternalMeta]]) and of this session's
+    * ([[rewriteTable]]). `alterTableDataSchema` is the sanctioned API
+    * but refuses any change that REMOVES an old column name (so
     * DROP/RENAME COLUMN would never sync); fall back to replacing the
     * whole table definition, then VERIFY the catalog took it — the
     * Hive external catalog silently preserves the old schema on a
@@ -1816,7 +1781,7 @@ class Engine(val spark: SparkSession) {
       }
     } catch {
       case e: Exception => throw new EngineException(
-        s"table $db.$tbl was re-shaped by another process and the " +
+        s"table $db.$tbl was re-shaped and the " +
           s"catalog schema could not follow (${e.getMessage}); " +
           "re-mount the database to continue")
     }
@@ -1884,19 +1849,21 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  /** Writer-lock + crash-repair bracket for table-REWRITING mutations
-    * (UPDATE, DELETE, ALTER TABLE, CREATE INDEX, TRUNCATE — round-17
-    * verdict task 1). Without it, a torn COMPACT
-    * swap's duplicate view is what `spark.table` returns — and these
-    * paths REWRITE the table from that view, baking the duplicates in
+  /** Writer-lock + crash-repair bracket for the mutations that read a
+    * table's file layout (INSERT, UPDATE, DELETE, ALTER TABLE, CREATE
+    * INDEX, TRUNCATE, COMPACT — round-17 verdict task 1): on a table
+    * that keeps `.graft_meta`, the first writer after a crashed swap
+    * converges it (one existence check on a known path when no crash
+    * happened) and adopts another process's record. Without it, a torn
+    * COMPACT swap's duplicate view is what `spark.table` returns — and
+    * these paths REWRITE the table from that view, baking the duplicates in
     * permanently and destroying the manifest evidence; and DDL racing
     * DML was not serialized at all (an INSERT racing CREATE INDEX's
     * read-cluster-overwrite lost its rows). The reference serializes
     * every mutation behind one mutex (src/database/mod.rs:72-92). */
   private def withTableWriter[A](db: String, tbl: String)(f: => A): A =
     withDbWriter(db) {
-      if (meta.get(db, tbl).forall(m =>
-        !m.jdbc && m.csvPath.isEmpty && m.xlsxPath.isEmpty)) {
+      if (meta.get(db, tbl).forall(_.storage.keepsMeta)) {
         repairCompactSwap(db, tbl)
         syncExternalMeta(db, tbl)
       }
@@ -1955,28 +1922,51 @@ class Engine(val spark: SparkSession) {
     *    [[compactCore]]);
     *  - no constraint re-checks: compaction moves rows, it does not
     *    change them.
-    * The auto-threshold that recommends compaction is surfaced by
-    * EXPLAIN FILES <t> (see [[explainFiles]]): more than
-    * [[Engine.CompactRecommendMinSmallFiles]] sub-target files AND
-    * 4x more files than the compacted layout would have. */
+    * EXPLAIN FILES <t> recommends it ([[compactRecommended]]). */
   private def compactTable(sql: String): Payload = {
     val re = """(?is)COMPACT\s+TABLE\s+([`"\w.]+)(?:\s+TARGET\s+(\d+))?\s*""".r
     sql match {
       case re(rawName, targetMb) =>
         val (db, tbl) = resolve(rawName)
-        val tm = requireMeta(db, tbl)
-        if (tm.jdbc || tm.csvPath.isDefined || tm.xlsxPath.isDefined)
-          throw new EngineException(
-            s"COMPACT TABLE applies to managed parquet tables; $db.$tbl is " +
-              "CSV/sheet/JDBC-backed (single-file or external storage)")
+        compactableMeta(db, tbl)
         val target =
           Option(targetMb).map(_.toLong).getOrElse(Engine.DefaultCompactTargetMb) << 20
         val labels = Seq("files_in", "files_out", "rows_moved", "bytes_moved")
-        withDbWriter(db) {
-          Payload.Select(labels, Seq(compactCore(db, tbl, tm, target)))
-        }
+        Payload.Select(labels, Seq(withTableWriter(db, tbl)(compactCore(db, tbl, target))))
       case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
     }
+  }
+
+  /** The meta of a table COMPACT can pack: one that keeps
+    * `.graft_meta`, i.e. a managed parquet directory. */
+  private def compactableMeta(db: String, tbl: String): TableMeta = {
+    val tm = requireMeta(db, tbl)
+    if (!tm.storage.keepsMeta) throw new EngineException(
+      s"COMPACT TABLE applies to managed parquet tables; $db.$tbl is " +
+        "CSV/sheet/JDBC-backed (single-file or external storage)")
+    tm
+  }
+
+  /** The [[Engine.CompactPlan]] COMPACT TABLE runs and EXPLAIN
+    * COMPACT TABLE reports. */
+  private def compactPlan(db: String, tbl: String, tm: TableMeta, target: Long): Engine.CompactPlan = {
+    val files = dataFiles(db, tbl)
+    val small = files.filter(_._2 < target)
+    val neighbors =
+      if (small.size < 2) Seq.empty else overlappingAtTarget(tm, files.filter(_._2 >= target), small)
+    Engine.CompactPlan(files, small, neighbors, target)
+  }
+
+  /** The fragmentation verdict EXPLAIN FILES reports and
+    * `@auto_compact` acts on: at least
+    * [[Engine.CompactRecommendMinSmallFiles]] files under the
+    * [[Engine.DefaultCompactTargetMb]] target AND 4x more files than
+    * the compacted layout would have — fragmentation that measurably
+    * costs scan throughput, not routine small-table layout. */
+  private def compactRecommended(files: Seq[(String, Long)]): Boolean = {
+    val target = Engine.DefaultCompactTargetMb << 20
+    files.count(_._2 < target) >= Engine.CompactRecommendMinSmallFiles &&
+      files.size >= 4 * Engine.filesAtTarget(files.map(_._2).sum, target)
   }
 
   /** On an INDEXED table: the at-or-above-target files whose
@@ -2013,7 +2003,9 @@ class Engine(val spark: SparkSession) {
       case _ => Seq.empty
     }
 
-  /** The compaction engine, under an ALREADY-HELD writer lock: packs
+  /** The compaction engine, under an ALREADY-HELD [[withTableWriter]]
+    * (so a crashed prior swap is converged and another process's
+    * counter advance adopted before the listing): packs
     * every sub-target file — plus, on an indexed table, overlapping
     * at-target neighbors (see [[overlappingAtTarget]]) — into
     * ceil(bytes/target) rewrites. Returns the payload row
@@ -2026,20 +2018,11 @@ class Engine(val spark: SparkSession) {
     * [[repairCompactSwap]]. A crash BEFORE the manifest write leaves
     * the table bit-identical plus one invisible staging directory,
     * swept by the next compaction. */
-  private def compactCore(db: String, tbl: String, tm: TableMeta, target: Long): Seq[Any] = {
-    // Converge any crashed prior swap FIRST — its manifest supersedes
-    // whatever the directory listing would otherwise show. Then sync
-    // external metadata so the epoch stamp this compaction writes
-    // carries (not clobbers) another process's counter advance.
-    repairCompactSwap(db, tbl)
-    syncExternalMeta(db, tbl)
-    val sized = dataFiles(db, tbl)
-    val small = sized.filter(_._2 < target)
-    if (small.size < 2) return Seq(0, 0, 0L, 0L)
-    val moveSet = small ++ overlappingAtTarget(tm, sized.filter(_._2 >= target), small)
-    val totalMove = moveSet.map(_._2).sum
-    val k = math.max(1, math.ceil(totalMove.toDouble / target).toInt)
-    val paths = moveSet.map(_._1)
+  private def compactCore(db: String, tbl: String, target: Long): Seq[Any] = {
+    val tm = requireMeta(db, tbl)
+    val plan = compactPlan(db, tbl, tm, target)
+    if (!plan.wouldRun) return Seq(0, 0, 0L, 0L)
+    val paths = plan.moveSet.map(_._1)
     val t = spark.table(s"`$db`.`$tbl`")
     val tdir = tableDirectory(db, tbl).getOrElse(throw new EngineException(
       s"COMPACT TABLE requires a filesystem-backed managed parquet directory for $db.$tbl"))
@@ -2051,12 +2034,8 @@ class Engine(val spark: SparkSession) {
     requireAtomicRename(conf, tdir)
     // Stale staging dirs (a crashed prior compact or DML rewrite) are
     // invisible to readers but hold disk — sweep while we hold the lock.
-    TableFs.listPrefixed(conf, tdir, ".compact_staging_")
-      .foreach(TableFs.deleteRecursively(conf, _))
-    TableFs.listPrefixed(conf, tdir, ".dml_staging_")
-      .foreach(TableFs.deleteRecursively(conf, _))
-    TableFs.listPrefixed(conf, tdir, ".alter_staging_")
-      .foreach(TableFs.deleteRecursively(conf, _))
+    Seq(".compact_staging_", ".dml_staging_", ".alter_staging_").foreach(prefix =>
+      TableFs.listPrefixed(conf, tdir, prefix).foreach(TableFs.deleteRecursively(conf, _)))
     val obs = org.apache.spark.sql.Observation()
     // Explicit schema (no footer-inference job); the shuffle moves
     // only the rewrite set's bytes, never the whole table. Layout:
@@ -2070,9 +2049,9 @@ class Engine(val spark: SparkSession) {
     val scanned = spark.read.schema(t.schema).parquet(paths: _*)
     val packed = tm.indexes.headOption match {
       case Some(idx) => scanned
-        .repartitionByRange(k, col(idx.column))
+        .repartitionByRange(plan.filesOut, col(idx.column))
         .sortWithinPartitions(col(idx.column))
-      case None => scanned.repartition(k)
+      case None => scanned.repartition(plan.filesOut)
     }
     // The staged rows are gated against the rows the scan observed
     // flowing into the writer: one gate covering both a lost read and
@@ -2081,7 +2060,7 @@ class Engine(val spark: SparkSession) {
       Some(packed.observe(obs, coalesce(sum(lit(1L)), lit(0L)).as("n_rows"))),
       prefix = ".compact_staging_")(_ => obs.get("n_rows").asInstanceOf[Long])
     persistMeta(db, tbl) // epoch stamp: other processes re-list the swapped layout
-    Seq(moveSet.size, filesOut, obs.get("n_rows").asInstanceOf[Long], totalMove)
+    Seq(plan.moveSet.size, filesOut, obs.get("n_rows").asInstanceOf[Long], plan.bytesToMove)
   }
 
   /** Refuse the COMPACT swap on a filesystem whose `rename` is not
@@ -2184,12 +2163,13 @@ class Engine(val spark: SparkSession) {
     * [[rewriteCsvFile]]), JDBC tables, and stores without atomic
     * rename, where [[stagedSwap]] falls back and COMPACT refuses. */
   private def swapDir(db: String, tbl: String): Option[org.apache.hadoop.fs.Path] =
-    if (meta.get(db, tbl).exists(m => m.jdbc || m.csvPath.isDefined)) None
-    else {
-      val conf = hadoopConf
-      tableDirectory(db, tbl)
-        .filter(TableFs.isDirectoryStrict(conf, _))
-        .filter(atomicRenameOk(conf, _))
+    meta.get(db, tbl).fold[Storage](Storage.Managed)(_.storage) match {
+      case Storage.Managed | _: Storage.Xlsx =>
+        val conf = hadoopConf
+        tableDirectory(db, tbl)
+          .filter(TableFs.isDirectoryStrict(conf, _))
+          .filter(atomicRenameOk(conf, _))
+      case _: Storage.Csv | Storage.Jdbc => None
     }
 
   /** The one way a statement replaces a table's files: UPDATE, DELETE,
@@ -2209,27 +2189,28 @@ class Engine(val spark: SparkSession) {
     *    original rows together, nor an empty table;
     *  - CRASH: a death mid-swap converges through the manifest repair,
     *    and `.graft_meta` is only ever replaced atomically.
-    * FALLBACK, when there is no [[swapDir]]: the rows are checkpointed,
-    * checked and appended, then the originals get checked deletes and
+    * FALLBACK, when there is no [[swapDir]]: the rows are checkpointed
+    * and checked, the catalog takes `newMeta`'s shape (ALTER), the rows
+    * are appended, then the originals get checked deletes and
     * `newMeta` is persisted — correct end state, a documented
     * visible-duplicates window, because half a swap protocol on a
-    * copy+delete "rename" is worse than none. `.graft_meta` is never
-    * deleted on either path. Refreshes the table and re-renders an
-    * XLSX workbook; returns the number of files swapped in (0 on the
-    * fallback). */
+    * copy+delete "rename" is worse than none. No table is dropped and
+    * `.graft_meta` is never deleted on either path. Refreshes the
+    * table and re-renders an XLSX workbook; returns the number of
+    * files swapped in (0 on the fallback). */
   private def stagedSwap(db: String, tbl: String, origUris: Seq[String],
       newData: Option[DataFrame], newMeta: Option[TableMeta] = None,
       prefix: String = ".dml_staging_")(check: (=> DataFrame) => Long): Int = {
     lazy val empty = spark.table(s"`$db`.`$tbl`").limit(0)
     val swapped = swapDir(db, tbl) match {
       case None =>
-        newData match {
-          case Some(df) =>
-            val staged = df.localCheckpoint(eager = true, Engine.StagingLevel)
-            check(staged)
-            staged.write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`")
-          case None => check(empty)
+        val staged = newData.map(_.localCheckpoint(eager = true, Engine.StagingLevel))
+        check(staged.getOrElse(empty))
+        newMeta.foreach { m =>
+          syncCatalogShape(db, tbl, m.schema)
+          spark.catalog.refreshTable(s"`$db`.`$tbl`")
         }
+        staged.foreach(_.write.mode(SaveMode.Append).insertInto(s"`$db`.`$tbl`"))
         origUris.foreach(deleteDataFile)
         newMeta.foreach { m => meta.put(db, tbl, m); persistMeta(db, tbl) }
         0
@@ -2261,7 +2242,7 @@ class Engine(val spark: SparkSession) {
         } finally TableFs.deleteRecursively(conf, staging)
     }
     spark.catalog.refreshTable(s"`$db`.`$tbl`")
-    meta.get(db, tbl).flatMap(_.xlsxPath).foreach(syncXlsx)
+    meta.get(db, tbl).flatMap(_.workbook).foreach(syncXlsx)
     swapped
   }
 
@@ -2293,7 +2274,7 @@ class Engine(val spark: SparkSession) {
     * metadata reads up to the first non-empty file, no job. */
   private def storedEmpty(db: String, tbl: String, tm: TableMeta): Boolean = {
     val conf = hadoopConf
-    !tm.jdbc && tm.csvPath.isEmpty && tm.xlsxPath.isEmpty &&
+    tm.storage.keepsMeta &&
       dataFiles(db, tbl).forall(f => footerRowCount(conf, Seq(pathOfUri(f._1))) == 0L)
   }
 
@@ -2362,10 +2343,7 @@ class Engine(val spark: SparkSession) {
             new org.apache.hadoop.fs.Path(tdir, Engine.TableMetaName), body,
             Engine.metaReadable)
           val parsed = MetaJson.parse(body)
-          meta.update(db, tbl)(cur => parsed.copy(
-            csvPath = cur.csvPath, csvHasHeader = cur.csvHasHeader,
-            xlsxPath = cur.xlsxPath, sheetName = cur.sheetName,
-            jdbc = cur.jdbc))
+          meta.update(db, tbl)(cur => parsed.copy(storage = cur.storage))
           syncCatalogShape(db, tbl, parsed.schema)
         }
       } else
@@ -2389,16 +2367,9 @@ class Engine(val spark: SparkSession) {
   private def maybeAutoCompact(db: String, tbl: String): Unit = {
     val on = vars.get("auto_compact").map(_.trim).exists(v =>
       v.equalsIgnoreCase("true") || v == "1")
-    if (!on) return
-    val tm = requireMeta(db, tbl)
-    if (tm.jdbc || tm.csvPath.isDefined || tm.xlsxPath.isDefined) return
-    // Same arithmetic as EXPLAIN FILES' compact_recommended verdict.
-    val sized = dataFiles(db, tbl)
-    val target = Engine.DefaultCompactTargetMb << 20
-    val smallN = sized.count(_._2 < target)
-    val compacted = math.max(1, math.ceil(sized.map(_._2).sum.toDouble / target).toInt)
-    if (smallN >= Engine.CompactRecommendMinSmallFiles && sized.size >= 4 * compacted) {
-      val stats = withDbWriter(db)(compactCore(db, tbl, tm, target))
+    if (!on || !requireMeta(db, tbl).storage.keepsMeta) return
+    if (compactRecommended(dataFiles(db, tbl))) {
+      val stats = withTableWriter(db, tbl)(compactCore(db, tbl, Engine.DefaultCompactTargetMb << 20))
       vars("last_auto_compact") =
         s"'files_in=${stats(0)},files_out=${stats(1)},rows_moved=${stats(2)}'"
     }
@@ -2411,14 +2382,14 @@ class Engine(val spark: SparkSession) {
         val (db, tbl) = resolve(rawName)
         if (!spark.catalog.tableExists(s"`$db`.`$tbl`") && ifExists == null)
           throw new EngineException(s"table $db.$tbl does not exist")
-        val book = meta.get(db, tbl).flatMap(_.xlsxPath)
+        val book = meta.get(db, tbl).flatMap(_.workbook)
         spark.sql(s"DROP TABLE IF EXISTS `$db`.`$tbl`")
         meta.remove(db, tbl)
         // Sheet database: rewrite the workbook without the dropped
         // sheet; a zero-sheet book is invalid xlsx, so an emptied
         // database removes the file (recreated on next CREATE TABLE)
         book.foreach { path =>
-          if (meta.entries.exists(_._2.xlsxPath.contains(path))) syncXlsx(path)
+          if (meta.entries.exists(_._2.workbook.contains(path))) syncXlsx(path)
           else new java.io.File(path).delete()
         }
         Payload.DropTable
@@ -2462,11 +2433,13 @@ class Engine(val spark: SparkSession) {
           if (dups.limit(1).count() > 0)
             throw new EngineException(s"duplicate entry in unique column ${cm.name}")
         }
-        tm.csvPath match {
-          case Some(path) => if (t.limit(1).count() > 0)
-            rewriteCsvFile(db, tbl, path, t.sort(col(cm.name))
+        tm.storage match {
+          case csv: Storage.Csv => if (t.limit(1).count() > 0)
+            rewriteCsvFile(db, tbl, csv, t.sort(col(cm.name))
               .localCheckpoint(eager = true, Engine.StagingLevel))
-          case None => if (!tm.jdbc) clusterByIndex(db, tbl, cm, dataFiles(db, tbl).map(_._1))
+          case Storage.Managed | _: Storage.Xlsx =>
+            clusterByIndex(db, tbl, cm, dataFiles(db, tbl).map(_._1))
+          case Storage.Jdbc => // the external layout stays; the index is recorded
         }
         meta.update(db, tbl)(m => m.copy(indexes =
           m.indexes.filterNot(_.name.equalsIgnoreCase(cleanIdent(rawIdx))) :+
@@ -2650,14 +2623,9 @@ class Engine(val spark: SparkSession) {
   }
 
   /** EXPLAIN FILES <t>: the table's file-count/size histogram plus
-    * the COMPACT TABLE auto-threshold verdict — the fragmentation
-    * dashboard an operator consults before/after DML rounds. The
-    * recommendation fires when the table holds at least
-    * [[Engine.CompactRecommendMinSmallFiles]] files under the
-    * [[Engine.DefaultCompactTargetMb]] target AND 4x more files than
-    * the compacted layout would produce — fragmentation that
-    * measurably costs scan throughput, not routine small-table
-    * layout. */
+    * the COMPACT TABLE verdict ([[compactRecommended]]) — the
+    * fragmentation dashboard an operator consults before/after DML
+    * rounds. */
   private def explainFiles(rawName: String): Payload = {
     // resolve() handles backtick-quoted qualified names itself — a
     // prior cleanIdent stripped the OUTER backticks of `db`.`tbl`
@@ -2668,10 +2636,6 @@ class Engine(val spark: SparkSession) {
     val n = sized.size
     val bytes = sized.map(_._2).sum
     val target = Engine.DefaultCompactTargetMb << 20
-    val small = sized.count(_._2 < target)
-    val compacted = math.max(1, math.ceil(bytes.toDouble / target).toInt)
-    val recommended =
-      small >= Engine.CompactRecommendMinSmallFiles && n >= 4 * compacted
     def mb(b: Long) = f"${b / 1048576.0}%.3f"
     val rows = Seq(
       Seq[Any]("files", n.toString),
@@ -2679,9 +2643,10 @@ class Engine(val spark: SparkSession) {
       Seq[Any]("min_file_mb", if (n == 0) "0" else mb(sized.head._2)),
       Seq[Any]("p50_file_mb", if (n == 0) "0" else mb(sized((n - 1) / 2)._2)),
       Seq[Any]("max_file_mb", if (n == 0) "0" else mb(sized.last._2)),
-      Seq[Any](s"files_under_${Engine.DefaultCompactTargetMb}mb_target", small.toString),
-      Seq[Any]("compacted_layout_files", compacted.toString),
-      Seq[Any]("compact_recommended", recommended.toString),
+      Seq[Any](s"files_under_${Engine.DefaultCompactTargetMb}mb_target",
+        sized.count(_._2 < target).toString),
+      Seq[Any]("compacted_layout_files", Engine.filesAtTarget(bytes, target).toString),
+      Seq[Any]("compact_recommended", compactRecommended(sized).toString),
       // A torn COMPACT swap (process crash mid-swap) is visible here
       // before any writer converges it: readers see duplicate rows
       // until the next mutation replays the manifest. EXPLAIN is
@@ -2698,35 +2663,19 @@ class Engine(val spark: SparkSession) {
     Payload.Select(Seq("metric", "value"), rows)
   }
 
-  /** EXPLAIN COMPACT TABLE — the dry run. Same parse and same
-    * decision arithmetic as [[compactTable]] (files under target,
-    * ceil(bytes/target) outputs, index-aware layout), no lock, no
-    * rewrite. */
+  /** EXPLAIN COMPACT TABLE — the dry run: [[compactTable]]'s parse and
+    * [[compactPlan]], no lock, no rewrite. */
   private def explainCompact(arg: String): Payload = {
     val re = """(?is)COMPACT\s+TABLE\s+([`"\w.]+)(?:\s+TARGET\s+(\d+))?\s*""".r
     arg match {
       case re(rawName, targetMb) =>
         val (db, tbl) = resolve(rawName)
-        val tm = requireMeta(db, tbl)
-        if (tm.jdbc || tm.csvPath.isDefined || tm.xlsxPath.isDefined)
-          throw new EngineException(
-            s"COMPACT TABLE applies to managed parquet tables; $db.$tbl is " +
-              "CSV/sheet/JDBC-backed (single-file or external storage)")
+        val tm = compactableMeta(db, tbl)
         val tmbL = Option(targetMb).map(_.toLong).getOrElse(Engine.DefaultCompactTargetMb)
-        val target = tmbL << 20
-        val sized = dataFiles(db, tbl)
-        val small = sized.filter(_._2 < target)
-        val wouldRun = small.size >= 2
-        // Same decision arithmetic as compactCore, including the
-        // indexed rewrite's at-target neighbors (the files whose key
-        // ranges overlap the small-file span — pulled in so global
-        // range-disjointness survives; surfaced here so the operator
-        // sees that price before paying it).
-        val neighbors =
-          if (wouldRun) overlappingAtTarget(tm, sized.filter(_._2 >= target), small)
-          else Seq.empty
-        val totalMove = (small ++ neighbors).map(_._2).sum
-        val k = math.max(1, math.ceil(totalMove.toDouble / target).toInt)
+        // compactCore's plan, including the indexed rewrite's at-target
+        // neighbors (surfaced so the operator sees that price before
+        // paying it)
+        val plan = compactPlan(db, tbl, tm, tmbL << 20)
         val layout = tm.indexes.headOption match {
           case Some(idx) =>
             s"range-repartition on indexed column ${idx.column} + sort within " +
@@ -2736,14 +2685,14 @@ class Engine(val spark: SparkSession) {
         }
         val rows = Seq(
           Seq[Any]("target_mb", tmbL.toString),
-          Seq[Any]("files_total", sized.size.toString),
-          Seq[Any]("files_under_target", small.size.toString),
-          Seq[Any]("files_at_target_included", (if (wouldRun) neighbors.size else 0).toString),
-          Seq[Any]("bytes_to_move", totalMove.toString),
-          Seq[Any]("files_out", (if (wouldRun) k else 0).toString),
-          Seq[Any]("would_run", wouldRun.toString +
-            (if (!wouldRun) " — fewer than 2 sub-target files, nothing to pack" else "")),
-          Seq[Any]("layout", if (wouldRun) layout else "(no-op)"))
+          Seq[Any]("files_total", plan.files.size.toString),
+          Seq[Any]("files_under_target", plan.small.size.toString),
+          Seq[Any]("files_at_target_included", plan.neighbors.size.toString),
+          Seq[Any]("bytes_to_move", plan.bytesToMove.toString),
+          Seq[Any]("files_out", plan.filesOut.toString),
+          Seq[Any]("would_run", plan.wouldRun.toString +
+            (if (!plan.wouldRun) " — fewer than 2 sub-target files, nothing to pack" else "")),
+          Seq[Any]("layout", if (plan.wouldRun) layout else "(no-op)"))
         Payload.Select(Seq("metric", "value"), rows)
       case _ => throw new EngineException(s"cannot parse: EXPLAIN ${arg.take(60)}")
     }
@@ -2926,6 +2875,20 @@ class Engine(val spark: SparkSession) {
       tm
     }
 
+  /** Can a statement rewrite the table's rows? Every backend but a
+    * JDBC mount, whose rows live in the external database: UPDATE,
+    * DELETE, TRUNCATE and ALTER's column rewrites refuse it here, loud
+    * rather than a silent no-op (see [[Storage]]). */
+  private def rewritableMeta(stmt: String, db: String, tbl: String): TableMeta = {
+    val tm = requireMeta(db, tbl)
+    tm.storage match {
+      case Storage.Jdbc => throw new EngineException(
+        s"$stmt on JDBC-mounted table $db.$tbl is not supported (INSERT is); " +
+          "run it in the external database")
+      case Storage.Managed | _: Storage.Csv | _: Storage.Xlsx => tm
+    }
+  }
+
   private def csvQuote(s: String): String =
     if (s.exists(c => c == ',' || c == '"' || c == '\n'))
       "\"" + s.replace("\"", "\"\"") + "\""
@@ -3024,9 +2987,8 @@ object Engine {
 
   /** Storage level for every DML/DDL staging localCheckpoint: an
     * unbounded INSERT batch with a shuffle upstream, the CSV rewrites
-    * (UPDATE, DELETE with a WHERE, CREATE INDEX), ALTER's
-    * drop-and-recreate fallback, the staged swap's fallback on stores
-    * without atomic rename, and INSERT-in-CTE. Every other rewrite of a
+    * (UPDATE, DELETE with a WHERE, CREATE INDEX), the staged swap's
+    * fallback on stores without atomic rename, and INSERT-in-CTE. Every other rewrite of a
     * managed table stages into files instead (see stagedSwap). Disk
     * tier: staged blocks can outlive the statement (released on driver
     * GC, not statement end) and
@@ -3034,9 +2996,8 @@ object Engine {
     * half — the measured sf10 hazard that moved the operator
     * checkpoints to disk. 2-replica: localCheckpoint TRUNCATES
     * lineage, so an un-replicated block lost with its executor is
-    * unrecoverable — and ALTER's fallback drops the table before
-    * re-writing from the checkpoint, the highest-stakes window
-    * for block loss. One replica survives a single executor loss; in
+    * unrecoverable — and the swap's fallback deletes the originals
+    * once the checkpoint is appended. One replica survives a single executor loss; in
     * local mode replication is a no-op. Same rationale as
     * DistributedPrefix.shared / Dedup's posting checkpoint. */
   val StagingLevel: org.apache.spark.storage.StorageLevel =
@@ -3045,6 +3006,23 @@ object Engine {
   /** The row bound under which an INSERT batch is small: validated on
     * the driver and written as one file (see `boundedBatch`). */
   val SmallBatchRows: Long = 2000L
+
+  /** What a compaction at `target` bytes would move: every sub-target
+    * file, plus the at-target `neighbors` an indexed table pulls in
+    * (`overlappingAtTarget`), packed into ceil(bytes/target) outputs.
+    * It runs only with at least two sub-target files to pack; else it
+    * writes no file. */
+  private[engine] final case class CompactPlan(files: Seq[(String, Long)],
+      small: Seq[(String, Long)], neighbors: Seq[(String, Long)], target: Long) {
+    def wouldRun: Boolean = small.size >= 2
+    def moveSet: Seq[(String, Long)] = small ++ neighbors
+    def bytesToMove: Long = moveSet.map(_._2).sum
+    def filesOut: Int = if (wouldRun) filesAtTarget(bytesToMove, target) else 0
+  }
+
+  /** Files of `target` bytes that `bytes` pack into (at least one). */
+  private[engine] def filesAtTarget(bytes: Long, target: Long): Int =
+    math.max(1, math.ceil(bytes.toDouble / target).toInt)
 
   /** COMPACT TABLE's default output-file target (and EXPLAIN FILES'
     * histogram threshold): 128 MB, matching Spark's default

@@ -27,32 +27,41 @@ final case class ColumnMeta(
   * index would. */
 final case class IndexMeta(name: String, column: String, unique: Boolean)
 
+/** Where a table's rows live: the reference's backend enum
+  * `Connection` (src/database/mod.rs:25-38), bound per table at mount
+  * or CREATE TABLE and never persisted ([[MetaJson]]).
+  *  - [[Storage.Managed]]: a parquet directory that keeps `.graft_meta`;
+  *  - [[Storage.Csv]]: one local file (reference src/databases/csv),
+  *    appended by INSERT and rewritten whole by the other statements;
+  *  - [[Storage.Xlsx]]: a workbook sheet (reference src/databases/sheet)
+  *    queried through a parquet mirror; every mutation re-renders the book;
+  *  - [[Storage.Jdbc]]: an external database's table, read and INSERTed
+  *    through Spark's JDBC relation and never rewritten (input_file_name()
+  *    is empty on its scan; the reference's ODBC backend is read-mostly). */
+sealed trait Storage {
+  /** Keeps `.graft_meta`: crash repair, cross-process sync, COMPACT. */
+  def keepsMeta: Boolean = this match {
+    case Storage.Managed => true
+    case _: Storage.Csv | _: Storage.Xlsx | Storage.Jdbc => false
+  }
+}
+
+object Storage {
+  case object Managed extends Storage
+  final case class Csv(path: String, header: Boolean) extends Storage
+  final case class Xlsx(path: String, sheet: String) extends Storage
+  case object Jdbc extends Storage
+}
+
 final case class TableMeta(
     columns: Seq[ColumnMeta],
     indexes: Seq[IndexMeta] = Seq.empty,
-    /** Single-file CSV storage path — set only for CSV-database tables
-      * (reference src/databases/csv): inserts append to this file
-      * driver-side, since a lone CSV file is not distributed storage. */
-    csvPath: Option[String] = None,
-    csvHasHeader: Boolean = true,
-    /** XLSX workbook path + worksheet name — set for Sheet-database
-      * tables (reference src/databases/sheet): mutations rewrite the
-      * whole book, queries scan the parquet mirror. */
-    xlsxPath: Option[String] = None,
-    sheetName: String = "",
+    storage: Storage = Storage.Managed,
     /** Next AUTO_INCREMENT value (reference
       * src/database/auto_increment.rs:6-33 keeps per-column counters;
       * single counter per table covers the reference's single
       * auto-column usage). */
     autoCounter: Long = 1L,
-    /** True for tables mounted from an external JDBC database. INSERT
-      * writes through Spark's JDBC relation; UPDATE/DELETE are
-      * rejected loudly — the copy-on-write DML path is file-granular
-      * parquet machinery (input_file_name() is EMPTY on a JDBC scan,
-      * which would silently match zero files), and the reference's
-      * ODBC backend is likewise read-mostly (odbc/base.rs: "no writes
-      * of consequence"). */
-    jdbc: Boolean = false,
     /** Mutation epoch, bumped by every persisted mutation of the
       * table and stamped into its `.graft_meta` control file. Under
       * the writer lock, a mutation whose in-memory epoch differs from
@@ -72,6 +81,11 @@ final case class TableMeta(
       * max(id) over the data instead of re-issuing those ids. */
     counterDirty: Boolean = false) {
   def schema: StructType = StructType(columns.map(_.sparkField))
+  /** The workbook an [[Storage.Xlsx]] table mirrors. */
+  def workbook: Option[String] = storage match {
+    case Storage.Xlsx(path, _) => Some(path)
+    case _ => None
+  }
   def column(name: String): Option[ColumnMeta] =
     columns.find(_.name.equalsIgnoreCase(name))
   /** The columns every write path keeps unique: UNIQUE columns

@@ -14,10 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.fs.atomic.rename.schemes`) before any rewrite work. This
   * spec mounts a database on `unatomicfs://` — a registered scheme
   * deliberately NOT allowlisted — and pins that COMPACT fails loudly
-  * with the table bit-untouched, while UPDATE, DELETE and TRUNCATE
-  * take the swap's one fallback there: DML never renames — it appends
-  * its checked rows and makes checked deletes of the originals, and
-  * `.graft_meta` stays in place throughout. */
+  * with the table bit-untouched, while UPDATE, DELETE, TRUNCATE and
+  * ALTER's column rewrites take the swap's one fallback there: no
+  * rename and no dropped table — it appends the checked rows (ALTER
+  * re-points the catalog shape first) and makes checked deletes of the
+  * originals, and `.graft_meta` stays in place throughout. */
 class AtomicRenameGuardSpec extends AnyFunSuite {
 
   private lazy val spark = SparkFixture.session
@@ -104,5 +105,36 @@ class AtomicRenameGuardSpec extends AnyFunSuite {
     assert(all() == Seq(Seq(1L, 7L, 7L)), "TRUNCATE resets the counter")
     assert(intercept[EngineException](g.execute("INSERT INTO uat.w (v, u) VALUES (8, 7)"))
       .getMessage.contains("duplicate entry in unique column u"), "constraints survive")
+  }
+
+  test("ALTER ADD, RENAME and DROP COLUMN fall back there, keeping the table and .graft_meta") {
+    g.execute("CREATE TABLE uat.a (id INTEGER AUTO_INCREMENT, v INTEGER NOT NULL, u INTEGER UNIQUE)")
+    g.execute("INSERT INTO uat.a (v, u) SELECT id, id FROM range(50)")
+    val dir = java.nio.file.Paths.get(local, "a")
+    def rows(cols: String): Seq[Seq[Any]] =
+      spark.sql(s"SELECT $cols FROM uat.a ORDER BY id").collect().map(_.toSeq.map {
+        case n: Number => n.longValue; case x => x
+      }).toSeq
+    def alter(sql: String): Unit = {
+      val (p, jobs, seen) = DmlSwapSpec.jobsSeeing(spark, dir)(g.execute(sql))
+      assert(p == Payload.AlterTable)
+      assert(jobs > 0 && seen.size == jobs, s"$jobs jobs, ${seen.size} listings")
+      DmlSwapSpec.assertIntact(seen)
+      assert(new java.io.File(s"$local/a/${Engine.TableMetaName}").isFile, "the constraint record must stay")
+    }
+    val kept = (0L until 50L).map(i => Seq(i + 1, i, i))
+    alter("ALTER TABLE uat.a ADD COLUMN w INTEGER DEFAULT 3")
+    assert(rows("id, v, u, w") == kept.map(_ :+ 3L))
+    alter("ALTER TABLE uat.a RENAME COLUMN w TO x")
+    assert(rows("id, v, u, x") == kept.map(_ :+ 3L))
+    alter("ALTER TABLE uat.a DROP COLUMN x")
+    assert(spark.table("uat.a").columns.toSeq == Seq("id", "v", "u"))
+    assert(rows("id, v, u") == kept)
+    g.execute("INSERT INTO uat.a (v, u) VALUES (7, 100)")
+    assert(rows("id, v, u").last == Seq(51L, 7L, 100L), "the counter survives")
+    assert(intercept[EngineException](g.execute("INSERT INTO uat.a (v, u) VALUES (8, 100)"))
+      .getMessage.contains("duplicate entry in unique column u"), "UNIQUE survives")
+    assert(intercept[EngineException](g.execute("INSERT INTO uat.a (v, u) VALUES (NULL, 101)"))
+      .getMessage.contains("null value in NOT NULL column v"), "NOT NULL survives")
   }
 }

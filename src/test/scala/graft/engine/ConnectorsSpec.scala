@@ -65,6 +65,23 @@ class ConnectorsSpec extends AnyFunSuite {
       val cols = check2.getMetaData.getColumns(null, null, "EXT_PARTS", "PNAME")
       assert(cols.next() && cols.getString("TYPE_NAME") == "VARCHAR" && cols.getInt("COLUMN_SIZE") == 40)
     } finally check2.close()
+    // ALTER's column rewrites refuse like UPDATE/DELETE/TRUNCATE: the
+    // catalog keeps its USING JDBC entry, so INSERT still reaches Derby
+    val ae = intercept[EngineException](
+      g.execute("ALTER TABLE jdb.ext_parts ADD COLUMN c INTEGER"))
+    assert(ae.getMessage.contains("JDBC"), ae.getMessage)
+    val provider = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("ext_parts", Some("jdb"))).provider
+    assert(provider.exists(_.equalsIgnoreCase("jdbc")), s"catalog provider is now $provider")
+    assert(g.execute("INSERT INTO jdb.ext_parts VALUES (5, 'pin')") == Payload.Insert(1))
+    val check3 = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = check3.createStatement().executeQuery("SELECT COUNT(*) FROM ext_parts")
+      rs.next()
+      assert(rs.getInt(1) == 5, "the INSERT after the refused ALTER lands in Derby")
+      assert(!check3.getMetaData.getColumns(null, null, "EXT_PARTS", "C").next(),
+        "the external table gains no column")
+    } finally check3.close()
   }
 
   test("insert as CTE source returns the written rows") {

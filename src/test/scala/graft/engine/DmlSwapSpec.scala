@@ -170,6 +170,11 @@ class DmlSwapSpec extends AnyFunSuite {
       defRe.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
     }.toSet
     assert(callers == Set("swapDir", "requireAtomicRename"), s"atomicRenameOk called from $callers")
+    // no statement drops a live table: DROP TABLE is issued only by dropTable
+    val droppers = "\"DROP\\s+TABLE\\s".r.findAllMatchIn(src).map { m =>
+      defRe.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
+    }.toSet
+    assert(droppers == Set("dropTable"), s"DROP TABLE issued from $droppers")
   }
 }
 
