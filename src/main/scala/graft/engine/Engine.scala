@@ -15,9 +15,10 @@ import SqlText._
   *    Databases, tables, views and qualified `db.table` resolution are
   *    native; managed tables are parquet-backed (the Sled-analog
   *    default store), CSV databases mount a file per table.
-  *  - **Query path** = `spark.sql` → Catalyst. No hand-rolled planner;
-  *    the dialect delta lives in registered functions and the
-  *    statement dispatcher below.
+  *  - **Query path** = Spark's parser → Catalyst. No hand-rolled
+  *    planner; the dialect delta lives in registered functions and a
+  *    pre-analysis rewrite of the parsed plan ([[sqlDf]]), and every
+  *    query form is planned by one function, [[queryDf]].
   *  - **Constraint surface** Spark doesn't enforce — UNIQUE,
   *    AUTO_INCREMENT, DEFAULT, NOT NULL (reference
   *    src/executor/alter_row/insert.rs:10-98, validate_unique.rs:23-160,
@@ -49,7 +50,8 @@ import SqlText._
   *    row-group min/max stats provide the range pruning the
   *    reference's sorted KV index provides (src/data/index.rs:35-62).
   *
-  * Statement dispatch mirrors the reference executor
+  * A statement is classified once into a [[Statement]] and run by one
+  * match in [[execute]], like the reference executor
   * (/root/reference/src/executor/execute.rs:55-177).
   */
 class Engine(val spark: SparkSession) {
@@ -119,34 +121,91 @@ class Engine(val spark: SparkSession) {
   // Public API (reference glue/mod.rs:161-248, glue/select.rs:13-82)
   // ------------------------------------------------------------------
 
-  /** Execute one SQL statement. */
-  def execute(sql: String): Payload = {
-    val s = preprocess(stripTrailingSemi(sql))
-    dispatch(s)
+  /** Execute one SQL statement: classified once ([[Statement.parse]])
+    * and run by one match, like the reference executor
+    * (reference src/executor/execute.rs:55-177). */
+  def execute(sql: String): Payload = statement(sql) match {
+    case q: Statement.Query => selectPayload(queryDf(q))
+    case s: Statement.CreateDatabase => createDatabase(s)
+    case Statement.DropDatabase(name) =>
+      spark.sql(s"DROP DATABASE IF EXISTS `$name` CASCADE")
+      meta.removeXlsxDb(name)
+      meta.removeDb(name)
+      Payload.Success
+    case c: Statement.CreateTable => createTable(c)
+    case i: Statement.Insert => insert(i)
+    case u: Statement.Update => update(u)
+    case d: Statement.Delete => delete(d)
+    case a: Statement.Alter => alterTable(a)
+    case Statement.Truncate(table) => truncate(table)
+    case Statement.DropTable(table, ifExists) => dropTable(table, ifExists)
+    case c: Statement.CompactTable => compactTable(c)
+    case c: Statement.CreateIndex => createIndex(c)
+    case Statement.DropIndex(name, table) =>
+      val (db, tbl) = resolve(table)
+      meta.update(db, tbl)(m => m.copy(indexes = m.indexes.filterNot(_.name.equalsIgnoreCase(name))))
+      persistMeta(db, tbl)
+      Payload.Success
+    case Statement.SetVariable(name, value) => vars(name) = value; Payload.Success
+    case Statement.ExecuteFile(path) =>
+      executeMany(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))))
+      Payload.Success
+    case Statement.ShowOperators => showOperators()
+    case Statement.PassThrough(text, payload) => spark.sql(text); payload
+    case e: Statement.ExplainForm => explain(e)
   }
 
-  /** Variable substitution + dialect token rewrites. DATEADD must be
-    * renamed before parsing: Spark 4's grammar special-cases
-    * `DATEADD(unit, …)` with an unquoted unit keyword and throws on
-    * the MultiSQL string-literal form before function resolution ever
-    * runs, so the registered implementation would be unreachable.
-    * CAST type names map to the dialect (TEXT = string, FLOAT = f64). */
-  /** `SET @x = rhs` must keep its LHS verbatim — substituting an
-    * already-defined @x there turned every REASSIGNMENT into
-    * "SET <old value> = rhs", a parse error (found by the
-    * auto_compact on/off toggle). The RHS still substitutes, so
-    * `SET @y = @x` composes. */
+  /** `sql` classified after [[preprocess]]. `SET @x = rhs` keeps its
+    * LHS verbatim: substituting an already-defined @x there would turn
+    * every reassignment into "SET <old value> = rhs", a parse error.
+    * The RHS still substitutes, so `SET @y = @x` composes. */
+  private def statement(sql: String): Statement = Statement.parse(sql.trim.stripSuffix(";").trim match {
+    case setVarLhsRe(lhs, rhs) => lhs + preprocess(rhs)
+    case s => preprocess(s)
+  })
+
   private val setVarLhsRe = """(?is)(\s*SET\s+@[A-Za-z_]\w*\s*=\s*)(.+)""".r
 
+  private val tokenRewrites =
+    Seq("DATEADD(" -> "graft_dateadd(", "AS TEXT)" -> "AS STRING)", "AS FLOAT)" -> "AS DOUBLE)")
+
+  /** Variable substitution + dialect token rewrites, in one pass
+    * outside quotes. `@name` takes the variable's stored text (the
+    * reference substitutes variables into the expression tree
+    * pre-planning, `simplify_by_tempdb`, set_variable.rs:6-20).
+    * DATEADD must be renamed before parsing: Spark 4's grammar
+    * special-cases `DATEADD(unit, …)` with an unquoted unit keyword
+    * and throws on the MultiSQL string-literal form before function
+    * resolution ever runs, so the registered implementation would be
+    * unreachable. CAST type names map to the dialect (TEXT = string,
+    * FLOAT = f64). */
   private def preprocess(sql: String): String = {
-    val substituted = sql match {
-      case setVarLhsRe(lhs, rhs) => lhs + substituteVars(rhs)
-      case _ => substituteVars(sql)
+    val out = new StringBuilder
+    var quote: Char = 0
+    var i = 0
+    def wordChar(k: Int) = k >= 0 && k < sql.length && (sql(k).isLetterOrDigit || sql(k) == '_')
+    while (i < sql.length) {
+      val c = sql(i)
+      if (quote != 0) {
+        out += c; if (c == quote) quote = 0; i += 1
+      } else if (c == '\'' || c == '"' || c == '`') {
+        quote = c; out += c; i += 1
+      } else if (c == '@' && vars.nonEmpty && i + 1 < sql.length && (sql(i + 1).isLetter || sql(i + 1) == '_')) {
+        var j = i + 1
+        while (wordChar(j)) j += 1
+        val name = sql.substring(i + 1, j)
+        out ++= vars.getOrElse(name, throw new EngineException(s"undefined session variable @$name"))
+        i = j
+      } else {
+        val hit = if (wordChar(i - 1)) None
+          else tokenRewrites.find { case (from, _) => sql.regionMatches(true, i, from, 0, from.length) }
+        hit match {
+          case Some((from, to)) => out ++= to; i += from.length
+          case None => out += c; i += 1
+        }
+      }
     }
-    var s = rewriteOutsideQuotes(substituted, "DATEADD(", "graft_dateadd(")
-    s = rewriteOutsideQuotes(s, "AS TEXT)", "AS STRING)")
-    s = rewriteOutsideQuotes(s, "AS FLOAT)", "AS DOUBLE)")
-    s
+    out.toString
   }
 
   /** Every `VALUES (…), (…)` list in the statement → a parenthesized
@@ -231,40 +290,58 @@ class Engine(val spark: SparkSession) {
       LocalRelation(df.queryExecution.analyzed.output, rows.flatten))
   }
 
-  private def rewriteOutsideQuotes(sql: String, from: String, to: String): String = {
-    val out = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) {
-        out += c
-        if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"' || c == '`') {
-        quote = c; out += c; i += 1
-      } else if (i + from.length <= sql.length &&
-          sql.regionMatches(true, i, from, 0, from.length) &&
-          (i == 0 || !(sql(i - 1).isLetterOrDigit || sql(i - 1) == '_'))) {
-        out ++= to
-        i += from.length
-      } else { out += c; i += 1 }
-    }
-    out.toString
-  }
-
   /** Execute a ';'-separated script, returning one payload each. */
   def executeMany(script: String): Seq[Payload] =
     splitStatements(script).map(execute)
 
-  /** SELECT as a distributed DataFrame (the form to use when the
-    * result doesn't fit on the driver — `execute` collects). Also
-    * accepts `EXECUTE OPERATOR …` (the pipeline-operator facade),
-    * whose result is a DataFrame like any query's. */
-  def query(sql: String): DataFrame = {
-    val s = preprocess(stripTrailingSemi(sql))
-    if (s.trim.toUpperCase.startsWith("EXECUTE OPERATOR")) operatorDf(s.trim)
-    else freshDf(s)
+  /** A query as a distributed DataFrame (the form to use when the
+    * result doesn't fit on the driver — `execute` collects). Accepts
+    * exactly the query forms `execute` runs ([[Statement.Query]]):
+    * SELECT, WITH (an INSERT-as-CTE-source runs its insert once, here),
+    * VALUES, TABLE, a parenthesized query and `EXECUTE OPERATOR …`.
+    * Any other statement throws an [[EngineException]] and runs
+    * nothing: writes, DDL and the rest go through `execute`, which
+    * enforces constraints and takes the writer lock. */
+  def query(sql: String): DataFrame = queryDf(queryOf(sql))
+
+  private def queryOf(sql: String): Statement.Query = statement(sql) match {
+    case q: Statement.Query => q
+    case _ => throw new EngineException(
+      s"not a query; run other statements through execute: ${sql.trim.take(60)}")
+  }
+
+  /** `q`, refused when its CTE writes: `what` plans or defers the
+    * query and must write nothing. */
+  private def readOnly(q: Statement.Query, what: String): Statement.Query =
+    if (q.writes) throw new EngineException(
+      s"$what does not take a query whose CTE writes (WITH … AS (INSERT …)); run it through execute")
+    else q
+
+  /** Every query form's plan — the one planning function behind
+    * `execute`, `query`, `selectAs*`, `selectJson`, `prepare`, EXPLAIN,
+    * CREATE TABLE … AS and INSERT's source. */
+  private def queryDf(q: Statement.Query): DataFrame = q match {
+    case Statement.Select(text) => freshDf(text)
+    case Statement.Values(text) => valuesDf(text)
+    case op: Statement.Operator => operatorDf(op)
+    case Statement.InsertCte(name, ins, rest) =>
+      // The reference's INSERT-as-CTE-source (set_expr.rs:83-97,
+      // tests/query/with.rs): the INSERT runs, and the rows it wrote
+      // become the CTE's table.
+      val (db, tbl, tm, cols, src) = parseInsert(ins)
+      val inserted = insertDataFrame(db, tbl, tm, cols, src)._2
+      inserted.createOrReplaceTempView(name)
+      val out = try {
+        // materialize before the temp view goes away
+        queryDf(rest).localCheckpoint(eager = true, Engine.StagingLevel)
+      } finally spark.catalog.dropTempView(name)
+      // The CTE-source INSERT appends files exactly like statement
+      // INSERT, so it runs the same opt-in post-DML hygiene — on the
+      // success path only: in a finally it would run after a failed
+      // trailing query, and its own exception (e.g. the COMPACT parity
+      // abort) would replace the query's.
+      maybeAutoCompact(db, tbl)
+      out
   }
 
   /** [[sqlDf]] plus the opt-in cross-process READ freshness probe
@@ -298,15 +375,10 @@ class Engine(val spark: SparkSession) {
     * Statement text that Spark analyzes on its own later (a CREATE
     * VIEW body re-read from the catalog) keeps Spark's float `/`
     * — documented divergence (README). */
-  private def sqlDf(sql: String): DataFrame =
+  private def sqlDf(sql: String): DataFrame = {
+    val p = graft.functions.Dialect.rewriteArithmetic(org.apache.spark.sql.graft.Shims.parse(spark, sql))
     org.apache.spark.sql.graft.Shims.ofRows(spark,
-      rewritePlan(org.apache.spark.sql.graft.Shims.parse(spark, sql)))
-
-  private def rewritePlan(
-      parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    val p = graft.functions.Dialect.rewriteArithmetic(parsed)
-    if (nullComparisonFalse) graft.functions.Dialect.rewriteNullCompare(p) else p
+      if (nullComparisonFalse) graft.functions.Dialect.rewriteNullCompare(p) else p)
   }
 
   /** Parse an expression fragment (UPDATE SET / WHERE) with the same
@@ -322,20 +394,20 @@ class Engine(val spark: SparkSession) {
   private def dialectExpr(s: String): Column =
     org.apache.spark.sql.graft.Shims.column(dialectExprTree(s))
 
-  /** A prepared query: parsed once, re-analyzed and re-executed per
-    * run (so it always sees current table state). The reference's
+  /** A prepared query: classified once, planned and run per execution
+    * (so it always sees current table state). The reference's
     * `pre_parse`/`execute_parsed` (glue/mod.rs:182-187). */
-  final class Prepared private[Engine] (
-      private[Engine] val plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+  final class Prepared private[Engine] (private[Engine] val query: Statement.Query)
 
-  def prepare(sql: String): Prepared =
-    new Prepared(rewritePlan(org.apache.spark.sql.graft.Shims.parse(
-      spark, preprocess(stripTrailingSemi(sql)))))
+  /** Prepares any query form [[query]] accepts, except one whose CTE
+    * writes: a prepared statement runs later, maybe many times, so it
+    * must not write. Anything else throws an [[EngineException]]. */
+  def prepare(sql: String): Prepared = new Prepared(readOnly(queryOf(sql), "prepare"))
 
-  def executePrepared(p: Prepared): Payload = {
-    val df = org.apache.spark.sql.graft.Shims.ofRows(spark, p.plan)
+  def executePrepared(p: Prepared): Payload = selectPayload(queryDf(p.query))
+
+  private def selectPayload(df: DataFrame): Payload =
     Payload.Select(df.columns.toSeq, boundedRows(df).map(_.toSeq))
-  }
 
   /** Reference `select_as_string`: rows rendered as display strings. */
   def selectAsString(sql: String): Seq[Seq[String]] = {
@@ -367,167 +439,61 @@ class Engine(val spark: SparkSession) {
   }
 
   // ------------------------------------------------------------------
-  // Dispatcher
-  // ------------------------------------------------------------------
-
-  private def dispatch(sql: String): Payload = {
-    val up = sql.toUpperCase
-    if (up.startsWith("SELECT") || up.startsWith("WITH") || up.startsWith("VALUES") || up.startsWith("(") || up.startsWith("TABLE "))
-      runSelect(sql)
-    else if (up.startsWith("CREATE DATABASE") || up.startsWith("CREATE SCHEMA"))
-      createDatabase(sql)
-    else if (up.startsWith("DROP DATABASE") || up.startsWith("DROP SCHEMA"))
-      dropDatabase(sql)
-    else if (up.startsWith("CREATE VIEW") || up.startsWith("CREATE OR REPLACE VIEW"))
-      { spark.sql(sql); Payload.Create }
-    else if (up.startsWith("DROP VIEW"))
-      { spark.sql(sql); Payload.DropTable }
-    else if (up.startsWith("CREATE TABLE"))
-      createTable(sql)
-    else if (up.startsWith("CREATE INDEX") || up.startsWith("CREATE UNIQUE INDEX"))
-      createIndex(sql)
-    else if (up.startsWith("DROP INDEX"))
-      dropIndex(sql)
-    else if (up.startsWith("INSERT"))
-      insert(sql)
-    else if (up.startsWith("UPDATE"))
-      update(sql)
-    else if (up.startsWith("DELETE"))
-      delete(sql)
-    else if (up.startsWith("ALTER TABLE"))
-      alterTable(sql)
-    else if (up.startsWith("TRUNCATE"))
-      truncate(sql)
-    else if (kw(up, "COMPACT"))
-      // keyword-boundary routing (kw), not a literal "COMPACT TABLE"
-      // prefix: compactTable's own regex accepts any whitespace
-      // between the keywords, so "COMPACT\tTABLE t" must reach it
-      // instead of falling through to a confusing generic error.
-      compactTable(sql)
-    else if (up.startsWith("DROP TABLE"))
-      dropTable(sql)
-    else if (up.startsWith("EXPLAIN"))
-      explain(sql)
-    else if (up.startsWith("SET "))
-      setVariable(sql)
-    else if (up.startsWith("EXECUTE FILE"))
-      executeFile(sql)
-    else if (up.startsWith("EXECUTE OPERATOR")) {
-      val df = operatorDf(sql.trim)
-      Payload.Select(df.columns.toSeq, boundedRows(df).map(_.toSeq))
-    }
-    else if (up.startsWith("SHOW OPERATORS"))
-      showOperators()
-    else if (up.startsWith("USE "))
-      { spark.sql(sql); Payload.Success }
-    else
-      throw new EngineException(s"unsupported statement: ${sql.take(60)}")
-  }
-
-  private def runSelect(sql: String): Payload = {
-    val df = selectDf(sql)
-    Payload.Select(df.columns.toSeq, boundedRows(df).map(_.toSeq))
-  }
-
-  private val insertCteRe = """(?is)WITH\s+([`"\w]+)\s+AS\s*\(.*""".r
-
-  /** SELECT evaluation, including the reference's INSERT-as-CTE-source
-    * (`WITH x AS (INSERT …) SELECT … FROM x` — set_expr.rs:83-97,
-    * tests/query/with.rs): the INSERT runs, and the rows it wrote
-    * become the CTE's table. */
-  private def selectDf(sql: String): DataFrame = sql match {
-    case _ if sql.trim.toUpperCase.startsWith("VALUES") =>
-      valuesDf(sql)
-    case insertCteRe(rawName) =>
-      val (body, end) = parenBlock(sql, sql.toUpperCase.indexOf("AS") + 2)
-      if (!body.trim.toUpperCase.startsWith("INSERT")) sqlDf(sql)
-      else {
-        val cteName = cleanIdent(rawName)
-        val (tgtDb, tgtTbl, inserted) = insertReturning(body.trim)
-        inserted.createOrReplaceTempView(cteName)
-        val out = try {
-          val rest = sql.substring(end).trim
-          val restSql = if (rest.startsWith(",")) "WITH " + rest.drop(1) else rest
-          // materialize before the temp view goes away
-          sqlDf(restSql).localCheckpoint(eager = true, Engine.StagingLevel)
-        } finally spark.catalog.dropTempView(cteName)
-        // The CTE-source INSERT appends files exactly like statement
-        // INSERT — it must run the same opt-in post-DML hygiene, or
-        // an auto_compact user's table fragments through precisely
-        // the path the feature exists for (round-16 verdict task 4).
-        // On the SUCCESS path only, not a finally (round-17 advice):
-        // in a finally it ran even when the trailing query failed, and
-        // its own exception (e.g. the COMPACT parity abort) replaced
-        // the query's — here it is a loud post-statement failure, the
-        // same contract as statement INSERT's hook.
-        maybeAutoCompact(tgtDb, tgtTbl)
-        out
-      }
-    case _ => freshDf(sql)
-  }
-
-  // ------------------------------------------------------------------
   // Databases (reference execute.rs:59-76,103-110; glue/mod.rs:110-129)
   // ------------------------------------------------------------------
-
-  private val createDbRe =
-    """(?is)CREATE\s+(?:DATABASE|SCHEMA)\s+(IF\s+NOT\s+EXISTS\s+)?([`"\w.]+)(?:\s+LOCATION\s+'([^']*)')?\s*""".r
 
   /** CREATE DATABASE name [LOCATION 'path'] — path sniffing like the
     * reference's `Connection::try_from` (glue/mod.rs:110-129):
     * `*.csv` file → CSV database (one table, schema inferred with the
     * unanimous-type-else-string policy), anything else → managed
     * parquet directory, mounting any parquet tables already present. */
-  private def createDatabase(sql: String): Payload = sql match {
-    case createDbRe(ifNot, rawName, location) =>
-      val name = cleanIdent(rawName)
-      val ifNotExists = ifNot != null
-      if (spark.catalog.databaseExists(name)) {
-        if (ifNotExists) return Payload.Success
-        throw new EngineException(s"database $name already exists")
-      }
-      Option(location) match {
-        case Some(path) if path.toLowerCase.endsWith(".csv") =>
-          spark.sql(s"CREATE DATABASE `$name`")
-          mountCsv(name, path)
-        case Some(path) if path.toLowerCase.endsWith(".xlsx") =>
-          spark.sql(s"CREATE DATABASE `$name`")
-          // a missing workbook is a NEW Sheet database (reference
-          // Connection::Sheet creates the file); it materializes on
-          // the first CREATE TABLE's save-book-on-mutation
-          meta.putXlsxDb(name, path)
-          if (new java.io.File(path).exists()) mountXlsx(name, path)
-        case Some(url) if url.toLowerCase.startsWith("jdbc:") =>
-          spark.sql(s"CREATE DATABASE `$name`")
-          mountJdbc(name, url)
-        case Some(":memory:") | Some("memory") =>
-          // Memory backend analogue (reference src/databases/memory):
-          // session-lifetime tables under a temp location — Spark has
-          // no mutable in-memory table, so "memory" means
-          // tmp-dir-backed + session-scoped, with identical semantics.
-          val tmp = java.nio.file.Files.createTempDirectory(s"graft_mem_$name").toFile
-          spark.sql(s"CREATE DATABASE `$name` LOCATION '${tmp.getAbsolutePath}'")
-        case Some(path) if path.matches("^[A-Za-z][A-Za-z0-9+.-]*://.*") =>
-          // A Hadoop-filesystem URI location (hdfs://, viewfs://, …):
-          // the managed parquet backend through FileSystem.get(uri) —
-          // identical semantics to a local directory, including the
-          // CoW DML / EXPLAIN FILES / COMPACT file layer (TableFs).
-          // Cross-process flock does not exist on remote filesystems,
-          // so single-writer discipline there is JVM-scoped (DbLock).
-          val p = new org.apache.hadoop.fs.Path(path)
-          TableFs.mkdirs(hadoopConf, p)
-          spark.sql(s"CREATE DATABASE `$name` LOCATION '$path'")
-          mountExistingParquet(name, p)
-        case Some(path) =>
-          val dir = new java.io.File(path)
-          dir.mkdirs()
-          spark.sql(s"CREATE DATABASE `$name` LOCATION '${dir.getAbsolutePath}'")
-          mountExistingParquet(name, new org.apache.hadoop.fs.Path(dir.getAbsoluteFile.toURI))
-        case None =>
-          spark.sql(s"CREATE DATABASE `$name`")
-      }
-      Payload.Success
-    case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
+  private def createDatabase(c: Statement.CreateDatabase): Payload = {
+    val name = c.name
+    if (spark.catalog.databaseExists(name)) {
+      if (c.ifNotExists) return Payload.Success
+      throw new EngineException(s"database $name already exists")
+    }
+    c.location match {
+      case Some(path) if path.toLowerCase.endsWith(".csv") =>
+        spark.sql(s"CREATE DATABASE `$name`")
+        mountCsv(name, path)
+      case Some(path) if path.toLowerCase.endsWith(".xlsx") =>
+        spark.sql(s"CREATE DATABASE `$name`")
+        // a missing workbook is a NEW Sheet database (reference
+        // Connection::Sheet creates the file); it materializes on
+        // the first CREATE TABLE's save-book-on-mutation
+        meta.putXlsxDb(name, path)
+        if (new java.io.File(path).exists()) mountXlsx(name, path)
+      case Some(url) if url.toLowerCase.startsWith("jdbc:") =>
+        spark.sql(s"CREATE DATABASE `$name`")
+        mountJdbc(name, url)
+      case Some(":memory:") | Some("memory") =>
+        // Memory backend analogue (reference src/databases/memory):
+        // session-lifetime tables under a temp location — Spark has
+        // no mutable in-memory table, so "memory" means
+        // tmp-dir-backed + session-scoped, with identical semantics.
+        val tmp = java.nio.file.Files.createTempDirectory(s"graft_mem_$name").toFile
+        spark.sql(s"CREATE DATABASE `$name` LOCATION '${tmp.getAbsolutePath}'")
+      case Some(path) if path.matches("^[A-Za-z][A-Za-z0-9+.-]*://.*") =>
+        // A Hadoop-filesystem URI location (hdfs://, viewfs://, …):
+        // the managed parquet backend through FileSystem.get(uri) —
+        // identical semantics to a local directory, including the
+        // CoW DML / EXPLAIN FILES / COMPACT file layer (TableFs).
+        // Cross-process flock does not exist on remote filesystems,
+        // so single-writer discipline there is JVM-scoped (DbLock).
+        val p = new org.apache.hadoop.fs.Path(path)
+        TableFs.mkdirs(hadoopConf, p)
+        spark.sql(s"CREATE DATABASE `$name` LOCATION '$path'")
+        mountExistingParquet(name, p)
+      case Some(path) =>
+        val dir = new java.io.File(path)
+        dir.mkdirs()
+        spark.sql(s"CREATE DATABASE `$name` LOCATION '${dir.getAbsolutePath}'")
+        mountExistingParquet(name, new org.apache.hadoop.fs.Path(dir.getAbsoluteFile.toURI))
+      case None =>
+        spark.sql(s"CREATE DATABASE `$name`")
+    }
+    Payload.Success
   }
 
   /** CSV database: a single table named after the file (reference
@@ -538,9 +504,8 @@ class Engine(val spark: SparkSession) {
     val inf = CsvInference.infer(spark, path)
     val tableName = new java.io.File(path).getName.stripSuffix(".csv")
     val fields = inf.columns.map(c => s"`${c.name}` ${typeName(c.dataType)}").mkString(", ")
-    spark.sql(
-      s"""CREATE TABLE `$db`.`$tableName` ($fields) USING csv
-         |OPTIONS (path '$path', header '${inf.hasHeader}')""".stripMargin)
+    spark.sql(s"""CREATE TABLE `$db`.`$tableName` ($fields) USING csv
+                 |OPTIONS (path '$path', header '${inf.hasHeader}')""".stripMargin)
     meta.put(db, tableName, TableMeta(inf.columns, storage = Storage.Csv(path, inf.hasHeader)))
   }
 
@@ -623,9 +588,8 @@ class Engine(val spark: SparkSession) {
           val dbtable =
             if (schema.nonEmpty) s""""$schema"."$tname"""" else s""""$tname""""
           val local = tname.toLowerCase
-          spark.sql(
-            s"""CREATE TABLE `$db`.`$local` USING JDBC
-               |OPTIONS (url '$url', dbtable '$dbtable')""".stripMargin)
+          spark.sql(s"""CREATE TABLE `$db`.`$local` USING JDBC
+                       |OPTIONS (url '$url', dbtable '$dbtable')""".stripMargin)
           val cols = spark.table(s"`$db`.`$local`").schema.map(f =>
             ColumnMeta(f.name, f.dataType))
           meta.put(db, local, TableMeta(cols, storage = Storage.Jdbc))
@@ -674,63 +638,43 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  private def dropDatabase(sql: String): Payload = {
-    val re = """(?is)DROP\s+(?:DATABASE|SCHEMA)\s+(IF\s+EXISTS\s+)?([`"\w.]+)\s*""".r
-    sql match {
-      case re(_, rawName) =>
-        val name = cleanIdent(rawName)
-        spark.sql(s"DROP DATABASE IF EXISTS `$name` CASCADE")
-        meta.removeXlsxDb(name)
-        meta.removeDb(name)
-        Payload.Success
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
-    }
-  }
-
   // ------------------------------------------------------------------
   // CREATE TABLE (reference create/table.rs:7-45)
   // ------------------------------------------------------------------
 
-  private def createTable(sql: String): Payload = {
-    val re = """(?is)CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([`"\w.]+)\s*(.*)""".r
-    sql match {
-      case re(ifNot, rawName, rest) =>
-        val (db, tbl) = resolve(rawName)
-        val ifNotExists = ifNot != null
-        if (spark.catalog.tableExists(s"`$db`.`$tbl`")) {
-          if (ifNotExists) return Payload.Create
-          throw new EngineException(s"table $db.$tbl already exists")
-        }
-        // A table created inside a Sheet database lives in the
-        // workbook: bind it to the book and save (new empty sheet) —
-        // reference src/databases/sheet/mod.rs:26-51.
-        val storage = meta.xlsxDb(db).fold[Storage](Storage.Managed)(Storage.Xlsx(_, tbl))
-        if (rest.trim.toUpperCase.startsWith("AS ")) {
-          // CTAS: Spark-native; metadata derived from the result.
-          spark.sql(s"CREATE TABLE `$db`.`$tbl` USING parquet ${rest.trim}")
-          val cols = spark.table(s"`$db`.`$tbl`").schema.map(f =>
-            ColumnMeta(f.name, f.dataType))
-          meta.put(db, tbl, TableMeta(cols, storage = storage))
-        } else {
-          val (block, _) = parenBlock(rest, 0)
-          val cols = parseColumnDefs(block)
-          val fields = cols.map(c => s"`${c.name}` ${typeName(c.dataType)}").mkString(", ")
-          spark.sql(s"CREATE TABLE `$db`.`$tbl` ($fields) USING parquet")
-          meta.put(db, tbl, TableMeta(cols, storage = storage))
-        }
-        persistMeta(db, tbl)
-        meta.xlsxDb(db).foreach(syncXlsx)
-        Payload.Create
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
+  private def createTable(c: Statement.CreateTable): Payload = {
+    val (db, tbl) = resolve(c.table)
+    if (spark.catalog.tableExists(s"`$db`.`$tbl`")) {
+      if (c.ifNotExists) return Payload.Create
+      throw new EngineException(s"table $db.$tbl already exists")
     }
+    // A table created inside a Sheet database lives in the
+    // workbook: bind it to the book and save (new empty sheet) —
+    // reference src/databases/sheet/mod.rs:26-51.
+    val storage = meta.xlsxDb(db).fold[Storage](Storage.Managed)(Storage.Xlsx(_, tbl))
+    val cols = c.body match {
+      case Left(q) =>
+        // CTAS: the query's plan written as a parquet table; metadata
+        // derived from the result.
+        queryDf(q).write.format("parquet").saveAsTable(s"`$db`.`$tbl`")
+        spark.table(s"`$db`.`$tbl`").schema.map(f => ColumnMeta(f.name, f.dataType))
+      case Right(cols) =>
+        val fields = cols.map(cm => s"`${cm.name}` ${typeName(cm.dataType)}").mkString(", ")
+        spark.sql(s"CREATE TABLE `$db`.`$tbl` ($fields) USING parquet")
+        cols
+    }
+    meta.put(db, tbl, TableMeta(cols, storage = storage))
+    persistMeta(db, tbl)
+    meta.xlsxDb(db).foreach(syncXlsx)
+    Payload.Create
   }
 
   // ------------------------------------------------------------------
   // INSERT + constraint pipeline (reference alter_row/insert.rs:10-98)
   // ------------------------------------------------------------------
 
-  private def insert(sql: String): Payload = {
-    val (db, tbl, tm, cols, src) = parseInsert(sql)
+  private def insert(i: Statement.Insert): Payload = {
+    val (db, tbl, tm, cols, src) = parseInsert(i)
     val (payload, _) = insertDataFrame(db, tbl, tm, cols, src)
     // Opt-in post-DML hygiene (fresh lock — the insert's was released
     // with its batch). INSERT is fragmentation source #1: every
@@ -739,53 +683,26 @@ class Engine(val spark: SparkSession) {
     payload
   }
 
-  /** INSERT that also returns the target table and the written rows
-    * as a DataFrame (the `expect_data` path of reference
-    * alter_row/insert.rs:66-74). */
-  private def insertReturning(sql: String): (String, String, DataFrame) = {
-    val (db, tbl, tm, cols, src) = parseInsert(sql)
-    (db, tbl, insertDataFrame(db, tbl, tm, cols, src)._2)
-  }
-
-  /** Parse an INSERT statement down to (db, tbl, meta, target columns,
-    * source batch) WITHOUT writing — shared by the write path and
-    * EXPLAIN INSERT's dry run. */
-  private def parseInsert(sql: String): (String, String, TableMeta, Seq[String], DataFrame) = {
-    val re = """(?is)INSERT\s+INTO\s+([`"\w.]+)\s*(.*)""".r
-    sql match {
-      case re(rawName, rest0) =>
-        val (db, tbl) = resolve(rawName)
-        val tm = requireMeta(db, tbl)
-        var rest = rest0.trim
-        // Optional explicit column list: a paren block NOT starting a
-        // VALUES/SELECT source.
-        val explicitCols: Seq[String] =
-          if (rest.startsWith("(")) {
-            val (block, end) = parenBlock(rest, 0)
-            val inner = block.trim.toUpperCase
-            if (!inner.startsWith("SELECT") && !inner.startsWith("VALUES") && !inner.startsWith("WITH")) {
-              rest = rest.substring(end).trim
-              splitTop(block, ',').map(cleanIdent)
-            } else Seq.empty
-          } else Seq.empty
-        val cols = if (explicitCols.nonEmpty) explicitCols else tm.columns.map(_.name)
-        // Validate the column list HERE, not only in the locked write
-        // path: EXPLAIN INSERT's dry run would otherwise silently
-        // drop a misspelled column in positionedBatch and report a
-        // staging plan for a batch the engine will never execute.
-        // (The write path re-checks inside the lock against re-read
-        // meta — this is the fail-fast copy both routes share.)
-        cols.foreach(c => if (tm.column(c).isEmpty)
-          throw new EngineException(s"unknown column $c in $db.$tbl"))
-        val src =
-          if (rest.toUpperCase.startsWith("VALUES")) valuesDf(rest)
-          else sqlDf(rest)
-        if (src.columns.length != cols.length)
-          throw new EngineException(
-            s"wrong number of values: ${src.columns.length} given, ${cols.length} expected")
-        (db, tbl, tm, cols, src)
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
-    }
+  /** An INSERT down to (db, tbl, meta, target columns, source batch)
+    * WITHOUT writing — shared by the write path, INSERT-as-CTE-source
+    * and EXPLAIN INSERT's dry run. */
+  private def parseInsert(i: Statement.Insert): (String, String, TableMeta, Seq[String], DataFrame) = {
+    val (db, tbl) = resolve(i.table)
+    val tm = requireMeta(db, tbl)
+    val cols = if (i.columns.nonEmpty) i.columns else tm.columns.map(_.name)
+    // Validate the column list HERE, not only in the locked write
+    // path: EXPLAIN INSERT's dry run would otherwise silently
+    // drop a misspelled column in positionedBatch and report a
+    // staging plan for a batch the engine will never execute.
+    // (The write path re-checks inside the lock against re-read
+    // meta — this is the fail-fast copy both routes share.)
+    cols.foreach(c => if (tm.column(c).isEmpty)
+      throw new EngineException(s"unknown column $c in $db.$tbl"))
+    val src = queryDf(readOnly(i.source, "INSERT's source"))
+    if (src.columns.length != cols.length)
+      throw new EngineException(
+        s"wrong number of values: ${src.columns.length} given, ${cols.length} expected")
+    (db, tbl, tm, cols, src)
   }
 
   /** The database's local directory, for the writer lock; None for
@@ -1150,11 +1067,7 @@ class Engine(val spark: SparkSession) {
           // duplicates and overlap with stored rows in one group-by per
           // column — stored values are already unique, so any key
           // appearing twice in stored ∪ batch is a violation.
-          val dupes = stored.unionAll(out.select(c))
-            .filter(c.isNotNull)
-            .groupBy(c).count().filter(col("count") > 1)
-          if (dupes.limit(1).count() > 0)
-            throw dupErr(cm)
+          requireUnique(stored.unionAll(out.select(c)), cm)
         }
       }
     }
@@ -1248,199 +1161,180 @@ class Engine(val spark: SparkSession) {
   // UPDATE / DELETE (reference alter_row/{update,delete}.rs)
   // ------------------------------------------------------------------
 
-  private def update(sql: String): Payload = {
-    val re = """(?is)UPDATE\s+([`"\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?""".r
-    sql match {
-      case re(rawName, setPart, wherePart) =>
-        val (db, tbl) = resolve(rawName)
-        val tm = rewritableMeta("UPDATE", db, tbl)
-        // The first writer after a crashed swap converges the table
-        // before reading its file layout (manifest protocol).
-        withTableWriter(db, tbl) {
-        val cond = Option(wherePart).map(dialectExpr).getOrElse(lit(true))
-        val assigns: Map[String, Column] = splitTop(setPart, ',').map { a =>
-          val eq = a.indexOf('=')
-          require(eq > 0, s"bad assignment: $a")
-          val name = cleanIdent(a.substring(0, eq))
-          val cm = tm.column(name).getOrElse(throw new EngineException(s"unknown column $name"))
-          cm.name -> dialectExpr(a.substring(eq + 1)).cast(cm.dataType)
-        }.toMap
-        val t = spark.table(s"`$db`.`$tbl`")
-        val projection = tm.columns.map { cm =>
-          assigns.get(cm.name)
-            .map(a => when(cond, a).otherwise(col(cm.name)).as(cm.name))
-            .getOrElse(col(cm.name))
+  private def update(u: Statement.Update): Payload = {
+    val (db, tbl) = resolve(u.table)
+    val tm = rewritableMeta("UPDATE", db, tbl)
+    // The first writer after a crashed swap converges the table
+    // before reading its file layout (manifest protocol).
+    withTableWriter(db, tbl) {
+    val cond = u.where.map(dialectExpr).getOrElse(lit(true))
+    val assigns: Map[String, Column] = splitTop(u.set, ',').map { a =>
+      val eq = a.indexOf('=')
+      require(eq > 0, s"bad assignment: $a")
+      val name = cleanIdent(a.substring(0, eq))
+      val cm = tm.column(name).getOrElse(throw new EngineException(s"unknown column $name"))
+      cm.name -> dialectExpr(a.substring(eq + 1)).cast(cm.dataType)
+    }.toMap
+    val t = spark.table(s"`$db`.`$tbl`")
+    val projection = tm.columns.map { cm =>
+      assigns.get(cm.name)
+        .map(a => when(cond, a).otherwise(col(cm.name)).as(cm.name))
+        .getOrElse(col(cm.name))
+    }
+    tm.storage match {
+      case csv: Storage.Csv =>
+        // CSV storage is one local file: a whole rewrite from a
+        // checkpoint, the affected-row count an observed metric on
+        // the single scan.
+        val obs = org.apache.spark.sql.Observation()
+        val out = t
+          .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
+          .select(projection: _*)
+          .localCheckpoint(eager = true, Engine.StagingLevel)
+        val n = obs.get("n_matched").asInstanceOf[Long]
+        tm.columns.filter(!_.nullable).filter(c => assigns.contains(c.name)).foreach { cm =>
+          if (out.filter(col(cm.name).isNull).limit(1).count() > 0)
+            throw new EngineException(s"null value in NOT NULL column ${cm.name}")
         }
-        tm.storage match {
-          case csv: Storage.Csv =>
-            // CSV storage is one local file: a whole rewrite from a
-            // checkpoint, the affected-row count an observed metric on
-            // the single scan.
-            val obs = org.apache.spark.sql.Observation()
-            val out = t
-              .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
-              .select(projection: _*)
-              .localCheckpoint(eager = true, Engine.StagingLevel)
-            val n = obs.get("n_matched").asInstanceOf[Long]
-            tm.columns.filter(!_.nullable).filter(c => assigns.contains(c.name)).foreach { cm =>
-              if (out.filter(col(cm.name).isNull).limit(1).count() > 0)
-                throw new EngineException(s"null value in NOT NULL column ${cm.name}")
-            }
-            tm.uniqueColumns.filter(c => assigns.contains(c.name)).foreach { cm =>
-              val dups = out.filter(col(cm.name).isNotNull)
-                .groupBy(col(cm.name)).count().filter(col("count") > 1)
-              if (dups.limit(1).count() > 0)
-                throw new EngineException(s"duplicate entry in unique column ${cm.name}")
-            }
-            rewriteCsvFile(db, tbl, csv, out)
-            Payload.Update(n)
-          case _ =>
-            // Copy-on-write at parquet-FILE granularity: a narrow
-            // discovery scan (predicate columns only, filters pushed to
-            // the parquet reader) finds the files holding matches; only
-            // those files are read full-width, rewritten straight into
-            // staging, and swapped in — every other file survives
-            // untouched. With the CREATE INDEX clustered layout, a
-            // selective UPDATE on the indexed column touches O(matching
-            // range) files, not the table. Without a WHERE every file is
-            // affected, listed from the directory with no job.
-            val affected =
-              if (wherePart == null) dataFiles(db, tbl).map(_._1) else inputFiles(t.filter(cond))
-            if (affected.isEmpty) return Payload.Update(0L)
-            // Matched and scanned rows (every row scanned is rewritten,
-            // UPDATE is 1:1 — the parity gate's expectation) and the
-            // nulls of every assigned NOT NULL column are observed on the
-            // staging write job itself — no separate pass.
-            val notNullAssigned = tm.columns.filter(c => !c.nullable && assigns.contains(c.name))
-            val obs = org.apache.spark.sql.Observation()
-            // schema passed explicitly: avoids a footer-inference job
-            val out = spark.read.schema(t.schema).parquet(affected: _*)
-              .select(projection :+ cond.as("__graft_m"): _*)
-              .observe(obs,
-                coalesce(sum(when(col("__graft_m"), 1L).otherwise(0L)), lit(0L)).as("n_matched"),
-                count(lit(1)).as("n_rows") +: notNullAssigned.map(cm =>
-                  coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${cm.name}")): _*)
-              .drop("__graft_m")
-            stagedSwap(db, tbl, affected, Some(out)) { staged =>
-              val m = obs.get
-              notNullAssigned.foreach { cm =>
-                if (m(s"__nn_${cm.name}").asInstanceOf[Long] > 0)
-                  throw new EngineException(s"null value in NOT NULL column ${cm.name}")
-              }
-              tm.uniqueColumns.filter(c => assigns.contains(c.name)).foreach { cm =>
-                // Duplicates can span rewritten and untouched rows: check
-                // the union (one column scanned from the untouched files).
-                // Without a WHERE nothing is untouched — and dataFiles'
-                // `file:/` URIs never string-match input_file_name()'s
-                // `file:///` ones, so the staged rows are checked alone.
-                val rewritten = staged.select(col(cm.name))
-                val scope = if (wherePart == null) rewritten
-                  else t.filter(!input_file_name().isin(affected: _*))
-                    .select(col(cm.name)).unionAll(rewritten)
-                val dups = scope.filter(col(cm.name).isNotNull)
-                  .groupBy(col(cm.name)).count().filter(col("count") > 1)
-                if (dups.limit(1).count() > 0)
-                  throw new EngineException(s"duplicate entry in unique column ${cm.name}")
-              }
-              m("n_rows").asInstanceOf[Long]
-            }
-            val n = obs.get("n_matched").asInstanceOf[Long]
-            persistMeta(db, tbl) // epoch stamp: other processes refresh
-            maybeAutoCompact(db, tbl) // opt-in, under the held writer lock
-            Payload.Update(n)
+        tm.uniqueColumns.filter(c => assigns.contains(c.name)).foreach(requireUnique(out, _))
+        rewriteCsvFile(db, tbl, csv, out)
+        Payload.Update(n)
+      case _ =>
+        // Copy-on-write at parquet-FILE granularity: a narrow
+        // discovery scan (predicate columns only, filters pushed to
+        // the parquet reader) finds the files holding matches; only
+        // those files are read full-width, rewritten straight into
+        // staging, and swapped in — every other file survives
+        // untouched. With the CREATE INDEX clustered layout, a
+        // selective UPDATE on the indexed column touches O(matching
+        // range) files, not the table. Without a WHERE every file is
+        // affected, listed from the directory with no job.
+        val affected =
+          if (u.where.isEmpty) dataFiles(db, tbl).map(_._1) else inputFiles(t.filter(cond))
+        if (affected.isEmpty) return Payload.Update(0L)
+        // Matched and scanned rows (every row scanned is rewritten,
+        // UPDATE is 1:1 — the parity gate's expectation) and the
+        // nulls of every assigned NOT NULL column are observed on the
+        // staging write job itself — no separate pass.
+        val notNullAssigned = tm.columns.filter(c => !c.nullable && assigns.contains(c.name))
+        val obs = org.apache.spark.sql.Observation()
+        // schema passed explicitly: avoids a footer-inference job
+        val out = spark.read.schema(t.schema).parquet(affected: _*)
+          .select(projection :+ cond.as("__graft_m"): _*)
+          .observe(obs,
+            coalesce(sum(when(col("__graft_m"), 1L).otherwise(0L)), lit(0L)).as("n_matched"),
+            count(lit(1)).as("n_rows") +: notNullAssigned.map(cm =>
+              coalesce(sum(when(col(cm.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"__nn_${cm.name}")): _*)
+          .drop("__graft_m")
+        stagedSwap(db, tbl, affected, Some(out)) { staged =>
+          val m = obs.get
+          notNullAssigned.foreach { cm =>
+            if (m(s"__nn_${cm.name}").asInstanceOf[Long] > 0)
+              throw new EngineException(s"null value in NOT NULL column ${cm.name}")
+          }
+          tm.uniqueColumns.filter(c => assigns.contains(c.name)).foreach { cm =>
+            // Duplicates can span rewritten and untouched rows: check
+            // the union (one column scanned from the untouched files).
+            // Without a WHERE nothing is untouched — and dataFiles'
+            // `file:/` URIs never string-match input_file_name()'s
+            // `file:///` ones, so the staged rows are checked alone.
+            val rewritten = staged.select(col(cm.name))
+            requireUnique(if (u.where.isEmpty) rewritten
+              else t.filter(!input_file_name().isin(affected: _*))
+                .select(col(cm.name)).unionAll(rewritten), cm)
+          }
+          m("n_rows").asInstanceOf[Long]
         }
-        }
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
+        val n = obs.get("n_matched").asInstanceOf[Long]
+        persistMeta(db, tbl) // epoch stamp: other processes refresh
+        maybeAutoCompact(db, tbl) // opt-in, under the held writer lock
+        Payload.Update(n)
+    }
     }
   }
 
-  private def delete(sql: String): Payload = {
-    val re = """(?is)DELETE\s+FROM\s+([`"\w.]+)(?:\s+WHERE\s+(.*))?""".r
-    sql match {
-      case re(rawName, wherePart) =>
-        val (db, tbl) = resolve(rawName)
-        val tm = rewritableMeta("DELETE", db, tbl)
-        // The first writer after a crashed swap converges the table
-        // before reading its file layout (manifest protocol).
-        withTableWriter(db, tbl) {
-        val t = spark.table(s"`$db`.`$tbl`")
-        // A foldable condition (no WHERE, or WHERE 1=1 style) turns
-        // the keep-filter into a constant — the optimizer then
-        // replaces the whole scan with an empty relation, CollectMetrics
-        // included, so the observed count would never arrive. When it
-        // folds to true, every file goes: the count comes from the
-        // footers and the files are swapped out for nothing, with no
-        // job (CSV counts its one file). Real predicates take the
-        // single-scan observe path.
-        val condTreeOpt = Option(wherePart).map(dialectExprTree)
-        val condOpt = condTreeOpt.map(org.apache.spark.sql.graft.Shims.column)
-        val foldedTrue = condTreeOpt match {
-          case None => Some(true)
-          // foldable on a parsed-but-unresolved tree throws for
-          // attribute refs — exactly the non-degenerate case
-          case Some(e) if scala.util.Try(e.foldable).getOrElse(false) =>
-            val r = spark.range(1)
-              .select(org.apache.spark.sql.graft.Shims.column(e).cast("boolean"))
-              .collect()(0)
-            Some(!r.isNullAt(0) && r.getBoolean(0))
-          case _ => None
+  private def delete(d: Statement.Delete): Payload = {
+    val (db, tbl) = resolve(d.table)
+    val tm = rewritableMeta("DELETE", db, tbl)
+    // The first writer after a crashed swap converges the table
+    // before reading its file layout (manifest protocol).
+    withTableWriter(db, tbl) {
+    val t = spark.table(s"`$db`.`$tbl`")
+    // A foldable condition (no WHERE, or WHERE 1=1 style) turns
+    // the keep-filter into a constant — the optimizer then
+    // replaces the whole scan with an empty relation, CollectMetrics
+    // included, so the observed count would never arrive. When it
+    // folds to true, every file goes: the count comes from the
+    // footers and the files are swapped out for nothing, with no
+    // job (CSV counts its one file). Real predicates take the
+    // single-scan observe path.
+    val condTreeOpt = d.where.map(dialectExprTree)
+    val condOpt = condTreeOpt.map(org.apache.spark.sql.graft.Shims.column)
+    val foldedTrue = condTreeOpt match {
+      case None => Some(true)
+      // foldable on a parsed-but-unresolved tree throws for
+      // attribute refs — exactly the non-degenerate case
+      case Some(e) if scala.util.Try(e.foldable).getOrElse(false) =>
+        val r = spark.range(1)
+          .select(org.apache.spark.sql.graft.Shims.column(e).cast("boolean"))
+          .collect()(0)
+        Some(!r.isNullAt(0) && r.getBoolean(0))
+      case _ => None
+    }
+    (condOpt, foldedTrue, tm.storage) match {
+      case (_, Some(false), _) => Payload.Delete(0L)
+      case (_, Some(true), csv: Storage.Csv) =>
+        val n = t.count()
+        rewriteCsvFile(db, tbl, csv, t.limit(0))
+        Payload.Delete(n)
+      case (Some(cond), None, csv: Storage.Csv) =>
+        // CSV storage is one file — whole rewrite, count observed
+        // on the same scan.
+        val obs = org.apache.spark.sql.Observation()
+        val kept = t
+          .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
+          .filter(!cond || cond.isNull).localCheckpoint(eager = true, Engine.StagingLevel)
+        val n = obs.get("n_matched").asInstanceOf[Long]
+        rewriteCsvFile(db, tbl, csv, kept)
+        Payload.Delete(n)
+      case (_, Some(true), _) =>
+        val origs = dataFiles(db, tbl).map(_._1)
+        val n = footerRowCount(hadoopConf, origs.map(pathOfUri))
+        stagedSwap(db, tbl, origs, None)(_ => 0L)
+        persistMeta(db, tbl) // epoch stamp: other processes refresh
+        Payload.Delete(n)
+      case (Some(cond), None, _) =>
+        // File-granular copy-on-write, like UPDATE: narrow
+        // discovery scan → read only the files holding matches →
+        // stage their surviving rows → swap them in. The
+        // deleted-row count is observed below the keep-filter
+        // (which Catalyst cannot push through CollectMetrics) on
+        // the same pruned scan — no separate count() pass.
+        val affected = inputFiles(t.filter(cond))
+        if (affected.isEmpty) Payload.Delete(0L)
+        else {
+          val obs = org.apache.spark.sql.Observation()
+          val kept = spark.read.schema(t.schema).parquet(affected: _*)
+            .observe(obs,
+              coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"),
+              count(lit(1)).as("n_rows"))
+            .filter(!cond || cond.isNull)
+            .select(tm.columns.map(cm => col(cm.name)): _*)
+          // Survivors = scanned − deleted (NULL-cond rows are kept
+          // and not matched) — the staged swap's parity gate. A
+          // DELETE keeping zero rows stages zero files; the
+          // manifest's empty_ok marker keeps its repair
+          // roll-FORWARD (see swapIn).
+          stagedSwap(db, tbl, affected, Some(kept)) { _ =>
+            obs.get("n_rows").asInstanceOf[Long] - obs.get("n_matched").asInstanceOf[Long]
+          }
+          val n = obs.get("n_matched").asInstanceOf[Long]
+          persistMeta(db, tbl) // epoch stamp: other processes refresh
+          maybeAutoCompact(db, tbl) // opt-in, under the held writer lock
+          Payload.Delete(n)
         }
-        (condOpt, foldedTrue, tm.storage) match {
-          case (_, Some(false), _) => Payload.Delete(0L)
-          case (_, Some(true), csv: Storage.Csv) =>
-            val n = t.count()
-            rewriteCsvFile(db, tbl, csv, t.limit(0))
-            Payload.Delete(n)
-          case (Some(cond), None, csv: Storage.Csv) =>
-            // CSV storage is one file — whole rewrite, count observed
-            // on the same scan.
-            val obs = org.apache.spark.sql.Observation()
-            val kept = t
-              .observe(obs, coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"))
-              .filter(!cond || cond.isNull).localCheckpoint(eager = true, Engine.StagingLevel)
-            val n = obs.get("n_matched").asInstanceOf[Long]
-            rewriteCsvFile(db, tbl, csv, kept)
-            Payload.Delete(n)
-          case (_, Some(true), _) =>
-            val origs = dataFiles(db, tbl).map(_._1)
-            val n = footerRowCount(hadoopConf, origs.map(pathOfUri))
-            stagedSwap(db, tbl, origs, None)(_ => 0L)
-            persistMeta(db, tbl) // epoch stamp: other processes refresh
-            Payload.Delete(n)
-          case (Some(cond), None, _) =>
-            // File-granular copy-on-write, like UPDATE: narrow
-            // discovery scan → read only the files holding matches →
-            // stage their surviving rows → swap them in. The
-            // deleted-row count is observed below the keep-filter
-            // (which Catalyst cannot push through CollectMetrics) on
-            // the same pruned scan — no separate count() pass.
-            val affected = inputFiles(t.filter(cond))
-            if (affected.isEmpty) Payload.Delete(0L)
-            else {
-              val obs = org.apache.spark.sql.Observation()
-              val kept = spark.read.schema(t.schema).parquet(affected: _*)
-                .observe(obs,
-                  coalesce(sum(when(cond, 1L).otherwise(0L)), lit(0L)).as("n_matched"),
-                  count(lit(1)).as("n_rows"))
-                .filter(!cond || cond.isNull)
-                .select(tm.columns.map(cm => col(cm.name)): _*)
-              // Survivors = scanned − deleted (NULL-cond rows are kept
-              // and not matched) — the staged swap's parity gate. A
-              // DELETE keeping zero rows stages zero files; the
-              // manifest's empty_ok marker keeps its repair
-              // roll-FORWARD (see swapIn).
-              stagedSwap(db, tbl, affected, Some(kept)) { _ =>
-                obs.get("n_rows").asInstanceOf[Long] - obs.get("n_matched").asInstanceOf[Long]
-              }
-              val n = obs.get("n_matched").asInstanceOf[Long]
-              persistMeta(db, tbl) // epoch stamp: other processes refresh
-              maybeAutoCompact(db, tbl) // opt-in, under the held writer lock
-              Payload.Delete(n)
-            }
-          case (None, None, _) => throw new IllegalStateException("unreachable")
-        }
-        }
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
+      case (None, None, _) => throw new IllegalStateException("unreachable")
+    }
     }
   }
 
@@ -1497,11 +1391,7 @@ class Engine(val spark: SparkSession) {
   // ALTER TABLE (reference alter_table/alter_table.rs:8-77)
   // ------------------------------------------------------------------
 
-  private def alterTable(sql: String): Payload = {
-    val renameTo = """(?is)ALTER\s+TABLE\s+([`"\w.]+)\s+RENAME\s+TO\s+([`"\w.]+)\s*""".r
-    val renameCol = """(?is)ALTER\s+TABLE\s+([`"\w.]+)\s+RENAME\s+COLUMN\s+([`"\w]+)\s+TO\s+([`"\w]+)\s*""".r
-    val addCol = """(?is)ALTER\s+TABLE\s+([`"\w.]+)\s+ADD\s+COLUMN\s+(.*)""".r
-    val dropCol = """(?is)ALTER\s+TABLE\s+([`"\w.]+)\s+DROP\s+COLUMN\s+(?:(IF\s+EXISTS)\s+)?([`"\w]+)\s*""".r
+  private def alterTable(a: Statement.Alter): Payload = {
     // Every branch mutates the table (three of them REWRITE it from
     // `spark.table`'s view) — all run under the writer lock with the
     // torn-swap repair first (round-17 verdict task 1: ALTER on a
@@ -1509,8 +1399,8 @@ class Engine(val spark: SparkSession) {
     // duplicates in). Meta is re-read INSIDE the lock, like INSERT's
     // locked path — a pre-lock snapshot can be stale under
     // concurrency.
-    sql match {
-      case renameTo(rawFrom, rawTo) =>
+    a match {
+      case Statement.RenameTable(rawFrom, rawTo) =>
         val (db, from) = resolve(rawFrom)
         val (_, to) = splitQualified(rawTo)
         withTableWriter(db, from) {
@@ -1527,10 +1417,9 @@ class Engine(val spark: SparkSession) {
           persistMeta(db, to) // the moved dir carries the old file; re-stamp
         }
         Payload.AlterTable
-      case renameCol(rawName, rawFrom, rawTo) =>
+      case Statement.RenameColumn(rawName, from, to) =>
         // Parquet v1 tables can't rename columns in place → rewrite.
         val (db, tbl) = resolve(rawName)
-        val from = cleanIdent(rawFrom); val to = cleanIdent(rawTo)
         withTableWriter(db, tbl) {
           val tm = rewritableMeta("ALTER TABLE", db, tbl)
           if (tm.column(from).isEmpty) throw new EngineException(s"unknown column $from")
@@ -1539,9 +1428,9 @@ class Engine(val spark: SparkSession) {
           rewriteTable(db, tbl, newMeta, spark.table(s"`$db`.`$tbl`").withColumnRenamed(from, to))
         }
         Payload.AlterTable
-      case addCol(rawName, colDef) =>
+      case Statement.AddColumn(rawName, colDef) =>
         val (db, tbl) = resolve(rawName)
-        val cm = parseColumnDef(colDef.trim)
+        val cm = parseColumnDef(colDef)
         withTableWriter(db, tbl) {
           val tm = rewritableMeta("ALTER TABLE", db, tbl)
           // Reference restricts ADD COLUMN types (alter_table/validate.rs:14-19)
@@ -1555,9 +1444,8 @@ class Engine(val spark: SparkSession) {
           rewriteTable(db, tbl, tm.copy(columns = tm.columns :+ cm), df)
         }
         Payload.AlterTable
-      case dropCol(rawName, ifExists, rawCol) =>
+      case Statement.DropColumn(rawName, c, ifExists) =>
         val (db, tbl) = resolve(rawName)
-        val c = cleanIdent(rawCol)
         // The IF EXISTS missing-column no-op is decided INSIDE the
         // locked block, after syncExternalMeta (round-18 advice): the
         // pre-lock in-memory snapshot can be stale — another process
@@ -1566,7 +1454,7 @@ class Engine(val spark: SparkSession) {
         withTableWriter(db, tbl) {
           val tm = rewritableMeta("ALTER TABLE", db, tbl)
           tm.column(c) match {
-            case None if ifExists != null => // silent no-op
+            case None if ifExists => // silent no-op
               // (reference alter_table.rs DROP COLUMN IF EXISTS battery)
             case None => throw new EngineException(s"unknown column $c")
             case Some(cm) =>
@@ -1576,7 +1464,6 @@ class Engine(val spark: SparkSession) {
           }
         }
         Payload.AlterTable
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
     }
   }
 
@@ -1609,38 +1496,33 @@ class Engine(val spark: SparkSession) {
   // TRUNCATE / DROP (reference alter_table/{truncate,drop}.rs)
   // ------------------------------------------------------------------
 
-  private def truncate(sql: String): Payload = {
-    val re = """(?is)TRUNCATE\s+(?:TABLE\s+)?([`"\w.]+)\s*""".r
-    sql match {
-      case re(rawName) =>
-        val (db, tbl) = resolve(rawName)
-        rewritableMeta("TRUNCATE", db, tbl)
-        // Writer lock + repair-first (round-17 verdict task 1):
-        // TRUNCATE after a torn swap would otherwise orphan the stale
-        // manifest over an emptied table, and an unserialized TRUNCATE
-        // racing an INSERT could drop the insert's fresh files.
-        withTableWriter(db, tbl) {
-          val tm = requireMeta(db, tbl)
-          // Reference resets the auto-increment counter on truncate
-          // (alter_table/truncate.rs:8-40).
-          val reset = tm.copy(autoCounter = 1L, counterDirty = false)
-          tm.storage match {
-            case csv: Storage.Csv =>
-              rewriteCsvFile(db, tbl, csv, spark.table(s"`$db`.`$tbl`").limit(0))
-              meta.put(db, tbl, reset)
-            case _ =>
-              // The data files are swapped out for nothing, the counter
-              // reset riding the manifest, never SQL TRUNCATE: that
-              // deletes the whole directory, `.graft_meta` included,
-              // and a crash before the re-persist lost the constraint
-              // record. A crash at any point now converges to (empty
-              // table, reset counter, full constraints).
-              stagedSwap(db, tbl, dataFiles(db, tbl).map(_._1), None, Some(reset))(_ => 0L)
-          }
-        }
-        Payload.TruncateTable
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
+  private def truncate(table: String): Payload = {
+    val (db, tbl) = resolve(table)
+    rewritableMeta("TRUNCATE", db, tbl)
+    // Writer lock + repair-first:
+    // TRUNCATE after a torn swap would otherwise orphan the stale
+    // manifest over an emptied table, and an unserialized TRUNCATE
+    // racing an INSERT could drop the insert's fresh files.
+    withTableWriter(db, tbl) {
+      val tm = requireMeta(db, tbl)
+      // Reference resets the auto-increment counter on truncate
+      // (alter_table/truncate.rs:8-40).
+      val reset = tm.copy(autoCounter = 1L, counterDirty = false)
+      tm.storage match {
+        case csv: Storage.Csv =>
+          rewriteCsvFile(db, tbl, csv, spark.table(s"`$db`.`$tbl`").limit(0))
+          meta.put(db, tbl, reset)
+        case _ =>
+          // The data files are swapped out for nothing, the counter
+          // reset riding the manifest, never SQL TRUNCATE: that
+          // deletes the whole directory, `.graft_meta` included,
+          // and a crash before the re-persist lost the constraint
+          // record. A crash at any point now converges to (empty
+          // table, reset counter, full constraints).
+          stagedSwap(db, tbl, dataFiles(db, tbl).map(_._1), None, Some(reset))(_ => 0L)
+      }
     }
+    Payload.TruncateTable
   }
 
   /** The directory behind a managed parquet table, from the catalog's
@@ -1923,18 +1805,12 @@ class Engine(val spark: SparkSession) {
     *  - no constraint re-checks: compaction moves rows, it does not
     *    change them.
     * EXPLAIN FILES <t> recommends it ([[compactRecommended]]). */
-  private def compactTable(sql: String): Payload = {
-    val re = """(?is)COMPACT\s+TABLE\s+([`"\w.]+)(?:\s+TARGET\s+(\d+))?\s*""".r
-    sql match {
-      case re(rawName, targetMb) =>
-        val (db, tbl) = resolve(rawName)
-        compactableMeta(db, tbl)
-        val target =
-          Option(targetMb).map(_.toLong).getOrElse(Engine.DefaultCompactTargetMb) << 20
-        val labels = Seq("files_in", "files_out", "rows_moved", "bytes_moved")
-        Payload.Select(labels, Seq(withTableWriter(db, tbl)(compactCore(db, tbl, target))))
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
-    }
+  private def compactTable(c: Statement.CompactTable): Payload = {
+    val (db, tbl) = resolve(c.table)
+    compactableMeta(db, tbl)
+    val target = c.targetMb.getOrElse(Engine.DefaultCompactTargetMb) << 20
+    val labels = Seq("files_in", "files_out", "rows_moved", "bytes_moved")
+    Payload.Select(labels, Seq(withTableWriter(db, tbl)(compactCore(db, tbl, target))))
   }
 
   /** The meta of a table COMPACT can pack: one that keeps
@@ -2375,26 +2251,21 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  private def dropTable(sql: String): Payload = {
-    val re = """(?is)DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([`"\w.]+)\s*""".r
-    sql match {
-      case re(ifExists, rawName) =>
-        val (db, tbl) = resolve(rawName)
-        if (!spark.catalog.tableExists(s"`$db`.`$tbl`") && ifExists == null)
-          throw new EngineException(s"table $db.$tbl does not exist")
-        val book = meta.get(db, tbl).flatMap(_.workbook)
-        spark.sql(s"DROP TABLE IF EXISTS `$db`.`$tbl`")
-        meta.remove(db, tbl)
-        // Sheet database: rewrite the workbook without the dropped
-        // sheet; a zero-sheet book is invalid xlsx, so an emptied
-        // database removes the file (recreated on next CREATE TABLE)
-        book.foreach { path =>
-          if (meta.entries.exists(_._2.workbook.contains(path))) syncXlsx(path)
-          else new java.io.File(path).delete()
-        }
-        Payload.DropTable
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
+  private def dropTable(table: String, ifExists: Boolean): Payload = {
+    val (db, tbl) = resolve(table)
+    if (!spark.catalog.tableExists(s"`$db`.`$tbl`") && !ifExists)
+      throw new EngineException(s"table $db.$tbl does not exist")
+    val book = meta.get(db, tbl).flatMap(_.workbook)
+    spark.sql(s"DROP TABLE IF EXISTS `$db`.`$tbl`")
+    meta.remove(db, tbl)
+    // Sheet database: rewrite the workbook without the dropped
+    // sheet; a zero-sheet book is invalid xlsx, so an emptied
+    // database removes the file (recreated on next CREATE TABLE)
+    book.foreach { path =>
+      if (meta.entries.exists(_._2.workbook.contains(path))) syncXlsx(path)
+      else new java.io.File(path).delete()
     }
+    Payload.DropTable
   }
 
   // ------------------------------------------------------------------
@@ -2409,46 +2280,35 @@ class Engine(val spark: SparkSession) {
     * [[clusterByIndex]]). A CSV table's file is rewritten whole
     * through [[rewriteCsvFile]]; a JDBC table keeps its external
     * layout and records the index only. */
-  private def createIndex(sql: String): Payload = {
-    val re = """(?is)CREATE\s+(UNIQUE\s+)?INDEX\s+([`"\w]+)\s+ON\s+([`"\w.]+)\s*\(([^)]*)\)\s*""".r
-    sql match {
-      case re(uniq, rawIdx, rawTbl, colsPart) =>
-        val (db, tbl) = resolve(rawTbl)
-        val idxCols = splitTop(colsPart, ',').map(cleanIdent).filter(_.nonEmpty)
-        if (idxCols.length != 1)
-          throw new EngineException("only single-column indexes are supported")
-        val cname = idxCols.head
-        // Writer lock + repair-first (round-17 verdict task 1): the
-        // clustered rewrite below reads the table and replaces its
-        // files — on a torn COMPACT swap that view holds duplicates,
-        // and unserialized vs an INSERT the rewrite loses the insert's
-        // rows.
-        withTableWriter(db, tbl) {
-        val tm = requireMeta(db, tbl)
-        val cm = tm.column(cname).getOrElse(throw new EngineException(s"unknown column $cname"))
-        val unique = uniq != null
-        val t = spark.table(s"`$db`.`$tbl`")
-        if (unique) {
-          val dups = t.filter(col(cm.name).isNotNull).groupBy(col(cm.name)).count().filter(col("count") > 1)
-          if (dups.limit(1).count() > 0)
-            throw new EngineException(s"duplicate entry in unique column ${cm.name}")
-        }
-        tm.storage match {
-          case csv: Storage.Csv => if (t.limit(1).count() > 0)
-            rewriteCsvFile(db, tbl, csv, t.sort(col(cm.name))
-              .localCheckpoint(eager = true, Engine.StagingLevel))
-          case Storage.Managed | _: Storage.Xlsx =>
-            clusterByIndex(db, tbl, cm, dataFiles(db, tbl).map(_._1))
-          case Storage.Jdbc => // the external layout stays; the index is recorded
-        }
-        meta.update(db, tbl)(m => m.copy(indexes =
-          m.indexes.filterNot(_.name.equalsIgnoreCase(cleanIdent(rawIdx))) :+
-            IndexMeta(cleanIdent(rawIdx), cm.name, unique)))
-        persistMeta(db, tbl)
-        }
-        Payload.Create
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
+  private def createIndex(c: Statement.CreateIndex): Payload = {
+    val (db, tbl) = resolve(c.table)
+    if (c.columns.length != 1)
+      throw new EngineException("only single-column indexes are supported")
+    val cname = c.columns.head
+    // Writer lock + repair-first: the
+    // clustered rewrite below reads the table and replaces its
+    // files — on a torn COMPACT swap that view holds duplicates,
+    // and unserialized vs an INSERT the rewrite loses the insert's
+    // rows.
+    withTableWriter(db, tbl) {
+    val tm = requireMeta(db, tbl)
+    val cm = tm.column(cname).getOrElse(throw new EngineException(s"unknown column $cname"))
+    val unique = c.unique
+    val t = spark.table(s"`$db`.`$tbl`")
+    if (unique) requireUnique(t, cm)
+    tm.storage match {
+      case csv: Storage.Csv => if (t.limit(1).count() > 0)
+        rewriteCsvFile(db, tbl, csv, t.sort(col(cm.name))
+          .localCheckpoint(eager = true, Engine.StagingLevel))
+      case Storage.Managed | _: Storage.Xlsx =>
+        clusterByIndex(db, tbl, cm, dataFiles(db, tbl).map(_._1))
+      case Storage.Jdbc => // the external layout stays; the index is recorded
     }
+    meta.update(db, tbl)(m => m.copy(indexes =
+      m.indexes.filterNot(_.name.equalsIgnoreCase(c.name)) :+ IndexMeta(c.name, cm.name, unique)))
+    persistMeta(db, tbl)
+    }
+    Payload.Create
   }
 
   /** CREATE INDEX's layout half on a managed parquet table: leaves the
@@ -2503,82 +2363,69 @@ class Engine(val spark: SparkSession) {
     }
   }
 
-  private def dropIndex(sql: String): Payload = {
-    val re = """(?is)DROP\s+INDEX\s+([`"\w]+)\s+ON\s+([`"\w.]+)\s*""".r
-    sql match {
-      case re(rawIdx, rawTbl) =>
-        val (db, tbl) = resolve(rawTbl)
-        meta.update(db, tbl)(m => m.copy(indexes =
-          m.indexes.filterNot(_.name.equalsIgnoreCase(cleanIdent(rawIdx)))))
-        persistMeta(db, tbl)
-        Payload.Success
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
-    }
-  }
-
   // ------------------------------------------------------------------
   // EXPLAIN introspection (reference other/explain.rs:6-92)
   // ------------------------------------------------------------------
 
-  /** Keyword-boundary prefix match: true iff `up` starts with the
-    * keyword as a whole WORD (`"SELECT 1"` yes, `"SELECTION"` no).
-    * Bare `startsWith` routed `EXPLAIN insert_log` (a table whose
-    * name merely begins with "insert") into the INSERT parser, which
-    * threw "cannot parse" instead of describing the object — same
-    * hazard for SELECT/WITH/OPERATOR-prefixed identifiers. */
-  private def kw(up: String, keyword: String): Boolean =
-    up.startsWith(keyword) &&
-      (up.length == keyword.length || !Character.isLetterOrDigit(up.charAt(keyword.length)) && up.charAt(keyword.length) != '_')
-
-  private def explain(sql: String): Payload = {
-    val arg = sql.trim.drop("EXPLAIN".length).trim
-    val up = arg.toUpperCase
-    if (up == "ALL") {
-      val dbs = spark.catalog.listDatabases().collect().map(_.name).sorted
-      Payload.Select(Seq("database"), dbs.toSeq.map(Seq(_)))
-    } else if (up == "ALL_TABLE") {
-      val dbs = spark.catalog.listDatabases().collect().map(_.name).sorted
-      val rows = dbs.flatMap(d =>
-        spark.catalog.listTables(d).collect().map(t => Seq[Any](d, t.name)))
-      Payload.Select(Seq("database", "table"), rows.toSeq)
-    } else if (kw(up, "SELECT") || kw(up, "WITH")) {
-      // Query EXPLAIN: Catalyst's formatted plan, one line per row.
-      val plan = spark.sql(arg).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Payload.Select(Seq("plan"), plan.split("\n").toSeq.map(Seq(_)))
-    } else if (kw(up, "OPERATOR")) {
-      // EXPLAIN OPERATOR name(args…): the registered operator's
-      // physical plan, led by a shape summary — the scan/shuffle/join
-      // facts the library's 100 TB claims are made of, surfaced to
-      // the SQL-only user (the plan-shape specs pin these same facts
-      // build-time; this is the runtime view). The final action (the
-      // result write/collect) does NOT run — but operators that
-      // iterate at DataFrame-CONSTRUCTION time (dup_groups /
-      // canonical_select's label-propagation rounds, incremental
-      // variants) DO execute those rounds to produce their returned
-      // frame, so their EXPLAIN costs what constructing the operator
-      // costs and the surfaced plan is the final round's (fronted by
-      // its checkpoint — see the `checkpoint scans` summary line).
-      // That is the honest plan: for an iterative operator no static
-      // whole-pipeline plan exists.
-      Payload.Select(Seq("plan"), planShape(operatorDf("EXECUTE " + arg)))
-    } else if (kw(up, "FILES") && arg.length > "FILES".length) {
-      explainFiles(arg.drop("FILES".length).trim)
-    } else if (kw(up, "COMPACT") && kw(up.drop("COMPACT".length).trim, "TABLE")) {
+  private def explain(e: Statement.ExplainForm): Payload = e match {
+    case Statement.ExplainAll => Payload.Select(Seq("database"), databases.map(Seq(_)))
+    case Statement.ExplainAllTables => Payload.Select(Seq("database", "table"),
+      databases.flatMap(d => spark.catalog.listTables(d).collect().map(t => Seq[Any](d, t.name))))
+    case Statement.ExplainFiles(table) => explainFiles(table)
+    case Statement.Explain(q: Statement.Query) =>
+      // The plan of the DataFrame `execute` runs, led by a shape
+      // summary — the scan/shuffle/join facts the library's 100 TB
+      // claims are made of, surfaced to the SQL-only user (the
+      // plan-shape specs pin these same facts build-time; this is the
+      // runtime view). The final action (the result write/collect)
+      // does NOT run — but operators that iterate at DataFrame-
+      // CONSTRUCTION time (dup_groups / canonical_select's
+      // label-propagation rounds, incremental variants) DO execute
+      // those rounds to produce their returned frame, so their EXPLAIN
+      // costs what constructing the operator costs and the surfaced
+      // plan is the final round's (fronted by its checkpoint — see the
+      // `checkpoint scans` summary line). That is the honest plan: for
+      // an iterative operator no static whole-pipeline plan exists.
+      Payload.Select(Seq("plan"), planShape(queryDf(readOnly(q, "EXPLAIN"))))
+    case Statement.Explain(c: Statement.CompactTable) =>
       // EXPLAIN COMPACT TABLE t [TARGET mb]: dry-run of the
       // compaction decision — which files would move, how many
       // outputs, how the rewrite would be laid out — without the
       // writer lock and without moving a byte (the EXPLAIN INSERT
       // pattern applied to the other mutating maintenance command).
-      explainCompact(arg)
-    } else if (kw(up, "INSERT") && kw(up.drop("INSERT".length).trim, "INTO")) {
+      val (db, tbl) = resolve(c.table)
+      val tm = compactableMeta(db, tbl)
+      val tmbL = c.targetMb.getOrElse(Engine.DefaultCompactTargetMb)
+      // compactCore's plan, including the indexed rewrite's at-target
+      // neighbors (surfaced so the operator sees that price before
+      // paying it)
+      val plan = compactPlan(db, tbl, tm, tmbL << 20)
+      val layout = tm.indexes.headOption match {
+        case Some(idx) =>
+          s"range-repartition on indexed column ${idx.column} + sort within " +
+            "partitions (restores GLOBAL range disjointness — overlapping " +
+            "at-target neighbors join the rewrite)"
+        case None => "round-robin repartition (unindexed table)"
+      }
+      val rows = Seq(
+        Seq[Any]("target_mb", tmbL.toString),
+        Seq[Any]("files_total", plan.files.size.toString),
+        Seq[Any]("files_under_target", plan.small.size.toString),
+        Seq[Any]("files_at_target_included", plan.neighbors.size.toString),
+        Seq[Any]("bytes_to_move", plan.bytesToMove.toString),
+        Seq[Any]("files_out", plan.filesOut.toString),
+        Seq[Any]("would_run", plan.wouldRun.toString +
+          (if (!plan.wouldRun) " — fewer than 2 sub-target files, nothing to pack" else "")),
+        Seq[Any]("layout", if (plan.wouldRun) layout else "(no-op)"))
+      Payload.Select(Seq("metric", "value"), rows)
+    case Statement.Explain(i: Statement.Insert) =>
       // EXPLAIN INSERT …: dry-run of the validated write path's
       // PLANNING — the batch's physical plan plus the staging and
       // constraint decisions insertDataFrame will take — without the
       // writer lock and without writing a row. Surfaces the
       // bulk-INSERT plan facts (g7's battery shape) the same way
       // EXPLAIN OPERATOR surfaces the library's.
-      val (db, tbl, tm, cols, src) = parseInsert(arg)
+      val (db, tbl, tm, cols, src) = parseInsert(i)
       val out = positionedBatch(tm, cols, src)
       val pol = insertPolicy(tm, cols, out)
       val bounded = boundedBatch(out)
@@ -2601,7 +2448,9 @@ class Engine(val spark: SparkSession) {
         s"unique checks: ${pol.uniqueCols.map(_.name).mkString("[", ", ", "]")}") ++
         pol.uniqueCols.map(cm => s"unique check ${cm.name}: ${pol.uniqueCheck(cm, bounded)}")
       Payload.Select(Seq("plan"), planShape(out, extras))
-    } else {
+    case Statement.Explain(other) => throw new EngineException(
+      s"EXPLAIN plans queries, INSERT, COMPACT TABLE and operators, not ${other.productPrefix}")
+    case Statement.Describe(arg) =>
       val name = cleanIdent(arg)
       if (spark.catalog.databaseExists(name)) {
         val ts = spark.catalog.listTables(name).collect().map(_.name).sorted
@@ -2619,8 +2468,9 @@ class Engine(val spark: SparkSession) {
         }
         Payload.Select(Seq("column", "type", "nullable", "unique", "auto_increment"), rows.toSeq)
       }
-    }
   }
+
+  private def databases: Seq[String] = spark.catalog.listDatabases().collect().map(_.name).sorted.toSeq
 
   /** EXPLAIN FILES <t>: the table's file-count/size histogram plus
     * the COMPACT TABLE verdict ([[compactRecommended]]) — the
@@ -2663,43 +2513,8 @@ class Engine(val spark: SparkSession) {
     Payload.Select(Seq("metric", "value"), rows)
   }
 
-  /** EXPLAIN COMPACT TABLE — the dry run: [[compactTable]]'s parse and
-    * [[compactPlan]], no lock, no rewrite. */
-  private def explainCompact(arg: String): Payload = {
-    val re = """(?is)COMPACT\s+TABLE\s+([`"\w.]+)(?:\s+TARGET\s+(\d+))?\s*""".r
-    arg match {
-      case re(rawName, targetMb) =>
-        val (db, tbl) = resolve(rawName)
-        val tm = compactableMeta(db, tbl)
-        val tmbL = Option(targetMb).map(_.toLong).getOrElse(Engine.DefaultCompactTargetMb)
-        // compactCore's plan, including the indexed rewrite's at-target
-        // neighbors (surfaced so the operator sees that price before
-        // paying it)
-        val plan = compactPlan(db, tbl, tm, tmbL << 20)
-        val layout = tm.indexes.headOption match {
-          case Some(idx) =>
-            s"range-repartition on indexed column ${idx.column} + sort within " +
-              "partitions (restores GLOBAL range disjointness — overlapping " +
-              "at-target neighbors join the rewrite)"
-          case None => "round-robin repartition (unindexed table)"
-        }
-        val rows = Seq(
-          Seq[Any]("target_mb", tmbL.toString),
-          Seq[Any]("files_total", plan.files.size.toString),
-          Seq[Any]("files_under_target", plan.small.size.toString),
-          Seq[Any]("files_at_target_included", plan.neighbors.size.toString),
-          Seq[Any]("bytes_to_move", plan.bytesToMove.toString),
-          Seq[Any]("files_out", plan.filesOut.toString),
-          Seq[Any]("would_run", plan.wouldRun.toString +
-            (if (!plan.wouldRun) " — fewer than 2 sub-target files, nothing to pack" else "")),
-          Seq[Any]("layout", if (plan.wouldRun) layout else "(no-op)"))
-        Payload.Select(Seq("metric", "value"), rows)
-      case _ => throw new EngineException(s"cannot parse: EXPLAIN ${arg.take(60)}")
-    }
-  }
-
-  /** Shape summary + formatted physical plan, shared by EXPLAIN
-    * OPERATOR and EXPLAIN INSERT: the scan/shuffle/join counts and
+  /** Shape summary + formatted physical plan, shared by EXPLAIN of a
+    * query and EXPLAIN INSERT: the scan/shuffle/join counts and
     * pushed filters, then the full plan. `extras` prepends
     * statement-specific facts (EXPLAIN INSERT's staging decision). */
   private def planShape(df: DataFrame, extras: Seq[String] = Seq.empty): Seq[Seq[Any]] = {
@@ -2732,92 +2547,22 @@ class Engine(val spark: SparkSession) {
   }
 
   // ------------------------------------------------------------------
-  // SET variables (reference set_variable.rs:6-20, recipe/new.rs:24-47)
-  // ------------------------------------------------------------------
-
-  private val setVarRe = """(?is)SET\s+@([A-Za-z_]\w*)\s*=\s*(.+)""".r
-
-  private def setVariable(sql: String): Payload = sql match {
-    case setVarRe(name, value) =>
-      vars(name) = value.trim
-      Payload.Success
-    case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
-  }
-
-  /** Substitute `@name` tokens outside string literals with the stored
-    * literal text — the reference substitutes variables into the
-    * expression tree pre-planning (`simplify_by_tempdb`). */
-  private def substituteVars(sql: String): String = {
-    if (vars.isEmpty || !sql.contains("@")) return sql
-    val out = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (quote != 0) {
-        out += c
-        if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"' || c == '`') {
-        quote = c; out += c; i += 1
-      } else if (c == '@' && i + 1 < sql.length && (sql(i + 1).isLetter || sql(i + 1) == '_')) {
-        var j = i + 1
-        while (j < sql.length && (sql(j).isLetterOrDigit || sql(j) == '_')) j += 1
-        val name = sql.substring(i + 1, j)
-        out ++= vars.getOrElse(name,
-          throw new EngineException(s"undefined session variable @$name"))
-        i = j
-      } else { out += c; i += 1 }
-    }
-    out.toString
-  }
-
-  // ------------------------------------------------------------------
-  // EXECUTE FILE (reference procedure.rs:7-28)
-  // ------------------------------------------------------------------
-
-  private def executeFile(sql: String): Payload = {
-    val re = """(?is)EXECUTE\s+FILE\s+'([^']+)'\s*""".r
-    sql match {
-      case re(path) =>
-        val script = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
-        executeMany(script)
-        Payload.Success
-      case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
-    }
-  }
-
-  // ------------------------------------------------------------------
   // EXECUTE OPERATOR — SQL facade over the pipeline operator library
   // (see graft.engine.Operators; mirrors the reference's one-text-
   // entry-point ethos, glue/mod.rs:161-187)
   // ------------------------------------------------------------------
 
-  private val operatorRe =
-    """(?is)EXECUTE\s+OPERATOR\s+([A-Za-z_]\w*)\s*(\(.*\))?\s*""".r
-
-  private def operatorDf(sql: String): DataFrame = sql match {
-    case operatorRe(rawName, argsBlock) =>
-      val name = rawName.toLowerCase
-      val op = Operators.all.getOrElse(name, throw new EngineException(
-        s"unknown operator: $name (available: ${Operators.all.keys.toSeq.sorted.mkString(", ")})"))
-      val raw: Map[String, String] = Option(argsBlock).map { b =>
-        val (block, _) = parenBlock(b.trim, 0)
-        splitTop(block, ',').map(_.trim).filter(_.nonEmpty).map { kv =>
-          val eq = kv.indexOf('=')
-          if (eq <= 0) throw new EngineException(
-            s"operator argument must be name = value, got: $kv")
-          kv.substring(0, eq).trim.toLowerCase -> unquoteValue(kv.substring(eq + 1).trim)
-        }.toMap
-      }.getOrElse(Map.empty)
-      raw.keys.find(k => !op.params.exists(_.name == k)).foreach(k =>
-        throw new EngineException(s"unknown argument $k for operator $name " +
-          s"(expects: ${op.params.map(_.name).mkString(", ")})"))
-      val args = op.params.map(pm => pm.name -> raw.getOrElse(pm.name,
-        pm.default.getOrElse(throw new EngineException(
-          s"missing required argument ${pm.name} for operator $name")))).toMap
-      op.run(spark, resolveTableDf, args)
-    case _ => throw new EngineException(s"cannot parse: ${sql.take(60)}")
+  private def operatorDf(o: Statement.Operator): DataFrame = {
+    val name = o.name
+    val op = Operators.all.getOrElse(name, throw new EngineException(
+      s"unknown operator: $name (available: ${Operators.all.keys.toSeq.sorted.mkString(", ")})"))
+    o.args.keys.find(k => !op.params.exists(_.name == k)).foreach(k =>
+      throw new EngineException(s"unknown argument $k for operator $name " +
+        s"(expects: ${op.params.map(_.name).mkString(", ")})"))
+    val args = op.params.map(pm => pm.name -> o.args.getOrElse(pm.name,
+      pm.default.getOrElse(throw new EngineException(
+        s"missing required argument ${pm.name} for operator $name")))).toMap
+    op.run(spark, resolveTableDf, args)
   }
 
   /** SHOW OPERATORS — the facade's discovery surface (the EXPLAIN-
@@ -2844,18 +2589,9 @@ class Engine(val spark: SparkSession) {
         spark.table(s"`$db`.`$tbl`")
     }
 
-  /** `'quoted'` → unquoted with `''` unescaped; bare values verbatim. */
-  private def unquoteValue(v: String): String =
-    if (v.length >= 2 && v.head == '\'' && v.last == '\'')
-      v.substring(1, v.length - 1).replace("''", "'")
-    else v
-
   // ------------------------------------------------------------------
   // Helpers
   // ------------------------------------------------------------------
-
-  private def stripTrailingSemi(sql: String): String =
-    sql.trim.stripSuffix(";").trim
 
   private def resolve(rawName: String): (String, String) = {
     val (dbOpt, tbl) = splitQualified(rawName)
@@ -2887,6 +2623,15 @@ class Engine(val spark: SparkSession) {
           "run it in the external database")
       case Storage.Managed | _: Storage.Csv | _: Storage.Xlsx => tm
     }
+  }
+
+  /** Fails when a non-NULL `cm` value appears twice in `rows` (SQL
+    * UNIQUE admits many NULLs): one group-by, stopped at the first
+    * duplicate. */
+  private def requireUnique(rows: DataFrame, cm: ColumnMeta): Unit = {
+    val c = col(cm.name)
+    if (rows.filter(c.isNotNull).groupBy(c).count().filter(col("count") > 1).limit(1).count() > 0)
+      throw new EngineException(s"duplicate entry in unique column ${cm.name}")
   }
 
   private def csvQuote(s: String): String =
@@ -3000,8 +2745,7 @@ object Engine {
     * once the checkpoint is appended. One replica survives a single executor loss; in
     * local mode replication is a no-op. Same rationale as
     * DistributedPrefix.shared / Dedup's posting checkpoint. */
-  val StagingLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.DISK_ONLY_2
+  val StagingLevel: StorageLevel = StorageLevel.DISK_ONLY_2
 
   /** The row bound under which an INSERT batch is small: validated on
     * the driver and written as one file (see `boundedBatch`). */

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
   * and src/data/column.rs:12-79).
   *
   * Full query text is parsed by Spark's own parser; these helpers only
-  * carve statements into the pieces the [[Engine]] dispatcher needs.
+  * carve statements into the pieces [[Statement.parse]] and the
+  * [[Engine]]'s handlers need.
   */
 object SqlText {
 

@@ -176,6 +176,24 @@ class DmlSwapSpec extends AnyFunSuite {
     }.toSet
     assert(droppers == Set("dropTable"), s"DROP TABLE issued from $droppers")
   }
+
+  test("Engine.scala routes statements only through Statement.parse") {
+    def source(name: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"src/main/scala/graft/engine/$name")), "UTF-8")
+    val src = source("Engine.scala")
+    assert(!src.contains(".toUpperCase.startsWith("), "Engine.scala routes on an upper-cased prefix")
+    // the only statement regex left is preprocess's SET left-hand side
+    val regexLines = src.linesIterator.filter(_.contains("\"\"\"(?is)")).toSeq
+    assert(regexLines.size == 1 && regexLines.head.contains("setVarLhsRe"), regexLines.mkString("\n"))
+    val literal = scala.util.matching.Regex.quote("\"\"\"(?is)").r
+    assert(literal.findAllMatchIn(src + source("Statement.scala")).size <= 17,
+      "statement regexes grew back")
+    // user text reaches spark.sql only in the pass-through case; every
+    // other call runs an interpolated template
+    val args = """spark\.sql\(([^)\n]{0,40})""".r.findAllMatchIn(src).map(_.group(1)).toSeq
+    assert(args.filterNot(_.startsWith("s\"")) == Seq("text"), args.mkString("\n"))
+    assert(src.contains("case Statement.PassThrough(text, payload) => spark.sql(text)"))
+  }
 }
 
 object DmlSwapSpec {
