@@ -90,9 +90,12 @@ object Statement {
   private val insertCteRe = """(?is)WITH\s+([`"\w]+)\s+AS\s*(\(.*)""".r
   private val updateRe = """(?is)UPDATE\s+([`"\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?""".r
   private val deleteRe = """(?is)DELETE\s+FROM\s+([`"\w.]+)(?:\s+WHERE\s+(.*))?""".r
-  private val alterRe = ("""(?is)ALTER\s+TABLE\s+([`"\w.]+)\s+(?:RENAME\s+TO\s+([`"\w.]+)""" +
-    """|RENAME\s+COLUMN\s+([`"\w]+)\s+TO\s+([`"\w]+)|ADD\s+COLUMN\s+(.*)""" +
-    """|DROP\s+COLUMN\s+(IF\s+EXISTS\s+)?([`"\w]+))\s*""").r
+  private val renameTableRe = """(?is)ALTER\s+TABLE\s+([`"\w.]+)\s+RENAME\s+TO\s+([`"\w.]+)\s*""".r
+  private val renameColumnRe =
+    """(?is)ALTER\s+TABLE\s+([`"\w.]+)\s+RENAME\s+COLUMN\s+([`"\w]+)\s+TO\s+([`"\w]+)\s*""".r
+  private val addColumnRe = """(?is)ALTER\s+TABLE\s+([`"\w.]+)\s+ADD\s+COLUMN\s+(.*)""".r
+  private val dropColumnRe =
+    """(?is)ALTER\s+TABLE\s+([`"\w.]+)\s+DROP\s+COLUMN\s+(?:(IF\s+EXISTS)\s+)?([`"\w]+)\s*""".r
   private val truncateRe = """(?is)TRUNCATE\s+(?:TABLE\s+)?([`"\w.]+)\s*""".r
   private val dropTableRe = """(?is)DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([`"\w.]+)\s*""".r
   private val compactRe = """(?is)COMPACT\s+TABLE\s+([`"\w.]+)(?:\s+TARGET\s+(\d+))?\s*""".r
@@ -116,9 +119,12 @@ object Statement {
   /** `re`'s captures over all of `s` (null where a group did not take
     * part), else the one parse error. */
   private def captures(re: Regex, s: String): List[String] =
-    re.unapplySeq(s).getOrElse(throw new EngineException(s"cannot parse: ${s.take(60)}"))
+    re.unapplySeq(s).getOrElse(throw cannotParse(s))
+
+  private def cannotParse(s: String) = new EngineException(s"cannot parse: ${s.take(60)}")
 
   private val queryWords = Set("SELECT", "WITH", "VALUES", "TABLE")
+  private val nameRe = """[`"\w.]+""".r
 
   /** None when the leading keywords name no statement. */
   private def statement(s: String): Option[Statement] = {
@@ -156,12 +162,13 @@ object Statement {
       case ("DELETE", _) =>
         val List(table, where) = re(deleteRe)
         Delete(table, Option(where))
-      case ("ALTER", "TABLE") =>
-        val List(t, newName, from, to, colDef, ifExists, dropped) = re(alterRe)
-        if (newName != null) RenameTable(t, newName)
-        else if (from != null) RenameColumn(t, cleanIdent(from), cleanIdent(to))
-        else if (colDef != null) AddColumn(t, colDef.trim)
-        else DropColumn(t, cleanIdent(dropped), ifExists != null)
+      case ("ALTER", "TABLE") => s match {
+        case renameTableRe(t, to) => RenameTable(t, to)
+        case renameColumnRe(t, from, to) => RenameColumn(t, cleanIdent(from), cleanIdent(to))
+        case addColumnRe(t, colDef) => AddColumn(t, colDef.trim)
+        case dropColumnRe(t, ifExists, c) => DropColumn(t, cleanIdent(c), ifExists != null)
+        case _ => throw cannotParse(s)
+      }
       case ("TRUNCATE", _) => Truncate(re(truncateRe).head)
       case ("COMPACT", _) =>
         val List(table, targetMb) = re(compactRe)
@@ -222,24 +229,27 @@ object Statement {
       splitTop(parenBlock(b.trim, 0)._1, ',').map(_.trim).filter(_.nonEmpty).map { kv =>
         val eq = kv.indexOf('=')
         if (eq <= 0) throw new EngineException(s"operator argument must be name = value, got: $kv")
-        // 'quoted' → unquoted with '' unescaped; bare values verbatim
-        val v = kv.substring(eq + 1).trim
-        kv.substring(0, eq).trim.toLowerCase ->
-          (if (v.length >= 2 && v.head == '\'' && v.last == '\'') v.substring(1, v.length - 1).replace("''", "'") else v)
+        kv.substring(0, eq).trim.toLowerCase -> unquoteValue(kv.substring(eq + 1).trim)
       }.toMap
     }.getOrElse(Map.empty)
     Operator(name.toLowerCase, args)
   }
 
-  /** EXPLAIN's argument. A lone word, or text whose leading keywords
-    * name no statement (`db.tbl`, a quoted name), is an object to
-    * describe, so `EXPLAIN insert_log` and `EXPLAIN files` describe
-    * tables of those names. */
+  /** `'quoted'` → unquoted with `''` unescaped; bare values verbatim. */
+  private def unquoteValue(v: String): String =
+    if (v.length >= 2 && v.head == '\'' && v.last == '\'')
+      v.substring(1, v.length - 1).replace("''", "'")
+    else v
+
+  /** EXPLAIN's argument. A name, possibly qualified or quoted, is an
+    * object to describe, whatever its first word: `EXPLAIN insert_log`,
+    * `EXPLAIN files` and `EXPLAIN update.t` describe those objects. So
+    * is text whose leading keywords name no statement. */
   private def explain(arg: String): ExplainForm = {
     val w = words(arg)
     if (arg.equalsIgnoreCase("ALL")) ExplainAll
     else if (arg.equalsIgnoreCase("ALL_TABLE")) ExplainAllTables
-    else if (w(0).length == arg.length) Describe(arg)
+    else if (nameRe.matches(arg)) Describe(arg)
     else if (w(0) == "FILES") ExplainFiles(arg.drop("FILES".length).trim)
     else if (w(0) == "OPERATOR") Explain(operator(arg))
     else statement(arg).fold[ExplainForm](Describe(arg))(Explain)

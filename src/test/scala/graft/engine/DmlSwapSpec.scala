@@ -186,13 +186,43 @@ class DmlSwapSpec extends AnyFunSuite {
     val regexLines = src.linesIterator.filter(_.contains("\"\"\"(?is)")).toSeq
     assert(regexLines.size == 1 && regexLines.head.contains("setVarLhsRe"), regexLines.mkString("\n"))
     val literal = scala.util.matching.Regex.quote("\"\"\"(?is)").r
-    assert(literal.findAllMatchIn(src + source("Statement.scala")).size <= 17,
-      "statement regexes grew back")
-    // user text reaches spark.sql only in the pass-through case; every
-    // other call runs an interpolated template
-    val args = """spark\.sql\(([^)\n]{0,40})""".r.findAllMatchIn(src).map(_.group(1)).toSeq
-    assert(args.filterNot(_.startsWith("s\"")) == Seq("text"), args.mkString("\n"))
-    assert(src.contains("case Statement.PassThrough(text, payload) => spark.sql(text)"))
+    assert(literal.findAllMatchIn(src + source("Statement.scala")).size < 21,
+      "statement regexes grew back to the 21 Engine.scala held when it routed text itself")
+    // User text reaches spark.sql only through the pass-through case.
+    // Every other call runs a template that begins with a fixed DDL
+    // keyword and interpolates only quoted names and paths (`$x`,
+    // '$x') or the typed column list ($fields); a bare interpolation
+    // such as `USING parquet ${rest}` would splice user text into SQL.
+    val ddl = Seq("CREATE DATABASE ", "CREATE TABLE ", "DROP DATABASE ", "DROP TABLE ", "ALTER TABLE ")
+    val templateRe = "s(\"\"\"[\\s\\S]*?\"\"\"|\"[^\"\\n]*\")".r
+    val interpolationRe = """\$(\{[^}]*\}|\w+)""".r
+    val calls = """spark\.sql\(""".r.findAllMatchIn(src).toSeq
+    assert(calls.nonEmpty)
+    for (m <- calls) {
+      var depth = 1
+      var end = m.end
+      while (depth > 0) {
+        if (src(end) == '(') depth += 1 else if (src(end) == ')') depth -= 1
+        end += 1
+      }
+      val arg = src.substring(m.end, end - 1).trim
+      val at = s"spark.sql(${arg.take(80)}"
+      val templates = templateRe.findAllMatchIn(arg).map(_.group(1).replace("\"\"\"", "\"").drop(1).dropRight(1)).toSeq
+      if (templates.isEmpty) {
+        val lastCase = """case\s+[\w.]+""".r.findAllMatchIn(src.substring(0, m.start)).toSeq.last.matched
+        assert(lastCase.endsWith("Statement.PassThrough"), s"$at runs text outside the pass-through case")
+      } else {
+        val glue = templateRe.replaceAllIn(arg, "").replace(".stripMargin", "")
+        assert(glue.forall(c => c == '+' || c.isWhitespace), s"$at: not a template")
+        val body = templates.mkString
+        assert(ddl.exists(body.startsWith), s"$at: not a fixed DDL statement")
+        for (i <- interpolationRe.findAllMatchIn(body)) {
+          val before = body(i.start - 1)
+          assert(before == '`' || before == '\'' || before == '(' && i.matched == "$fields",
+            s"$at interpolates ${i.matched} unquoted")
+        }
+      }
+    }
   }
 }
 

@@ -115,6 +115,25 @@ class StatementRouterSpec extends AnyFunSuite {
     assert(sorted(rows("SELECT id, a FROM rtr.w")) == Seq("1|10", "2|20"))
   }
 
+  test("EXPLAIN describes a qualified name whose first word is a statement keyword") {
+    g.execute("DROP DATABASE IF EXISTS `update`")
+    g.execute("CREATE DATABASE `update`")
+    g.execute("CREATE TABLE `update`.t (k INTEGER)")
+    assert(rows("EXPLAIN update.t").map(_.head) == Seq("k"))
+    assert(rows("EXPLAIN update").map(_.head).contains("t"))
+    g.execute("DROP DATABASE `update`")
+  }
+
+  test("prepare parses the query: a syntax error surfaces at prepare, not at its first run") {
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException](g.prepare("SELECT k FROM rtr.t WHERE k ="))
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException](g.prepare("VALUES (1 +), (2)"))
+    // analysis runs per execution: a prepared query sees rows written after it
+    g.execute("CREATE TABLE rtr.later (k INTEGER)")
+    val p = g.prepare("SELECT k FROM rtr.later")
+    g.execute("INSERT INTO rtr.later VALUES (7)")
+    assert(g.executePrepared(p) == Payload.Select(Seq("k"), Seq(Seq(7))))
+  }
+
   test("EXPLAIN refuses a statement it cannot plan and runs nothing") {
     val e = intercept[EngineException](g.execute("EXPLAIN UPDATE rtr.t SET k = 0"))
     assert(e.getMessage.contains("EXPLAIN plans"))
